@@ -142,7 +142,7 @@ def build_replay_input(n_txns: int, workdir: str, seed: int = 42):
 
 
 def time_replay(spark, frames_dir: str, n_changes: int, workdir: str,
-                chunk_size=None, parts: int | None = None) -> dict:
+                parts: int | None = None) -> dict:
     lake_path = os.path.join(workdir, f"lake-{time.time_ns()}")
     LakeTable.create(spark, lake_path, columns=genlog.table_spec().col_names,
                      key_cols=list(genlog.KEY_COLS), n_buckets=32)
@@ -163,7 +163,6 @@ def time_replay(spark, frames_dir: str, n_changes: int, workdir: str,
     # — and the separate schema-discovery job is skipped (2 actions/batch)
     stats = pipeline.replay_batch(spark, frames, lake,
                                   genlog.table_registry(), batch_id=0,
-                                  chunk_size=chunk_size,
                                   record_lineage=False,
                                   stream_meta=pipeline.INLINE_DISCOVERY)
     dt = time.perf_counter() - t0

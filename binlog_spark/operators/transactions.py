@@ -25,31 +25,16 @@ from pyspark.sql import functions as F
 from .. import schema as S
 
 
-def assemble_transactions(decoded: DataFrame,
-                          segment=None) -> DataFrame:
+def assemble_transactions(decoded: DataFrame) -> DataFrame:
     """decoded (DECODE_OUTPUT_SCHEMA) → committed change rows (CHANGE_SCHEMA).
 
     Also computes ``seq_in_txn`` (event order within the transaction) and
     ``txn_id`` (= gtid_seq; the transaction grouping key).
-
-    ``segment``: optional Column mapping each row to a *contiguous run of
-    binlog files* (e.g. files 0-11 → seg 0). When given, the windows
-    partition by segment instead of by file — fewer, coarser partitions
-    whose gtid ranges are contiguous and disjoint, which is exactly the
-    physical contract ``lww.prefold_partials`` consumes (the output then
-    keeps a ``_seg`` column and its partition-level sort order). GTID
-    carry-forward across file boundaries within a segment is correct:
-    file order is gtid order in a binlog stream.
     """
     order = [F.col("file").asc(), F.col("pos").asc(),
              F.col("seq_in_event").asc_nulls_first()]
-    if segment is not None:
-        decoded = decoded.withColumn("_seg", segment)
-        part = ["_seg"]
-    else:
-        part = ["file"]
     w_run = (
-        Window.partitionBy(*part).orderBy(*order)
+        Window.partitionBy("file").orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     df = decoded.withColumn(
@@ -59,7 +44,7 @@ def assemble_transactions(decoded: DataFrame,
 
     # one Window node for all three outcome flags (same spec → Catalyst
     # evaluates them in a single pass over the sorted partition)
-    w_txn = Window.partitionBy(*part, "gtid_seq")
+    w_txn = Window.partitionBy("file", "gtid_seq")
     df = df.select(
         "*",
         F.max((F.col("kind") == "rollback").cast("int")).over(w_txn).alias("_rb"),
@@ -72,15 +57,12 @@ def assemble_transactions(decoded: DataFrame,
         & (F.col("_rb") == 0)
         & ((F.col("_cm") == 1) | (F.col("_bg") == 0))  # autocommit fallback
     )
-    w_seq = Window.partitionBy(*part, "gtid_seq").orderBy(*order)
+    w_seq = Window.partitionBy("file", "gtid_seq").orderBy(*order)
     committed = (
         committed.withColumn("seq_in_txn", F.row_number().over(w_seq) - 1)
         .withColumn("txn_id", F.col("gtid_seq"))
     )
-    out_cols = [f.name for f in S.CHANGE_SCHEMA.fields]
-    if segment is not None:
-        out_cols = out_cols + ["_seg"]
-    return committed.select(*out_cols)
+    return committed.select(*[f.name for f in S.CHANGE_SCHEMA.fields])
 
 
 def ddl_stream(decoded: DataFrame) -> DataFrame:

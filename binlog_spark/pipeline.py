@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from . import schema as S
 from .operators.decode import decode_frames, discover_stream_meta
 from .operators.lineage import write_lineage
-from .operators.lww import fold_changes, fold_changes_prefold
+from .operators.lww import fold_changes
 from .operators.merge import LakeTable
 from .operators.transactions import assemble_transactions
 
@@ -50,69 +50,6 @@ def decode_to_changes(spark: SparkSession, frames: DataFrame,
     return assemble_transactions(decoded)
 
 
-# above this many discovered files the (file → segment) mapping rides a
-# broadcast join instead of a map literal: a many-thousand-entry literal
-# inflates plan compile/serialize time on every batch
-SEGMENT_LITERAL_MAX = 1000
-
-
-def _segment_runs(spark: SparkSession, meta: dict):
-    """Discovered file list → ``[(file, segment_id)]``: contiguous runs of
-    binlog files, one run per shuffle partition. Returns None when the
-    meta carries no file index (inline discovery)."""
-    files = sorted({f for (f, _tid) in meta["table_maps"]})
-    if not files:
-        return None
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "16"))
-    per_seg = max(1, -(-len(files) // max(p, 1)))
-    return [(f, f"s:{i // per_seg}") for i, f in enumerate(files)]
-
-
-def _segment_fallback():
-    # a file absent from the TABLE_MAP index (e.g. pure markers) gets its
-    # OWN segment: collapsing unmapped files into one NULL partition
-    # would let last(gtid) carry-forward cross a file gap and stamp rows
-    # with a gtid from a non-adjacent file (r3 ADVICE)
-    return F.concat(F.lit("f:"), F.col("file"))
-
-
-def segment_expr(spark: SparkSession, meta: dict):
-    """File → segment-id Column (map-literal form, small file sets).
-
-    Segments give the transaction windows and the map-side pre-fold
-    their physical contract (a partition = whole gtid-contiguous slices
-    of the stream) while keeping partition count at the cluster's
-    parallelism even when the batch spans thousands of small files. The
-    file list comes from the already-collected stream meta — no extra
-    job. Returns None above ``SEGMENT_LITERAL_MAX`` files — callers
-    attach the broadcast segment table instead (``attach_segments``)."""
-    runs = _segment_runs(spark, meta)
-    if runs is None:
-        return F.col("file")
-    if len(runs) > SEGMENT_LITERAL_MAX:
-        return None
-    pairs = []
-    for f, seg in runs:
-        pairs += [F.lit(f), F.lit(seg)]
-    return F.coalesce(F.element_at(F.create_map(*pairs), F.col("file")),
-                      _segment_fallback())
-
-
-def attach_segments(spark: SparkSession, decoded: DataFrame,
-                    meta: dict) -> DataFrame:
-    """``decoded`` + ``_seg`` via a BROADCAST join against the tiny
-    (file → segment) table — constant plan size at any file count (the
-    scale path for batches spanning thousands of binlog files)."""
-    runs = _segment_runs(spark, meta)
-    if runs is None:
-        return decoded.withColumn("_seg", F.col("file"))
-    segs = spark.createDataFrame(runs, "file string, _seg_map string")
-    return (decoded.join(F.broadcast(segs), "file", "left")
-            .withColumn("_seg", F.coalesce(F.col("_seg_map"),
-                                           _segment_fallback()))
-            .drop("_seg_map"))
-
-
 def apply_ddls(lake: LakeTable, ddls: list):
     """Iceberg-style in-flight schema evolution from the DDL side channel.
 
@@ -134,28 +71,43 @@ def apply_ddls(lake: LakeTable, ddls: list):
 
 
 def replay_batch(spark: SparkSession, frames: DataFrame, lake: LakeTable,
-                 registry: dict, batch_id=None, chunk_size: int | None = None,
-                 record_lineage: bool = True,
-                 stream_meta: dict | None = None,
-                 target_table: tuple | None = None,
-                 fold_engine: str = "shuffle") -> dict:
+                 registry: dict, batch_id=None, record_lineage: bool = True,
+                 stream_meta: dict | None = None) -> dict:
     """Decode+apply one (micro)batch of frames into the lake table.
+
+    ``replay_batch_multi`` with the one lake, keyed by the lake manifest's
+    recorded ``(db, tbl)`` identity: other tables' change rows in the same
+    stream are excluded before the fold (the MERGE idempotency key is
+    (gtid, table, row-key) per the north rule — one LakeTable applies one
+    table). A lake with no recorded identity applies every change row
+    (single-table streams). Returns the lake's merge stats."""
+    table = lake.meta.get("table")
+    key = tuple(table) if table else None
+    return replay_batch_multi(spark, frames, {key: lake}, registry,
+                              batch_id=batch_id,
+                              record_lineage=record_lineage,
+                              stream_meta=stream_meta)[key]
+
+
+def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
+                       registry: dict, batch_id=None,
+                       record_lineage: bool = True,
+                       stream_meta: dict | None = None) -> dict:
+    """One decode pass fanned out to one or more lake tables.
+
+    ``lakes``: ``{(db, tbl): LakeTable}``; a ``None`` key applies every
+    change row to its lake. The stream is decoded and
+    transaction-assembled ONCE, then each table's changes fold and MERGE
+    into that table's lake — the multi-consumer shape of the reference's
+    single callback receiving every table's events
+    (`row_streamer.go:33-39`), with per-table exactly-once (each lake
+    tracks its own batch ids / GTID watermark) and per-table DDL routing
+    (``apply_ddls`` matches the statement's table token against each
+    lake's identity). With ``record_lineage`` and a ``batch_id``, every
+    lake gets its ``_lineage/batch-<id>.json``.
 
     ``stream_meta``: pass a pre-merged TABLE_MAP index (streaming keeps an
     accumulated one across microbatches) to skip the discovery job.
-    ``target_table``: ``(db, tbl)`` this lake table materializes; other
-    tables' change rows in the same stream are excluded before the fold
-    (the MERGE idempotency key is (gtid, table, row-key) per the north
-    rule — one LakeTable applies one table). Defaults to the lake
-    manifest's recorded identity, else no filter (single-table streams).
-    ``fold_engine``: ``"shuffle"`` (default) shuffles the change set on
-    the key and folds sorted runs; ``"prefold"`` pre-reduces map-side per
-    (key, file segment) before a partials-only shuffle — wins when keys
-    are hot (events per key per segment ≫ 1, the 10^10-event hot-repo
-    regime), loses when most keys are touched once per batch (the
-    partials add a second Arrow conversion for no volume cut) — both
-    A/B-measured in BENCH/BASELINE.md.
-
     ``stream_meta=INLINE_DISCOVERY`` skips the schema-discovery job
     entirely: the decode stage self-discovers TABLE_MAP /
     FORMAT_DESCRIPTION frames from its own partitions (the colsplit
@@ -164,135 +116,49 @@ def replay_batch(spark: SparkSession, frames: DataFrame, lake: LakeTable,
     file) — because a TABLE_MAP physically precedes its ROWS events; a
     rows event whose TABLE_MAP sits in another partition dead-letters
     rather than mis-decoding. One fewer Spark job per batch.
-    """
-    # Three Spark actions per batch (two with INLINE_DISCOVERY),
-    # everything else pipelined inside them:
+
+    Returns ``{key: merge_stats}``."""
+    # Spark actions per batch, everything else pipelined inside them:
     #   1. schema discovery (tiny collect over TABLE_MAP/FORMAT_DESC
-    #      frames) — skipped in inline mode (decode self-discovers)
-    #   2. per-bucket stats over the folded delta (collect) — this single
-    #      action materializes decode+assemble+fold, and the DDL side
-    #      channel rides along in an accumulator instead of its own job
-    #   3. the MERGE join + bucket rewrite itself
+    #      frames) — skipped with a passed or inline meta
+    #   2. per lake, per-bucket stats over the folded delta (collect) —
+    #      the first one materializes decode+assemble+fold, and the DDL
+    #      side channel rides along in an accumulator instead of its own
+    #      job
+    #   3. per lake, the MERGE join + bucket rewrite itself
     t_start = _time.perf_counter()
     if stream_meta is INLINE_DISCOVERY:
-        if fold_engine == "prefold":
-            raise ValueError("prefold needs the discovered file list for "
-                             "segmenting; use discovery or fold_engine="
-                             "'shuffle'")
         meta = {"checksum_alg": 1, "table_maps": {}}
     elif stream_meta is not None:
         meta = stream_meta
     else:
         meta = discover_stream_meta(frames)
     ddl_acc = spark.sparkContext.accumulator([], _DdlAccum())
-    # decoded is NOT persisted: the fold's stats action is the only pass
-    # through it (the lineage re-read is served by changes.persist, which
-    # that same pass populates) — caching the full decoded set would cost
-    # a storage-memory write of every change row for zero re-reads
-    decoded = decode_frames(spark, frames, meta, registry, ddl_acc=ddl_acc)
-    folded = None
-    changes = None
-    try:
-        prefold = fold_engine == "prefold" and not chunk_size
-        if prefold:
-            seg = segment_expr(spark, meta)
-            if seg is None:  # >SEGMENT_LITERAL_MAX files: broadcast join
-                changes = assemble_transactions(
-                    attach_segments(spark, decoded, meta),
-                    segment=F.col("_seg"))
-            else:
-                changes = assemble_transactions(decoded, segment=seg)
-        else:
-            changes = assemble_transactions(decoded)
-        target = target_table or lake.meta.get("table")
-        if target is not None:
-            db, tbl = target
-            changes = changes.where((F.col("db") == db) & (F.col("tbl") == tbl))
-        if record_lineage and batch_id is not None:
-            changes.persist()
-        if prefold:
-            # map-side pre-fold riding the segment windows' partitioning
-            # and sort: the key shuffle carries ~one partial per
-            # (key, segment) instead of every change row
-            folded = lake.bucket_of(
-                fold_changes_prefold(changes, tuple(lake.meta["key"])))
-        else:
-            folded = lake.bucket_of(
-                fold_changes(changes, tuple(lake.meta["key"]),
-                             chunk_size=chunk_size))
-        folded.persist()
-        per_bucket = (folded.groupBy("_bucket")
-                      .agg(F.sum("n_events").alias("n"),
-                           F.max("g").alias("g")).collect())
-        n_changes = sum(r["n"] for r in per_bucket)
-        max_gtid = max((r["g"] for r in per_bucket), default=None)
-        # merge_apply drops delta rows at-or-below the lake's gtid
-        # watermark; apply the same cut to the changed-bucket list so a
-        # re-delivered batch commits a no-op instead of rewriting every
-        # touched bucket byte-identically
-        hwm = lake.meta.get("last_gtid", -1)
-        effective = [r for r in per_bucket if r["g"] > hwm]
-
-        # accumulator is complete once the stats action returns; dedupe by
-        # (file, pos) — task retries re-fire accumulator updates
-        seen, ddls = set(), []
-        for file, pos, ts, db, sql, cat in sorted(ddl_acc.value):
-            if (file, pos) in seen:
-                continue
-            seen.add((file, pos))
-            ddls.append({"file": file, "pos": pos, "ts": ts, "db": db,
-                         "sql": sql, "category": cat})
-        apply_ddls(lake, ddls)
-
-        stats = lake.merge_apply(
-            folded, batch_id=batch_id, max_gtid=max_gtid,
-            changed_buckets=[r["_bucket"] for r in effective])
-        stats["n_changes"] = n_changes
-        stats["n_ddls"] = len(ddls)
-        if record_lineage and batch_id is not None:
-            secs = _time.perf_counter() - t_start
-            write_lineage(changes, lake.path, batch_id, metrics={
-                "n_changes": n_changes, "n_ddls": len(ddls),
-                "seconds": round(secs, 3),
-                "events_per_sec": round(n_changes / secs, 1) if secs else None,
-            })
-        return stats
-    finally:
-        if changes is not None and record_lineage and batch_id is not None:
-            changes.unpersist()
-        if folded is not None:
-            folded.unpersist()
-
-
-def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
-                       registry: dict, batch_id=None,
-                       stream_meta: dict | None = None) -> dict:
-    """One decode pass fanned out to multiple lake tables.
-
-    ``lakes``: ``{(db, tbl): LakeTable}``. The stream is decoded and
-    transaction-assembled ONCE (persisted across the fan-out), then each
-    table's changes fold and MERGE into that table's lake — the
-    multi-consumer shape of the reference's single callback receiving
-    every table's events (`row_streamer.go:33-39`), with per-table
-    exactly-once (each lake tracks its own batch ids / GTID watermark)
-    and per-table DDL routing (``apply_ddls`` matches the statement's
-    table token against each lake's identity).
-
-    Returns ``{(db, tbl): merge_stats}``."""
-    meta = (stream_meta if stream_meta is not None
-            else discover_stream_meta(frames))
-    ddl_acc = spark.sparkContext.accumulator([], _DdlAccum())
+    # decoded is NOT persisted: the first stats action is the only pass
+    # through it when one lake reads it — caching the full decoded set
+    # would cost a storage-memory write of every change row for zero
+    # re-reads. The change set is cached only for a second reader: the
+    # other lakes' folds, or else the lineage summary.
     decoded = decode_frames(spark, frames, meta, registry, ddl_acc=ddl_acc)
     changes_all = assemble_transactions(decoded)
-    changes_all.persist()
+    shared = len(lakes) > 1
+    lineage = record_lineage and batch_id is not None
+    cache_own = lineage and not shared
+    if shared:
+        changes_all.persist()
     ddls = None
     out = {}
     try:
-        for (db, tbl), lake in lakes.items():
-            ch = changes_all.where(
-                (F.col("db") == db) & (F.col("tbl") == tbl))
+        for key, lake in lakes.items():
+            changes = changes_all
+            if key is not None:
+                db, tbl = key
+                changes = changes.where(
+                    (F.col("db") == db) & (F.col("tbl") == tbl))
+            if cache_own:
+                changes.persist()
             folded = lake.bucket_of(
-                fold_changes(ch, tuple(lake.meta["key"])))
+                fold_changes(changes, tuple(lake.meta["key"])))
             folded.persist()
             try:
                 per_bucket = (folded.groupBy("_bucket")
@@ -300,9 +166,16 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
                                    F.max("g").alias("g")).collect())
                 n_changes = sum(r["n"] for r in per_bucket)
                 max_gtid = max((r["g"] for r in per_bucket), default=None)
+                # merge_apply drops delta rows at-or-below the lake's gtid
+                # watermark; apply the same cut to the changed-bucket list
+                # so a re-delivered batch commits a no-op instead of
+                # rewriting every touched bucket byte-identically
                 hwm = lake.meta.get("last_gtid", -1)
                 effective = [r for r in per_bucket if r["g"] > hwm]
-                if ddls is None:  # accumulator complete after first action
+                if ddls is None:
+                    # the accumulator is complete once the first stats
+                    # action returns; dedupe by (file, pos) — task
+                    # retries re-fire accumulator updates
                     seen, ddls = set(), []
                     for f, p, ts, d, sql, cat in sorted(ddl_acc.value):
                         if (f, p) in seen:
@@ -315,12 +188,24 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
                     folded, batch_id=batch_id, max_gtid=max_gtid,
                     changed_buckets=[r["_bucket"] for r in effective])
                 stats["n_changes"] = n_changes
-                out[(db, tbl)] = stats
+                stats["n_ddls"] = len(ddls)
+                if lineage:
+                    secs = _time.perf_counter() - t_start
+                    write_lineage(changes, lake.path, batch_id, metrics={
+                        "n_changes": n_changes, "n_ddls": len(ddls),
+                        "seconds": round(secs, 3),
+                        "events_per_sec": (round(n_changes / secs, 1)
+                                           if secs else None),
+                    })
+                out[key] = stats
             finally:
+                if cache_own:
+                    changes.unpersist()
                 folded.unpersist()
         return out
     finally:
-        changes_all.unpersist()
+        if shared:
+            changes_all.unpersist()
 
 
 def read_frames(spark: SparkSession, frames_dir: str) -> DataFrame:

@@ -43,9 +43,8 @@ def get_spark(app_name: str = "binlog-spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # NOTE deliberately NOT setting spark.sql.mapKeyDedupPolicy: the
-        # LWW folds dedupe map keys themselves (foldcol kernel dedup /
-        # map_zip_with merge) and must stay correct under the EXCEPTION
-        # default — running the whole suite on the default policy is the
+        # LWW fold dedupes map keys itself (lww kernel dedup) and must
+        # stay correct under the EXCEPTION default — running the whole suite on the default policy is the
         # regression guard for the r4 DUPLICATED_MAP_KEY crash
         # canonical temporal rendering is UTC-pinned
         .config("spark.sql.session.timeZone", "UTC")

@@ -33,6 +33,7 @@ from .. import schema as S
 from ..operators.decode import discover_stream_meta
 from ..operators.merge import LakeTable
 from ..pipeline import replay_batch, replay_batch_multi
+from ..sources.binlog_file import frames_from_binary_df
 
 
 class _MetaStore:
@@ -124,41 +125,78 @@ class _FileOrderGuard:
         os.replace(tmp, self.path)
 
 
-def run_stream(spark: SparkSession, frames_dir: str, lake_path: str,
+def _apply(spark: SparkSession, frames, lakes, registry: dict,
+           store: _MetaStore, batch_id: str):
+    """The per-batch step every driver shares: merge this batch's
+    TABLE_MAPs into the persisted stream meta, then decode once and apply
+    to every lake — ``lakes`` is one lake path or ``{(db, tbl): path}``.
+    Manifests are re-read per batch: the previous batch may have
+    committed."""
+    meta = _merge_meta(store.load(), discover_stream_meta(frames))
+    store.save(meta)
+    if isinstance(lakes, dict):
+        replay_batch_multi(spark, frames, {
+            key: LakeTable(spark, path) for key, path in lakes.items()},
+            registry, batch_id=batch_id, stream_meta=meta)
+    else:
+        replay_batch(spark, frames, LakeTable(spark, lakes), registry,
+                     batch_id=batch_id, stream_meta=meta)
+
+
+def run_stream(spark: SparkSession, source_dir: str, lakes,
                registry: dict, checkpoint_dir: str,
-               max_files_per_trigger: int = 2,
-               chunk_size: int | None = None,
-               enforce_name_order: bool = True):
+               max_files_per_trigger: int = 1, raw: bool = False):
     """Start the streaming apply; returns the StreamingQuery.
 
+    ``lakes``: one lake path, or ``{(db, tbl): lake_path}`` to fan one
+    decode per microbatch out to several tables, each applying only its
+    own table's changes. ``source_dir`` holds frame parquet files, or
+    with ``raw=True`` a GROWING raw-binlog archive — the deployment where
+    the server (or a copy job) keeps dropping completed ``binlog.NNNNNN``
+    files into object storage: ``readStream.format("binaryFile")``
+    discovers new files via the checkpointed file index and each
+    microbatch's blobs split into frames by the shared header-chain
+    kernel (``sources/binlog_file.frames_from_binary_df``). One binlog
+    file is bounded by ``max_binlog_size`` (1 GiB default), so whole-file
+    blobs are a safe executor-memory unit; keep ``max_files_per_trigger``
+    small to bound microbatch memory.
+
     Call ``query.awaitTermination()`` / ``processAllAvailable()`` to drive;
-    kill and re-invoke with the same checkpoint_dir to resume.
-    ``enforce_name_order`` fails a microbatch loudly if the file source
-    delivers binlog files out of name order (see ``_FileOrderGuard``).
+    kill and re-invoke with the same checkpoint_dir to resume: checkpointed
+    source offsets plus each lake's batch-id / GTID guards make a
+    re-delivered microbatch a per-table no-op. Both sources list new files
+    by modification time, so every microbatch first passes the
+    ``_FileOrderGuard``, which fails it loudly before any lake's watermark
+    advances if files arrive out of name order.
     """
     store = _MetaStore(os.path.join(checkpoint_dir, "table_map_cache.json"))
     guard = _FileOrderGuard(
         os.path.join(checkpoint_dir, "file_order_hwm.json"))
 
     def apply_batch(batch_df, batch_id: int):
-        lake = LakeTable(spark, lake_path)  # re-read manifest each batch
-        if enforce_name_order:
+        if raw:
+            names = [os.path.basename(r["path"]) for r in
+                     batch_df.select("path").collect()]
+        else:
             names = [r["file"] for r in
                      batch_df.select("file").distinct().collect()]
-            guard.check_and_advance(names, batch_id)
-        meta = _merge_meta(store.load(), discover_stream_meta(batch_df))
-        store.save(meta)
-        # same fused 3-action pipeline as the batch path (DDLs ride the
-        # decode accumulator; stats+fold in one action; MERGE in one)
-        replay_batch(spark, batch_df, lake, registry,
-                     batch_id=f"stream-{batch_id}", chunk_size=chunk_size,
-                     record_lineage=True, stream_meta=meta)
+        guard.check_and_advance(names, batch_id)
+        frames = frames_from_binary_df(batch_df) if raw else batch_df
+        prefix = "raw" if raw else "stream"
+        _apply(spark, frames, lakes, registry, store, f"{prefix}-{batch_id}")
 
-    stream = (
-        spark.readStream.schema(S.FRAME_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(frames_dir)
-    )
+    if raw:
+        # the file streaming source requires an explicit schema; this is
+        # binaryFile's fixed one
+        stream = (spark.readStream.format("binaryFile")
+                  .schema("path string, modificationTime timestamp, "
+                          "length long, content binary")
+                  .option("maxFilesPerTrigger", max_files_per_trigger)
+                  .load(source_dir))
+    else:
+        stream = (spark.readStream.schema(S.FRAME_SCHEMA)
+                  .option("maxFilesPerTrigger", max_files_per_trigger)
+                  .parquet(source_dir))
     return (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
@@ -169,8 +207,7 @@ def run_stream(spark: SparkSession, frames_dir: str, lake_path: str,
 
 def run_stream_ordered(spark: SparkSession, frames_dir: str, lake_path: str,
                        registry: dict, checkpoint_dir: str,
-                       max_files_per_trigger: int = 2,
-                       fold_engine: str = "shuffle") -> dict:
+                       max_files_per_trigger: int = 2) -> dict:
     """Name-ordered AvailableNow ingestion: processes every parquet file
     under ``frames_dir`` in LEXICOGRAPHIC order (binlog names sort
     chronologically) in microbatches of ``max_files_per_trigger`` files —
@@ -199,12 +236,7 @@ def run_stream_ordered(spark: SparkSession, frames_dir: str, lake_path: str,
         chunk = todo[i : i + max_files_per_trigger]
         df = spark.read.schema(S.FRAME_SCHEMA).parquet(
             *[os.path.join(frames_dir, n) for n in chunk])
-        lake = LakeTable(spark, lake_path)
-        meta = _merge_meta(store.load(), discover_stream_meta(df))
-        store.save(meta)
-        replay_batch(spark, df, lake, registry,
-                     batch_id=f"ordered-{chunk[0]}", record_lineage=True,
-                     stream_meta=meta, fold_engine=fold_engine)
+        _apply(spark, df, lake_path, registry, store, f"ordered-{chunk[0]}")
         tmp = cursor_path + ".tmp"
         os.makedirs(checkpoint_dir, exist_ok=True)
         with open(tmp, "w") as f:
@@ -212,97 +244,3 @@ def run_stream_ordered(spark: SparkSession, frames_dir: str, lake_path: str,
         os.replace(tmp, cursor_path)
         batches += 1
     return {"batches": batches, "files": len(todo)}
-
-
-def run_stream_multi(spark: SparkSession, frames_dir: str, lake_paths: dict,
-                     registry: dict, checkpoint_dir: str,
-                     max_files_per_trigger: int = 2):
-    """Streaming multi-table fan-out: one source, one decode per
-    microbatch, each table's changes applied to its own lake
-    (``lake_paths``: ``{(db, tbl): lake_path}``). Same resume contract
-    as ``run_stream`` — checkpointed offsets plus each lake's own
-    batch-id/GTID guards make a replayed microbatch a per-table no-op;
-    the same ``_FileOrderGuard`` fails an mtime-scrambled source loudly
-    before ANY table's watermark advances."""
-    store = _MetaStore(os.path.join(checkpoint_dir, "table_map_cache.json"))
-    guard = _FileOrderGuard(
-        os.path.join(checkpoint_dir, "file_order_hwm.json"))
-
-    def apply_batch(batch_df, batch_id: int):
-        names = [r["file"] for r in
-                 batch_df.select("file").distinct().collect()]
-        guard.check_and_advance(names, batch_id)
-        lakes = {key: LakeTable(spark, path)
-                 for key, path in lake_paths.items()}
-        meta = _merge_meta(store.load(), discover_stream_meta(batch_df))
-        store.save(meta)
-        replay_batch_multi(spark, batch_df, lakes, registry,
-                           batch_id=f"stream-{batch_id}", stream_meta=meta)
-
-    stream = (
-        spark.readStream.schema(S.FRAME_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(frames_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_stream_raw(spark: SparkSession, raw_dir: str, lake_path: str,
-                   registry: dict, checkpoint_dir: str,
-                   max_files_per_trigger: int = 1):
-    """Live ingestion of a GROWING raw-binlog archive directory — the
-    deployment where the server (or a copy job) keeps dropping completed
-    ``binlog.NNNNNN`` files into object storage and the engine tails the
-    directory: ``readStream.format("binaryFile")`` discovers new files
-    via the checkpointed file index, each microbatch's blobs split into
-    frames by the shared header-chain kernel
-    (``sources/binlog_file.frames_from_binary_df``), then the exact
-    batch apply. Resume contract is identical to ``run_stream``:
-    checkpointed source offsets + the lake's batch-id / GTID guards make
-    a re-delivered microbatch a no-op.
-
-    One binlog file is bounded by ``max_binlog_size`` (1 GiB default),
-    so whole-file blobs are a safe executor-memory unit; keep
-    ``max_files_per_trigger`` small to bound microbatch memory."""
-    from ..sources.binlog_file import frames_from_binary_df
-
-    store = _MetaStore(os.path.join(checkpoint_dir, "table_map_cache.json"))
-    # binaryFile lists new files by MODIFICATION TIME, same as the parquet
-    # source — an mtime-scrambled archive (copies/restores/parallel
-    # writers) must fail loudly before the lake GTID watermark advances
-    # past an unapplied earlier file (see _FileOrderGuard)
-    guard = _FileOrderGuard(
-        os.path.join(checkpoint_dir, "file_order_hwm.json"))
-
-    def apply_batch(batch_df, batch_id: int):
-        names = [os.path.basename(r["path"]) for r in
-                 batch_df.select("path").collect()]
-        guard.check_and_advance(names, batch_id)
-        frames = frames_from_binary_df(batch_df)
-        lake = LakeTable(spark, lake_path)
-        meta = _merge_meta(store.load(), discover_stream_meta(frames))
-        store.save(meta)
-        replay_batch(spark, frames, lake, registry,
-                     batch_id=f"raw-{batch_id}", record_lineage=True,
-                     stream_meta=meta)
-
-    stream = (
-        spark.readStream.format("binaryFile")
-        # the file streaming source requires an explicit schema; this is
-        # binaryFile's fixed one
-        .schema("path string, modificationTime timestamp, "
-                "length long, content binary")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(raw_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -66,15 +66,15 @@ def test_raw_tail_rejects_mtime_scrambled_archive(spark, tmp_path):
     """r3 ADVICE regression: binaryFile orders new files by mtime, so a
     scrambled archive (copies/restores/parallel writers) would apply a
     later-named binlog first and silently drop the earlier file's changes
-    past the advanced GTID watermark. run_stream_raw must fail the batch
-    LOUDLY (offsets uncommitted) via the same _FileOrderGuard as
-    run_stream."""
+    past the advanced GTID watermark. run_stream(raw=True) must fail the
+    batch LOUDLY (offsets uncommitted) via the same _FileOrderGuard as
+    the frame-parquet source."""
     import time
 
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from binlog_spark.streaming.pipeline import run_stream_raw
+    from binlog_spark.streaming.pipeline import run_stream
 
     gen = genlog.CdcWorldGenerator(seed=41, n_repos=8, paths_per_repo=10,
                                    txns_per_file=30)
@@ -93,8 +93,8 @@ def test_raw_tail_rejects_mtime_scrambled_archive(spark, tmp_path):
     lake = LakeTable.create(spark, str(tmp_path / "lake_scrambled"),
                             columns=genlog.table_spec().col_names,
                             key_cols=list(genlog.KEY_COLS), n_buckets=4)
-    q = run_stream_raw(spark, live, lake.path, genlog.table_registry(),
-                       str(tmp_path / "ckpt_scrambled"))
+    q = run_stream(spark, live, lake.path, genlog.table_registry(),
+                   str(tmp_path / "ckpt_scrambled"), raw=True)
     with pytest.raises((StreamingQueryException, Py4JJavaError),
                        match="file order violation"):
         q.awaitTermination()
@@ -106,11 +106,11 @@ def test_raw_tail_rejects_mtime_scrambled_archive(spark, tmp_path):
 
 
 def test_streaming_tail_of_growing_archive(spark, tmp_path):
-    """run_stream_raw: tail a growing raw-binlog directory across two
+    """run_stream(raw=True): tail a growing raw-binlog directory across two
     availableNow passes sharing one checkpoint — the second pass applies
     ONLY the newly arrived file, and the final state matches the
     generator's."""
-    from binlog_spark.streaming.pipeline import run_stream_raw
+    from binlog_spark.streaming.pipeline import run_stream
 
     gen = genlog.CdcWorldGenerator(seed=37, n_repos=10, paths_per_repo=12,
                                    txns_per_file=40)
@@ -129,8 +129,8 @@ def test_streaming_tail_of_growing_archive(spark, tmp_path):
 
     # first file arrives; pass 1 consumes it
     os.link(os.path.join(staged, names[0]), os.path.join(live, names[0]))
-    run_stream_raw(spark, live, lake.path, genlog.table_registry(),
-                   ckpt).awaitTermination()
+    run_stream(spark, live, lake.path, genlog.table_registry(),
+               ckpt, raw=True).awaitTermination()
     lake = LakeTable(spark, lake.path)  # reload manifest committed by the stream
     applied_after_first = list(lake.meta["applied_batches"])
     assert applied_after_first
@@ -138,8 +138,8 @@ def test_streaming_tail_of_growing_archive(spark, tmp_path):
     # the rest arrive; pass 2 (same checkpoint) applies only the new ones
     for n in names[1:]:
         os.link(os.path.join(staged, n), os.path.join(live, n))
-    run_stream_raw(spark, live, lake.path, genlog.table_registry(),
-                   ckpt).awaitTermination()
+    run_stream(spark, live, lake.path, genlog.table_registry(),
+               ckpt, raw=True).awaitTermination()
     lake = LakeTable(spark, lake.path)
     assert len(lake.meta["applied_batches"]) > len(applied_after_first)
 

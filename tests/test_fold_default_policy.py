@@ -10,20 +10,20 @@ same column threw ``DUPLICATED_MAP_KEY`` — crashing the replay family
 `cdc_schema_evolution`, `cdc_replay_raw_files`) in CORRECTNESS_r04.
 
 These tests pin the policy to EXCEPTION explicitly (the strictest
-setting, and Spark's default) and drive every fold engine plus the full
-``replay_batch`` e2e over a stream dense in duplicate-column patches.
+setting, and Spark's default) and drive the columnar fold, its
+pure-Python oracle, and the full ``replay_batch`` e2e over a stream dense
+in duplicate-column patches.
 """
 
 import numpy as np
 import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
 from binlog_spark import genlog, pipeline
 from binlog_spark import schema as S
-from binlog_spark.operators.foldcol import _dedup_keep_last
-from binlog_spark.operators.lww import fold_changes, fold_changes_prefold
+from binlog_spark.operators.lww import _dedup_keep_last, fold_changes
 from binlog_spark.operators.merge import LakeTable
+from tests.fold_oracle import fold_oracle, norm_fold
 
 
 @pytest.fixture()
@@ -73,48 +73,27 @@ DUP_PATCH_ROWS = [
          {"repo": "C", "path": "r"}),
 ]
 
+# (del, full, m, g, s, n_events) per key
 EXPECT = {
     ("A", "p"): (False, True,
                  {"repo": "A", "path": "p", "content": "v2", "lang": "go"},
-                 3, 3),
+                 3, 0, 3),
     ("B", "q"): (False, False,
                  {"repo": "B", "path": "q", "lang": None, "content": "zz"},
-                 6, 3),
+                 6, 0, 3),
     ("C", "r"): (False, True,
-                 {"repo": "C", "path": "r", "content": "c1"}, 9, 3),
+                 {"repo": "C", "path": "r", "content": "c1"}, 9, 0, 3),
 }
 
 
-def _check(folded_rows):
-    got = {}
-    for r in folded_rows:
-        got[(r["_k_repo"], r["_k_path"])] = (
-            r["del"], r["full"], dict(r["m"]), r["g"], r["n_events"])
-    assert got == EXPECT
-
-
-@pytest.mark.parametrize("engine", ["columnar", "arrow", "sql"])
+@pytest.mark.parametrize("engine", ["columnar", "oracle"])
 def test_fold_engines_default_policy(strict_policy, engine):
     spark = strict_policy
     changes = _mk_changes(spark, DUP_PATCH_ROWS)
-    folded = fold_changes(changes, ("repo", "path"), engine=engine)
-    _check(folded.collect())
-
-
-def test_fold_sql_chunked_default_policy(strict_policy):
-    spark = strict_policy
-    changes = _mk_changes(spark, DUP_PATCH_ROWS)
-    folded = fold_changes(changes, ("repo", "path"), chunk_size=2,
-                          engine="sql")
-    _check(folded.collect())
-
-
-def test_fold_prefold_default_policy(strict_policy):
-    spark = strict_policy
-    changes = _mk_changes(spark, DUP_PATCH_ROWS).withColumn(
-        "_seg", F.lit("s:0"))
-    folded = fold_changes_prefold(changes, ("repo", "path"))
-    _check(folded.collect())
+    if engine == "oracle":
+        assert fold_oracle(changes) == EXPECT
+    else:
+        assert norm_fold(fold_changes(changes, ("repo", "path"))) == EXPECT
 
 
 def test_columnar_carry_path_dedup(strict_policy):
@@ -134,13 +113,14 @@ def test_columnar_carry_path_dedup(strict_policy):
             for g in range(2, 32)
         ]
         changes = _mk_changes(spark, rows)
-        folded = fold_changes(changes, ("repo", "path"), engine="columnar")
+        folded = fold_changes(changes, ("repo", "path"))
         out = folded.collect()
         assert len(out) == 1
         r = out[0]
         m = dict(r["m"])
         assert m["content"] == "v30" and r["full"] and not r["del"]
         assert r["n_events"] == 31 and r["g"] == 31
+        assert norm_fold(folded) == fold_oracle(changes)
     finally:
         if prev is None:
             spark.conf.unset(key)

@@ -15,6 +15,7 @@ from binlog_spark import genlog, pipeline
 from binlog_spark.operators.lww import fold_changes, lww_latest
 from binlog_spark.operators.merge import LakeTable
 from binlog_spark.operators.transactions import transaction_summaries
+from tests.fold_oracle import fold_oracle, norm_fold
 
 
 @pytest.fixture(scope="module")
@@ -95,106 +96,34 @@ def test_merge_apply_is_idempotent(spark, world, tmp_path):
 
 
 def test_chunked_fold_equals_plain_fold(spark, world):
+    """Every key folded by ONE task, in 16-row Arrow batches: key runs
+    and the carried state hand over at every batch boundary, and the
+    columnar fold still equals the pure-Python oracle."""
     result, frames_dir = world
     frames = pipeline.read_frames(spark, frames_dir)
     changes = pipeline.decode_to_changes(spark, frames, genlog.table_registry())
-    plain = {tuple(r[k] for k in ("_k_repo", "_k_path")):
-             (r["del"], r["full"], dict(r["m"]), r["g"], r["s"])
-             for r in fold_changes(changes).collect()}
-    chunked = {tuple(r[k] for k in ("_k_repo", "_k_path")):
-               (r["del"], r["full"], dict(r["m"]), r["g"], r["s"])
-               for r in fold_changes(changes, chunk_size=16).collect()}
-    assert plain == chunked
+    confs = {"spark.sql.shuffle.partitions": "1",
+             "spark.sql.execution.arrow.maxRecordsPerBatch": "16"}
+    before = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        assert norm_fold(fold_changes(changes)) == fold_oracle(changes)
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
-def test_segment_broadcast_join_equals_literal_and_bounds_plan(spark, world):
-    """VERDICT r3 #6: thousand-file batches must not inflate the plan with
-    a per-file map literal — above SEGMENT_LITERAL_MAX the segment map
-    rides a broadcast join; both forms fold identically, and unmapped
-    files get per-file segments instead of one collapsed NULL partition
-    (r3 ADVICE)."""
-    from binlog_spark.operators.decode import (decode_frames,
-                                               discover_stream_meta)
-    from binlog_spark.operators.lww import fold_changes_prefold
-    from binlog_spark.operators.transactions import assemble_transactions
-    from binlog_spark import plans
-
-    result, frames_dir = world
-    frames = pipeline.read_frames(spark, frames_dir)
-    meta = discover_stream_meta(frames)
-    decoded = decode_frames(spark, frames, meta, genlog.table_registry())
-
-    def norm(df):
-        return {tuple(r[k] for k in ("_k_repo", "_k_path")):
-                (r["del"], r["full"], dict(r["m"]), r["g"], r["s"],
-                 r["n_events"])
-                for r in df.collect()}
-
-    lit_fold = fold_changes_prefold(assemble_transactions(
-        decoded, segment=pipeline.segment_expr(spark, meta)))
-    joined = pipeline.attach_segments(spark, decoded, meta)
-    join_fold = fold_changes_prefold(assemble_transactions(
-        joined, segment=F.col("_seg")))
-    assert plans.has_broadcast_join(joined)
-    assert norm(join_fold) == norm(lit_fold)
-
-    # a huge file index routes OFF the literal (no >1k-entry create_map)
-    big_meta = {"checksum_alg": meta["checksum_alg"],
-                "table_maps": {(f"binlog.{i:06d}", 1): []
-                               for i in range(pipeline.SEGMENT_LITERAL_MAX
-                                              + 1)}}
-    assert pipeline.segment_expr(spark, big_meta) is None
-
-    # unmapped files get their own segment, never a shared NULL
-    seg = pipeline.segment_expr(spark, meta)
-    probe = spark.createDataFrame(
-        [("binlog.999998",), ("binlog.999999",)], "file string")
-    vals = [r[0] for r in probe.select(seg.alias("s")).collect()]
-    assert vals == ["f:binlog.999998", "f:binlog.999999"]
-
-
-def test_prefold_equals_shuffle_fold(spark, world):
-    """Map-side pre-fold over segment windows == the key-shuffle fold,
-    key for key and field for field (incl. tiny flush caps that force a
-    key's run to split into several chunk-ordered partials)."""
-    from binlog_spark.operators.decode import (decode_frames,
-                                               discover_stream_meta)
-    from binlog_spark.operators.lww import (combine_partials,
-                                            fold_changes_prefold,
-                                            prefold_partials)
-    from binlog_spark.operators.transactions import assemble_transactions
-
-    result, frames_dir = world
-    frames = pipeline.read_frames(spark, frames_dir)
-    meta = discover_stream_meta(frames)
-    decoded = decode_frames(spark, frames, meta, genlog.table_registry())
-    seg = pipeline.segment_expr(spark, meta)
-    ch_seg = assemble_transactions(decoded, segment=seg)
-    ch_plain = assemble_transactions(decoded)
-
-    def norm(df):
-        return {tuple(r[k] for k in ("_k_repo", "_k_path")):
-                (r["del"], r["full"], dict(r["m"]), r["g"], r["s"],
-                 r["n_events"])
-                for r in df.collect()}
-
-    want = norm(fold_changes(ch_plain))
-    assert norm(fold_changes_prefold(ch_seg)) == want
-    # a 1-entry state cap flushes on every new key: many partials per
-    # key, still exact after the ordered combine
-    tiny = combine_partials(prefold_partials(ch_seg, flush_cap=1))
-    assert norm(tiny) == want
-
-
-def test_replay_batch_prefold_engine_state_parity(spark, world, tmp_path):
-    result, frames_dir = world
-    lake = LakeTable.create(spark, str(tmp_path / "lake_pf"),
+def _hot_world_parity(spark, tmp_path, tag, **world):
+    gen = genlog.CdcWorldGenerator(txns_per_file=500, **world)
+    result = gen.generate(n_txns=1000)
+    frames_dir = str(tmp_path / f"frames_{tag}")
+    genlog.write_frames_parquet(result, frames_dir)
+    lake = LakeTable.create(spark, str(tmp_path / f"lake_{tag}"),
                             columns=genlog.table_spec().col_names,
-                            key_cols=list(genlog.KEY_COLS), n_buckets=8)
-    frames = pipeline.read_frames(spark, frames_dir)
-    stats = pipeline.replay_batch(spark, frames, lake,
-                                  genlog.table_registry(), batch_id=0,
-                                  fold_engine="prefold")
+                            key_cols=list(genlog.KEY_COLS), n_buckets=4)
+    stats = pipeline.replay_batch(spark, pipeline.read_frames(
+        spark, frames_dir), lake, genlog.table_registry(), batch_id=0)
     assert stats["n_changes"] == len(result.changes)
     got = {(r["repo"], r["path"]):
            hashlib.sha256(r["content"].encode()).hexdigest()
@@ -202,39 +131,22 @@ def test_replay_batch_prefold_engine_state_parity(spark, world, tmp_path):
     want = {(repo, path): hashlib.sha256(row["content"].encode()).hexdigest()
             for (repo, path), row in result.final_state.items()}
     assert got == want
+    return len(result.changes), len(result.final_state)
 
 
-def test_prefold_hot_key_world_and_volume_cut(spark, tmp_path):
-    """The regime prefold exists for: few hot keys, many events per key
-    per segment — partials shrink by ~events-per-key; result identical."""
-    from binlog_spark.operators.decode import (decode_frames,
-                                               discover_stream_meta)
-    from binlog_spark.operators.lww import (fold_changes_prefold,
-                                            prefold_partials)
-    from binlog_spark.operators.transactions import assemble_transactions
-
-    gen = genlog.CdcWorldGenerator(seed=13, n_repos=4, paths_per_repo=2,
-                                   hot_repos=2, txns_per_file=500)
-    result = gen.generate(n_txns=1000)
-    frames_dir = str(tmp_path / "hotframes")
-    genlog.write_frames_parquet(result, frames_dir)
-    frames = pipeline.read_frames(spark, frames_dir)
-    meta = discover_stream_meta(frames)
-    decoded = decode_frames(spark, frames, meta, genlog.table_registry())
-    ch_seg = assemble_transactions(
-        decoded, segment=pipeline.segment_expr(spark, meta))
-    n_changes = len(result.changes)
-    n_partials = prefold_partials(ch_seg).count()
-    assert n_partials < n_changes / 5  # the map-side cut is real
-    ch_plain = assemble_transactions(decoded)
-
-    def norm(df):
-        return {tuple(r[k] for k in ("_k_repo", "_k_path")):
-                (r["del"], r["full"], dict(r["m"]), r["g"], r["s"],
-                 r["n_events"])
-                for r in df.collect()}
-
-    assert norm(fold_changes_prefold(ch_seg)) == norm(fold_changes(ch_plain))
+def test_hot_key_world_replay_parity(spark, tmp_path):
+    """Skewed inputs through the one fold engine: few keys, many events
+    per key, so a handful of fold tasks each hold very long key runs —
+    including the narrowest world the generator makes (one repo,
+    one path per directory and extension: 64 keys)."""
+    n_changes, n_keys = _hot_world_parity(
+        spark, tmp_path, "skewed", seed=13, n_repos=4, paths_per_repo=2,
+        hot_repos=2)
+    assert n_changes > 5 * n_keys
+    n_changes, n_keys = _hot_world_parity(
+        spark, tmp_path, "single", seed=13, n_repos=1, paths_per_repo=1,
+        hot_repos=1)
+    assert n_keys <= 64 and n_changes > 100 * n_keys
 
 
 def test_inline_discovery_replay_parity(spark, tmp_path):
@@ -336,25 +248,20 @@ def test_batch_replay_with_schema_evolution(spark, tmp_path):
 
 
 def test_arrow_fold_equals_sql_fold(spark, world):
+    """The columnar fold equals the pure-Python oracle, key for key and
+    field for field, also when key runs span Arrow batches."""
     result, frames_dir = world
     frames = pipeline.read_frames(spark, frames_dir)
     changes = pipeline.decode_to_changes(spark, frames, genlog.table_registry())
 
-    def norm(df):
-        return {tuple(r[k] for k in ("_k_repo", "_k_path")):
-                (r["del"], r["full"], dict(r["m"] or {}), r["g"], r["s"],
-                 r["n_events"])
-                for r in df.collect()}
-
-    want = norm(fold_changes(changes, engine="arrow"))
-    assert want == norm(fold_changes(changes, engine="sql"))
-    assert want == norm(fold_changes(changes, engine="columnar"))
+    want = fold_oracle(changes)
+    assert want == norm_fold(fold_changes(changes))
     # tiny Arrow batches force cross-batch key-run carries in the
     # columnar fold's kernel
     before = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        assert want == norm(fold_changes(changes, engine="columnar"))
+        assert want == norm_fold(fold_changes(changes))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        before)
@@ -459,9 +366,8 @@ def test_late_cross_batch_changes_do_not_regress_state(spark, world, tmp_path):
 
 def test_hot_key_chunked_fold_correct(spark):
     """Skew path: one pathological hot key with 20k minimal-image updates
-    (plus interleaved I/D) folds identically through the two-phase chunked
-    variant — the 'salted repartitioning before the merge-apply stage' of
-    the north rule, exact because chunks are contiguous gtid ranges."""
+    (plus interleaved I/D) folds exactly — equal to the pure-Python
+    oracle, also when its run spans forty Arrow batches."""
     import random
 
     rng = random.Random(99)
@@ -497,21 +403,21 @@ def test_hot_key_chunked_fold_correct(spark):
         "pos long, next_pos long, ts long, op string, db string, "
         "tbl string, before map<string,string>, after map<string,string>")
 
-    def norm(d):
-        return {tuple(r[k] for k in ("_k_repo", "_k_path")):
-                (r["del"], r["full"], dict(r["m"] or {}), r["g"],
-                 r["n_events"])
-                for r in d.collect()}
-
-    plain = norm(fold_changes(df, engine="arrow"))
-    chunked = norm(fold_changes(df, chunk_size=512))
-    assert plain == chunked
+    plain = norm_fold(fold_changes(df))
+    assert plain == fold_oracle(df)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "512")
+        assert norm_fold(fold_changes(df)) == plain
+    finally:
+        spark.conf.set(key, before)
     hot = plain[("hot/r", "p")]
     assert hot[1] is True  # reinserted: full image
     assert hot[2]["content"] == "v20001"
     assert hot[2]["lang"] == "go"  # carried from the reinsert, not clobbered
     assert hot[3] == 20001
-    assert hot[4] == 20001
+    assert hot[5] == 20001
 
 
 def test_multi_table_stream_filters_to_target(spark, tmp_path):
@@ -659,6 +565,42 @@ def _write_frame_file(frames, path):
     pq.write_table(t, str(path))
 
 
+def test_replay_batch_multi_one_lake_matches_replay_batch(spark, world,
+                                                          tmp_path):
+    """``replay_batch`` is ``replay_batch_multi`` with one lake: same
+    stats, same lake state, same lineage counts, for a lake with no
+    recorded table identity (``None`` key: no table filter) and one
+    with it."""
+    import json as _json
+
+    result, frames_dir = world
+    frames = pipeline.read_frames(spark, frames_dir)
+    for table in (None, ("codehub", "repo_content")):
+        out = []
+        for tag in ("single", "multi"):
+            lake = LakeTable.create(
+                spark, str(tmp_path / f"{tag}-{table is None}"),
+                columns=genlog.table_spec().col_names,
+                key_cols=list(genlog.KEY_COLS), n_buckets=4, table=table)
+            if tag == "single":
+                stats = pipeline.replay_batch(
+                    spark, frames, lake, genlog.table_registry(), batch_id=0)
+            else:
+                stats = pipeline.replay_batch_multi(
+                    spark, frames, {table: lake}, genlog.table_registry(),
+                    batch_id=0)[table]
+            with open(tmp_path / f"{tag}-{table is None}" / "_lineage"
+                      / "batch-0.json") as f:
+                doc = _json.load(f)
+            out.append((stats, sorted(tuple(r) for r in
+                                      lake.to_df().collect()),
+                        doc["metrics"]["n_changes"],
+                        sorted(r["n_changes"] for r in doc["files"])))
+        assert out[0] == out[1]
+        assert out[0][0]["n_changes"] == len(result.changes)
+        assert out[0][2] == len(result.changes)
+
+
 def test_replay_batch_multi_fans_out_one_decode(spark, tmp_path):
     """Multi-table fan-out: ONE decode/assembly pass applies a mixed
     stream to several lake tables, each with its own key, exactly-once
@@ -755,10 +697,11 @@ def test_run_stream_multi_two_microbatches(spark, tmp_path):
     (second batch's rows depend on the persisted TABLE_MAP cache for
     nothing — each txn re-sends its maps — but the FORMAT_DESCRIPTION
     arrives only in batch 1 and must carry over via the meta store)."""
+    import json as _json
     import os as _os
     import time as _time
 
-    from binlog_spark.streaming.pipeline import run_stream_multi
+    from binlog_spark.streaming.pipeline import run_stream
 
     frames, registry, want_docs, want_stars = _two_table_world()
     # split between transactions: after the 2nd XID
@@ -783,7 +726,7 @@ def test_run_stream_multi_two_microbatches(spark, tmp_path):
         columns=["user", "repo", "n"], key_cols=["user", "repo"],
         n_buckets=2, table=("codehub", "stars_log"))
 
-    q = run_stream_multi(
+    q = run_stream(
         spark, str(d),
         {("codehub", "repo_content"): str(tmp_path / "slk_docs"),
          ("codehub", "stars_log"): str(tmp_path / "slk_stars")},
@@ -801,6 +744,14 @@ def test_run_stream_multi_two_microbatches(spark, tmp_path):
     assert stars == want_stars
     assert len(LakeTable(spark, str(tmp_path / "slk_docs"))
                .meta["applied_batches"]) >= 2
+    # every microbatch leaves a lineage record in EVERY lake
+    for name in ("slk_docs", "slk_stars"):
+        applied = LakeTable(spark, str(tmp_path / name)).meta[
+            "applied_batches"]
+        assert applied == ["stream-0", "stream-1"]
+        for bid in applied:
+            with open(tmp_path / name / "_lineage" / f"batch-{bid}.json") as f:
+                assert _json.load(f)["batch_id"] == bid
 
 
 def test_type_widening_mid_stream(spark, tmp_path):
@@ -887,7 +838,7 @@ def test_run_stream_multi_kill_and_resume(spark, tmp_path):
     import os as _os
     import time as _time
 
-    from binlog_spark.streaming.pipeline import run_stream_multi
+    from binlog_spark.streaming.pipeline import run_stream
     from binlog_spark.wire import constants as C
 
     frames, registry, want_docs, want_stars = _two_table_world()
@@ -912,8 +863,8 @@ def test_run_stream_multi_kill_and_resume(spark, tmp_path):
     ckpt = str(tmp_path / "rck")
 
     # phase 1: only the first file exists — the query drains it and stops
-    q = run_stream_multi(spark, str(d), lakes, registry, ckpt,
-                         max_files_per_trigger=1)
+    q = run_stream(spark, str(d), lakes, registry, ckpt,
+                   max_files_per_trigger=1)
     q.awaitTermination()
     mid_docs = LakeTable(spark, lakes[("codehub", "repo_content")])
     applied_mid = list(mid_docs.meta["applied_batches"])
@@ -922,8 +873,8 @@ def test_run_stream_multi_kill_and_resume(spark, tmp_path):
     # the rest of the stream lands; resume from the same checkpoint
     _write_frame_file(frames[cut:], d / "f2.parquet")
     _os.utime(d / "f2.parquet", (now - 10, now - 10))
-    q2 = run_stream_multi(spark, str(d), lakes, registry, ckpt,
-                          max_files_per_trigger=1)
+    q2 = run_stream(spark, str(d), lakes, registry, ckpt,
+                    max_files_per_trigger=1)
     q2.awaitTermination()
 
     docs = {(r["repo"], r["path"]): r["content"]

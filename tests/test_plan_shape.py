@@ -125,21 +125,6 @@ def test_ngram_jaccard_registered_with_hot_shingle_cut(spark, sf_dir):
     assert plans.has_broadcast_join(df), plan
 
 
-def test_prefold_partials_no_shuffle_after_windows(spark, frames):
-    """The opt-in map-side pre-fold adds ZERO exchanges on top of the
-    segment windows' single shuffle; only the partials move afterwards."""
-    from binlog_spark.operators.lww import prefold_partials
-    from binlog_spark.operators.transactions import assemble_transactions
-
-    meta = discover_stream_meta(frames)
-    decoded = decode_frames(spark, frames, meta, genlog.table_registry())
-    changes = assemble_transactions(
-        decoded, segment=pipeline.segment_expr(spark, meta))
-    partials = prefold_partials(changes)
-    # the one window exchange (segment) is all there is
-    assert plans.count_shuffles(partials) == 1, plans.physical_plan(partials)
-
-
 def test_exact_near_dup_block_guard(spark):
     """The O(B²) exact near-dup baseline fails fast above max_block
     instead of silently launching a quadratic stage (its at-scale
@@ -159,8 +144,8 @@ def test_exact_near_dup_block_guard(spark):
 
 
 def test_arrow_fold_single_key_shuffle(spark, frames):
-    """The default fold plan: ONE Exchange (hash on the salted key)
-    feeding an in-partition sort + the columnar Arrow fold — no second
+    """The fold plan: ONE Exchange (hash on the row key) feeding an
+    in-partition sort + the columnar Arrow fold — no second
     shuffle, no interpreted higher-order `aggregate(...)` lambda in the
     hot path, and no per-row map materialization (decode's window
     shuffle on `file` is upstream and expected)."""
@@ -170,16 +155,13 @@ def test_arrow_fold_single_key_shuffle(spark, frames):
     decoded = decode_frames(spark, frames, meta, genlog.table_registry())
     from binlog_spark.operators.transactions import assemble_transactions
     changes = assemble_transactions(decoded)
-    folded = fold_changes(changes)  # engine="columnar"
+    folded = fold_changes(changes)
     plan = plans.physical_plan(folded)
     # upstream window shuffle (file) + fold key shuffle = exactly 2 total
     assert plans.count_shuffles(folded) == 2, plan
     assert "aggregate(array_sort" not in plan, plan
     assert "MapInArrow" in plan, plan
     assert "map_from_arrays" in plan, plan
-
-    arrow_engine = fold_changes(changes, engine="arrow")
-    assert "MapInPandas" in plans.physical_plan(arrow_engine)
 
 
 def test_asof_join_is_one_keyed_window_no_join(spark, sf_dir):
