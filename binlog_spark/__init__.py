@@ -16,7 +16,9 @@ Public surface, by half of the pipeline:
   streaming from frame parquet or a raw-binlog archive, to one lake or
   several) / ``run_stream_ordered`` (name-ordered, mtime-immune),
   ``operators.rollup.RollupTable`` (incremental continuous aggregate),
-  ``streaming.stateful.running_lww`` (keyed state-store feed);
+  ``streaming.stateful.running_lww`` (keyed state-store feed),
+  ``streaming.windows`` (watermarked windows, ``activity_sessions`` on
+  the native ``session_window``);
 * training-data operators: ``operators.dedup`` / ``similarity`` /
   ``textstats`` / ``multimodal``;
 * deterministic test world: ``genlog.CdcWorldGenerator``.

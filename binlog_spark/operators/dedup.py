@@ -215,13 +215,6 @@ WHERE round(p.common / CAST(least(sa.sz, sb.sz) AS DOUBLE), 6)
 """
 
 
-def _shingle_hash(col):
-    """md5 hex prefix (28 bits) -> bigint; identical in DuckDB via
-    ('0x' || substr(md5(x),1,7))::BIGINT, and in the Arrow minhash
-    kernel via int(md5(x).hexdigest()[:7], 16)."""
-    return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long")
-
-
 def minhash_signature(df: DataFrame, n: int = 3, num_hashes: int = 16,
                       col: str = "text") -> DataFrame:
     """(doc_id, sig array<long>) MinHash signature — ONE shuffle-free

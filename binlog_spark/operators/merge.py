@@ -40,9 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-META_COLS = ["_gtid_seq", "_seq_in_txn"]
-
-
 def _bucket_expr(key_cols, n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
 

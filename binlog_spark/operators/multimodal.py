@@ -2,11 +2,11 @@
 
 Images/audio/video ride through the engine as ``binary`` columns with a
 typed metadata struct; feature extraction / decode / resize / frame-sample
-are Arrow-batched ``mapInPandas`` stages. The actual media codecs are not
-available in this container, so the decode step is STUBBED (clearly marked
-``NotImplementedError`` behind an import-try) while everything Spark-side —
-schema, batching, partitioning, UDF signatures, deterministic fallback
-features — is real and tested.
+are Arrow-batched ``mapInPandas`` stages. No media codec is wired in, so
+the decode step is a stub: the stages read the payload's raw bytes as
+pixels or samples (the codec-stub contract), while everything
+Spark-side — schema, batching, partitioning, UDF signatures,
+deterministic fallback features — is real and tested.
 """
 
 from __future__ import annotations
@@ -19,13 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_DIM = 16
-
-try:  # media codecs are not installed in this environment
-    import PIL.Image  # noqa: F401
-    _HAS_CODECS = True
-except Exception:
-    _HAS_CODECS = False
-
 
 def to_blob_table(df: DataFrame, col: str = "text") -> DataFrame:
     """Model a multimodal ingest table: payload as opaque binary + typed
@@ -40,15 +33,6 @@ def to_blob_table(df: DataFrame, col: str = "text") -> DataFrame:
             F.lit("text/plain").alias("mime"),
         ).alias("meta"),
     )
-
-
-def decode_media(payload: bytes):
-    """Real media decode — unavailable here by design."""
-    if not _HAS_CODECS:
-        raise NotImplementedError(
-            "media codecs are not installed in this environment; "
-            "extract_features uses the deterministic fallback featurizer")
-    raise NotImplementedError("codec path not implemented")
 
 
 def _fallback_features(buf: bytes) -> np.ndarray:

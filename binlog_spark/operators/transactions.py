@@ -65,33 +65,6 @@ def assemble_transactions(decoded: DataFrame) -> DataFrame:
     return committed.select(*[f.name for f in S.CHANGE_SCHEMA.fields])
 
 
-def ddl_stream(decoded: DataFrame) -> DataFrame:
-    """The DDL side channel (schema-evolution branch). The reference merely
-    logs-and-skips DDL (row_streamer.go:204-207); we act on it."""
-    order = [F.col("pos").asc(), F.col("seq_in_event").asc_nulls_first()]
-    w_run = (
-        Window.partitionBy("file").orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        decoded.withColumn(
-            "gtid_seq",
-            F.last(F.when(F.col("kind") == "gtid", F.col("gtid_seq")), True).over(w_run),
-        )
-        .where(F.col("kind") == "ddl")
-        .select(
-            "gtid_seq", "file", "pos", "ts", "db", "sql",
-            F.col("reason").alias("category"),
-        )
-    )
-
-
-def dead_letters(decoded: DataFrame) -> DataFrame:
-    return decoded.where(F.col("kind") == "deadletter").select(
-        "file", "pos", F.lit(0).alias("etype"), "reason"
-    )
-
-
 def transaction_summaries(changes: DataFrame) -> DataFrame:
     """Per-transaction positions — the resume-token bookkeeping
     (``Transaction{NowPosition, NextPosition}``, transaction.go:9-14)."""

@@ -39,38 +39,6 @@ CHANGE_SCHEMA = T.StructType(
     ]
 )
 
-# DDL side-channel rows (QUERY events classified as DDL; row_streamer.go:204-207
-# logs and skips these — we route them to the schema-evolution branch instead)
-DDL_SCHEMA = T.StructType(
-    [
-        T.StructField("gtid_seq", T.LongType(), True),
-        T.StructField("file", T.StringType(), False),
-        T.StructField("pos", T.LongType(), False),
-        T.StructField("ts", T.LongType(), False),
-        T.StructField("db", T.StringType(), True),
-        T.StructField("sql", T.StringType(), False),
-        T.StructField("category", T.StringType(), False),
-    ]
-)
-
-# dead-letter rows (events the rows pipeline rejects, e.g. INTVAR/RAND —
-# parity: row_streamer.go:331-339 treats them as errors; we quarantine)
-DEADLETTER_SCHEMA = T.StructType(
-    [
-        T.StructField("file", T.StringType(), False),
-        T.StructField("pos", T.LongType(), False),
-        T.StructField("etype", T.IntegerType(), False),
-        T.StructField("reason", T.StringType(), False),
-    ]
-)
-
-# the lake table being maintained (BASELINE.json input_hint)
-REPO_CONTENT_FIELDS = ["repo", "path", "commit", "lang", "content"]
-REPO_CONTENT_SCHEMA = T.StructType(
-    [T.StructField(f, T.StringType(), True) for f in REPO_CONTENT_FIELDS]
-)
-REPO_CONTENT_KEY = ("repo", "path")
-
 # decode-stage output: change rows plus marker/side-channel rows, before
 # transaction assembly fills gtid_seq/txn_id/seq_in_txn for change rows.
 # kind: change | gtid | begin | commit | rollback | ddl | deadletter

@@ -3,7 +3,8 @@
 The reference's only cross-event state is the single-threaded txn buffer
 + table-map cache (`/root/reference/row_streamer.go:91-96`); the engine's
 ``foreachBatch`` MERGE path persists per-key state in the lake manifest.
-This module adds the third Spark-native state mechanism — a true
+Beside the built-in watermarked windows and sessions (`windows.py`),
+this module adds the second Spark-native state mechanism — a true
 ``applyInPandasWithState`` operator — for consumers that want the
 current LWW winner per key pushed DOWNSTREAM as a stream (e.g. a cache
 invalidation feed) without reading the lake: state lives in the

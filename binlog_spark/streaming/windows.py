@@ -1,14 +1,15 @@
-"""Event-time windowed aggregation with watermark-driven late-data drop.
+"""Event-time windows and sessions with watermark-driven late-data drop.
 
 SURVEY §2.2 streaming rows: the reference has no watermarks (strict
 total order by (file, pos)); the engine's CDC path gets the equivalent
 protection from the GTID high-water mark (operators/merge.py). This
 module is the general event-time surface for DERIVED streams (metrics,
 rollups over the change feed): built-in ``withWatermark`` + ``window``
-— state is bounded because windows older than the watermark finalize
-and are evicted, and rows arriving later than the allowed lateness are
-dropped, exactly the Structured Streaming contract a 1000-executor
-deployment relies on for unbounded-source aggregations.
+or ``session_window`` — state is bounded because windows older than the
+watermark finalize and are evicted, and rows arriving later than the
+allowed lateness are dropped, exactly the Structured Streaming contract
+a 1000-executor deployment relies on for unbounded-source aggregations.
+Both operators run inside the JVM: no Python worker, no state protocol.
 """
 
 from __future__ import annotations
@@ -31,6 +32,20 @@ def tumbling_counts(stream: DataFrame, ts_col: str = "ts",
                  F.round(F.sum("value"), 6).alias("sum_value"))
             .select(F.col("window.start").alias("win_start"),
                     "n_events", "sum_value"))
+
+
+def activity_sessions(stream: DataFrame, gap: str) -> DataFrame:
+    """Per-key event-time sessions over columns ``k`` and ``ts``: a
+    session is a maximal run of events whose consecutive gaps stay at or
+    under ``gap``. In append mode a session emits one row once the
+    watermark (the max event time of earlier microbatches) passes its
+    last event plus ``gap``; an open session emits nothing."""
+    return (stream.withWatermark("ts", "0 seconds")
+            .groupBy("k", F.session_window("ts", gap))
+            .agg(F.unix_millis(F.min("ts")).alias("session_start_ms"),
+                 F.unix_millis(F.max("ts")).alias("session_end_ms"),
+                 F.count("*").alias("n_events"))
+            .select("k", "session_start_ms", "session_end_ms", "n_events"))
 
 
 def dedup_within_watermark(stream: DataFrame, keys=("gtid", "seq"),

@@ -84,10 +84,6 @@ def _bitmap_bytes(bits, count: int) -> bytes:
     return bytes(out)
 
 
-def bitmap_get(data, idx: int) -> bool:
-    return bool(data[idx // 8] & (1 << (idx % 8)))
-
-
 # ---------------------------------------------------------------------------
 # encoding
 # ---------------------------------------------------------------------------

@@ -85,7 +85,8 @@ def test_parse_handshake_salt_with_trailing_nul_bytes():
 
 
 def test_com_binlog_dump_layout():
-    pkt = D.make_com_binlog_dump(1234, 40961, "binlog.000007", flags=1)
+    pkt = D.make_com_binlog_dump(1234, 40961, "binlog.000007",
+                                 flags=D.BINLOG_DUMP_NON_BLOCK)
     assert pkt[0] == 0x12
     pos, flags, sid = struct.unpack_from("<IHI", pkt, 1)
     assert (pos, flags, sid) == (40961, 1, 1234)

@@ -11,12 +11,14 @@ green while the originals became dead code. These checks parse the
 SOURCE, not the imported dict, so shadowing cannot hide from them.
 """
 
+import ast
+import glob
 import os
 import re
 from collections import Counter
 
-SRC = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "binlog_spark", "queries.py")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SRC = os.path.join(ROOT, "binlog_spark", "queries.py")
 
 
 def _source():
@@ -77,3 +79,56 @@ def test_round5_surfacing_head():
         "cdc_schema_evolution", "cdc_replay_raw_files",
         "cdc_microbatch_fold_savings"]
     assert len(keys) == len(set(keys)) == len(ORACLES)
+
+
+# the registry and the protocol table keep names for the driver and for
+# the wire format, not for callers inside the repo
+_DEAD_CODE_EXEMPT = {"queries.py", os.path.join("wire", "constants.py")}
+
+
+def _module_level_names(tree):
+    """Functions, classes and assigned names at module level, including
+    those under a module-level ``if``/``try``."""
+    out, todo = [], list(tree.body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            out.append(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target])
+            out += [n.id for t in targets for n in ast.walk(t)
+                    if isinstance(n, ast.Name)]
+        elif isinstance(node, (ast.If, ast.Try)):
+            for block in ("body", "orelse", "finalbody", "handlers"):
+                todo += getattr(node, block, [])
+        elif isinstance(node, ast.ExceptHandler):
+            todo += node.body
+    return [n for n in out if not (n.startswith("__") and n.endswith("__"))]
+
+
+def test_no_unreferenced_module_level_names():
+    """Every module-level name in ``binlog_spark/`` (outside the registry
+    and the protocol table) is used by name somewhere: a name whose only
+    occurrence is its own definition is dead code."""
+    pkg = os.path.join(ROOT, "binlog_spark")
+    modules = glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+    corpus = list(modules) + glob.glob(os.path.join(ROOT, "bench*.py"))
+    for d in ("tests", "scripts", "cdcbench"):
+        corpus += glob.glob(os.path.join(ROOT, d, "**", "*.py"),
+                            recursive=True)
+    uses = Counter()
+    for path in corpus:
+        with open(path, encoding="utf-8") as f:
+            uses.update(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", f.read()))
+    defined = {}
+    for path in modules:
+        with open(path, encoding="utf-8") as f:
+            names = _module_level_names(ast.parse(f.read()))
+        defined[os.path.relpath(path, pkg)] = names
+    n_defs = Counter(n for names in defined.values() for n in names)
+    dead = sorted(f"{rel}:{name}" for rel, names in defined.items()
+                  if rel not in _DEAD_CODE_EXEMPT
+                  for name in set(names) if uses[name] <= n_defs[name])
+    assert not dead, f"module-level names never referenced: {dead}"

@@ -1,11 +1,12 @@
-"""transformWithStateInPandas sessions (streaming/sessions.py).
+"""Native event-time sessions (``streaming.windows.activity_sessions``).
 
-The merge/expiry core is pure and tested directly (runs everywhere);
-the end-to-end streaming run — state carried across microbatches,
-timer-driven close, open sessions emitting nothing — additionally needs
-``google.protobuf`` (PySpark's state-server protocol), which this
-sandbox does not ship, so that case skips itself here and runs where
-the dependency exists."""
+One streaming run covers every session rule: state carried across
+microbatches, a gap split inside one batch, the inclusive gap boundary,
+an out-of-order bridge, multiplicity, and an open session that never
+emits. Files are fed one per restart on a shared checkpoint (the
+``cdc_tws_event_sessions`` driver); their mtimes DECREASE, so the batch
+order shown here comes from the driver, not from the file source's
+mtime sort."""
 
 import os
 import sys
@@ -13,71 +14,19 @@ import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from binlog_spark.streaming.sessions import (  # noqa: E402
-    activity_sessions,
-    merge_sessions,
-    split_expired,
-)
+from binlog_spark.streaming.windows import activity_sessions  # noqa: E402
 
 T0 = 1_700_000_000_000_000  # us
 MIN = 60 * 1_000_000
-GAP = 30 * 60 * 1000  # 30 min in ms
 
 
 def ms(us):
     return us // 1000
 
 
-# ---------------------------------------------------------------- pure logic
-def test_merge_splits_on_gap():
-    # two events farther apart than the gap stay two sessions — even when
-    # they arrive in the same batch (the bug a naive min/max merge has)
-    got = merge_sessions([], [ms(T0), ms(T0 + 100 * MIN)], GAP)
-    assert got == [(ms(T0), ms(T0), 1),
-                   (ms(T0 + 100 * MIN), ms(T0 + 100 * MIN), 1)]
-
-
-def test_merge_within_gap_and_against_state():
-    st = merge_sessions([], [ms(T0)], GAP)
-    st = merge_sessions(st, [ms(T0 + 10 * MIN)], GAP)
-    assert st == [(ms(T0), ms(T0 + 10 * MIN), 2)]
-    # exactly at the gap boundary still merges (<=)
-    st2 = merge_sessions(st, [ms(T0 + 40 * MIN)], GAP)
-    assert st2 == [(ms(T0), ms(T0 + 40 * MIN), 3)]
-
-
-def test_late_event_bridges_two_sessions():
-    # out-of-order arrival between two open sessions fuses them when it
-    # is within the gap of BOTH (25min to each side, gap 30min)...
-    st = merge_sessions([], [ms(T0), ms(T0 + 50 * MIN)], GAP)
-    assert len(st) == 2
-    st = merge_sessions(st, [ms(T0 + 25 * MIN)], GAP)
-    assert st == [(ms(T0), ms(T0 + 50 * MIN), 3)]
-    # ...but an event farther than the gap from both bridges nothing
-    st2 = merge_sessions([], [ms(T0), ms(T0 + 100 * MIN)], GAP)
-    st2 = merge_sessions(st2, [ms(T0 + 50 * MIN)], GAP)
-    assert len(st2) == 3
-
-
-def test_split_expired_closes_only_provably_complete():
-    st = merge_sessions([], [ms(T0), ms(T0 + 100 * MIN)], GAP)
-    closed, open_ = split_expired(st, ms(T0 + 100 * MIN), GAP)
-    assert closed == [(ms(T0), ms(T0), 1)]
-    assert open_ == [(ms(T0 + 100 * MIN), ms(T0 + 100 * MIN), 1)]
-    closed2, open2 = split_expired(open_, ms(T0 + 131 * MIN), GAP)
-    assert closed2 == open_ and open2 == []
-
-
-def test_multiplicity_preserved():
-    st = merge_sessions([], [ms(T0)] * 5, GAP)
-    assert st == [(ms(T0), ms(T0), 5)]
-
-
-# ----------------------------------------------------------------- streaming
 def _write(d, name, rows, mtime):
     table = pa.table(
         {"k": [r[0] for r in rows],
@@ -87,51 +36,57 @@ def _write(d, name, rows, mtime):
     os.utime(path, (mtime, mtime))
 
 
+# one list per microbatch, in driver order
+BATCHES = [
+    # A: first event; its session continues in the next batch.
+    # E: first event, watermark stays at T0.
+    [("A", T0), ("E", T0)],
+    # A: second event in a later batch, same session (state carries).
+    # E: exactly one gap (30 m) after its last event, in a later batch:
+    # the boundary is inclusive, so it merges.
+    [("A", T0 + 10 * MIN), ("B", T0 + 5 * MIN), ("E", T0 + 30 * MIN)],
+    # D: two events more than one gap apart in one batch -> two sessions.
+    # F: 25 m from both neighbours, arriving last, bridges them into one.
+    # G: five events at the same ts -> one session, n_events == 5.
+    # The batch advances the watermark to T0 + 400 m: everything before G
+    # closes.
+    [("D", T0 + 100 * MIN), ("D", T0 + 200 * MIN),
+     ("F", T0 + 300 * MIN), ("F", T0 + 350 * MIN), ("F", T0 + 325 * MIN)]
+    + [("G", T0 + 400 * MIN)] * 5,
+    # C advances the watermark past G's session; C's own session stays
+    # open (nothing ever advances past it) -> must NOT emit.
+    [("C", T0 + 500 * MIN)],
+    [("C", T0 + 505 * MIN)],
+]
+
+
 def test_sessions_close_on_event_time_timer(spark, tmp_path):
-    # transformWithStateInPandas needs google.protobuf at runtime; the
-    # sessions module installs the vendored miniproto shim when the real
-    # wheel is absent, so this e2e runs everywhere (r4 directive 4).
-    # It also needs the RocksDB state store (typed state = one column
-    # family per state variable; the HDFS-backed default supports one).
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key, "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    watch = str(tmp_path / "in")
+    watch, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
     os.makedirs(watch)
     now = time.time()
-    # repo A: events at t0 and t0+10m (same session, split across TWO
-    # microbatches — state must carry over); repo B: one event.
-    _write(watch, "f1.parquet", [("A", T0)], now - 50)
-    _write(watch, "f2.parquet", [("A", T0 + 10 * MIN),
-                                 ("B", T0 + 5 * MIN)], now - 40)
-    # f3 advances the watermark past both sessions' last+gap (30m):
-    # timers fire, sessions close and emit. C's own session stays OPEN
-    # (nothing ever advances past it) -> must NOT emit.
-    _write(watch, "f3.parquet", [("C", T0 + 500 * MIN)], now - 30)
-    _write(watch, "f4.parquet", [("C", T0 + 505 * MIN)], now - 20)
-
-    try:
-        stream = (spark.readStream.schema("k string, ts timestamp")
-                  .option("maxFilesPerTrigger", 1).parquet(watch))
-        out = activity_sessions(stream, key_col="k", ts_col="ts",
-                                gap="30 minutes")
-        q = (out.writeStream.format("memory").queryName("sess")
-             .outputMode("append").trigger(availableNow=True).start())
+    for i, rows in enumerate(BATCHES):
+        _write(watch, f"f{i}.parquet", rows, now - 10 * i)
+        stream = spark.readStream.schema("k string, ts timestamp").parquet(
+            watch)
+        q = (activity_sessions(stream, gap="30 minutes").writeStream
+             .format("parquet").option("path", out)
+             .option("checkpointLocation", ckpt).outputMode("append")
+             .trigger(availableNow=True).start())
         q.awaitTermination()
-    finally:
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
 
-    rows = {r["k"]: r for r in spark.sql("SELECT * FROM sess").collect()}
-    assert set(rows) == {"A", "B"}, rows
+    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    rows = {r[0]: r for r in got}
+    assert set(rows) == {"A", "B", "D", "E", "F", "G"}, got
     a, b = rows["A"], rows["B"]
-    assert a["n_events"] == 2
-    assert a["session_start_ms"] == T0 // 1000
-    assert a["session_end_ms"] == (T0 + 10 * MIN) // 1000
-    assert b["n_events"] == 1
-    assert b["session_start_ms"] == b["session_end_ms"] == (
-        T0 + 5 * MIN) // 1000
+    assert a[3] == 2
+    assert a[1] == ms(T0)
+    assert a[2] == ms(T0 + 10 * MIN)
+    assert b[3] == 1
+    assert b[1] == b[2] == ms(T0 + 5 * MIN)
+    assert [r for r in got if r[0] != "A" and r[0] != "B"] == [
+        ("D", ms(T0 + 100 * MIN), ms(T0 + 100 * MIN), 1),
+        ("D", ms(T0 + 200 * MIN), ms(T0 + 200 * MIN), 1),
+        ("E", ms(T0), ms(T0 + 30 * MIN), 2),
+        ("F", ms(T0 + 300 * MIN), ms(T0 + 350 * MIN), 3),
+        ("G", ms(T0 + 400 * MIN), ms(T0 + 400 * MIN), 5),
+    ]
