@@ -8,10 +8,18 @@ effect. No Iceberg runtime ships in this sandbox, so the table format is a
 minimal parquet + JSON-manifest implementation of the same physical design:
 
 * data is hash-**bucketed by key** (``pmod(xxhash64(keys), n_buckets)``) —
-  a merge only shuffles on the key and only **rewrites the buckets that
-  contain changed keys** (copy-on-write at bucket granularity, the same
-  pruning Iceberg's MERGE INTO gets from partition-level copy-on-write);
-  hot repos spread across buckets because the key includes ``path``;
+  a merge **rewrites only the buckets that contain changed keys**
+  (copy-on-write at bucket granularity, the same pruning Iceberg's MERGE
+  INTO gets from partition-level copy-on-write); hot repos spread across
+  buckets because the key includes ``path``;
+* a merge is ONE Spark job with ONE shuffle: the folded delta is
+  hash-partitioned on ``_bucket`` and sorted by it, and one Arrow task per
+  partition then handles each of its buckets in turn — read that bucket's
+  live files, hash-join base and delta on the key in Arrow, apply the LWW
+  rule column by column, and write the bucket's single
+  ``part-00000.parquet`` (temp file + ``os.replace``, so a retried task
+  replaces its file). The base is never shuffled, and there is no Spark
+  join and no Spark file commit;
 * a tiny ``_meta.json`` manifest maps bucket → data version and records
   schema + applied batch ids + the GTID high-water mark; commits are
   atomic (write new data files, then ``os.replace`` the manifest);
@@ -26,15 +34,25 @@ minimal parquet + JSON-manifest implementation of the same physical design:
   old data files are read through the evolved schema (missing columns
   null), the Iceberg ALTER TABLE ADD COLUMN semantics.
 
+The lake path must be a POSIX path that the driver and every executor
+see (local disk, or a shared mount such as NFS): the manifest commit uses
+``os.replace`` and ``os.listdir``, and the merge tasks read and write the
+bucket files directly.
+
 At 100 TB: n_buckets scales to O(10^4); per-batch work is
-(decode) + (fold shuffle on key) + (join+rewrite of touched buckets only).
+(decode) + (fold shuffle on key) + (delta shuffle on bucket + per-bucket
+read/merge/write of touched buckets only).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import time
+import uuid
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +60,166 @@ from pyspark.sql import types as T
 
 def _bucket_expr(key_cols, n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
+
+
+def _arrow_schema(cols) -> pa.Schema:
+    """The stored row layout (``LakeTable._schema`` in Arrow types)."""
+    return pa.schema([pa.field(c, pa.string()) for c in cols]
+                     + [pa.field("_gtid_seq", pa.int64()),
+                        pa.field("_seq_in_txn", pa.int32())])
+
+
+def _ints(values, idx: np.ndarray) -> np.ndarray:
+    """``values[idx]`` as int64 numpy, 0 wherever ``idx < 0`` (or null)."""
+    if len(values) == 0:
+        return np.zeros(idx.size, np.int64)
+    arr = pc.fill_null(values, 0).to_numpy(zero_copy_only=False)
+    return np.where(idx >= 0, arr[np.maximum(idx, 0)], 0).astype(np.int64)
+
+
+def merge_bucket(base: pa.Table, delta: pa.Table, cols, key_cols) -> pa.Table:
+    """One bucket's MERGE in Arrow: ``base`` (stored rows, ``_arrow_schema``)
+    ⊕ ``delta`` (folded rows ``_k_*, del, full, m, g, s``) → the bucket's
+    new rows.
+
+    The hash join carries only row indices; every output column is one
+    ``take``. A delta row applies when it is newer than the base row's
+    ``(_gtid_seq, _seq_in_txn)`` (same gtid: equal-or-later seq), or when
+    there is no base row. An applied ``del`` drops the row; an applied
+    ``full`` replaces every column from ``m`` (absent → NULL); otherwise a
+    key present in ``m`` patches its column (a NULL value sets NULL) and
+    an absent key keeps the base value. A row left with a NULL key column
+    (a patch onto a missing base row) is dropped."""
+    nb, nd = base.num_rows, delta.num_rows
+    kd = [f"_k_{k}" for k in key_cols]
+    if nb == 0:
+        bi = np.full(nd, -1, np.int64)
+        di = np.arange(nd, dtype=np.int64)
+    else:
+        left = pa.table({**{n: pc.cast(base[k], pa.string())
+                            for n, k in zip(kd, key_cols)},
+                         "_bi": pa.array(np.arange(nb, dtype=np.int64))})
+        right = pa.table({**{n: pc.cast(delta[n], pa.string()) for n in kd},
+                          "_di": pa.array(np.arange(nd, dtype=np.int64))})
+        j = left.join(right, keys=kd, join_type="full outer",
+                      use_threads=False)
+        bi = pc.fill_null(j["_bi"], -1).to_numpy().astype(np.int64)
+        di = pc.fill_null(j["_di"], -1).to_numpy().astype(np.int64)
+    has_b, has_d = bi >= 0, di >= 0
+
+    dg, ds = _ints(delta["g"], di), _ints(delta["s"], di)
+    bg, bs = _ints(base["_gtid_seq"], bi), _ints(base["_seq_in_txn"], bi)
+    newer = has_d & (~has_b | (dg > bg) | ((dg == bg) & (ds >= bs)))
+    flags = {c: pc.fill_null(delta[c], False).to_numpy(zero_copy_only=False)
+             for c in ("del", "full")}
+    dc = np.maximum(di, 0)
+    keep = ~(newer & flags["del"][dc])
+    bi, di, dc, newer = bi[keep], di[keep], dc[keep], newer[keep]
+    full = newer & flags["full"][dc]
+
+    # the map's flattened entries: ``pos[j, r]`` is the entry index of
+    # column ``cols[j]`` in delta row ``r`` (-1 when the key is absent)
+    m = delta["m"].combine_chunks()
+    offs = np.asarray(m.offsets, dtype=np.int64)
+    lens = np.diff(offs)
+    lens[~m.is_valid().to_numpy(zero_copy_only=False)] = 0
+    rows = np.repeat(np.arange(nd, dtype=np.int64), lens)
+    ent = (np.arange(rows.size, dtype=np.int64)
+           - np.repeat(np.cumsum(lens) - lens, lens)
+           + np.repeat(offs[:-1], lens))
+    code = pc.fill_null(pc.index_in(m.keys, value_set=pa.array(
+        list(cols), pa.string())), -1).to_numpy(zero_copy_only=False)[ent]
+    pos = np.full((len(cols), nd), -1, np.int64)
+    hit = code >= 0
+    pos[code[hit], rows[hit]] = ent[hit]
+    items = pc.cast(m.items, pa.string())
+
+    out = {}
+    for jc, c in enumerate(cols):
+        e = np.where(di >= 0, pos[jc][dc], -1)
+        take_d = newer & (full | (e >= 0))
+        # one gather over [base column ++ map items]; index -1 → NULL
+        idx = np.where(take_d, np.where(e >= 0, nb + e, -1), bi)
+        src = pa.concat_arrays([
+            pc.cast(base[c], pa.string()).combine_chunks(), items])
+        out[c] = src.take(pa.array(idx, mask=idx < 0))
+    out["_gtid_seq"] = pa.array(
+        np.where(newer, dg[keep], bg[keep]), pa.int64())
+    out["_seq_in_txn"] = pa.array(
+        np.where(newer, ds[keep], bs[keep]).astype(np.int32), pa.int32())
+    merged = pa.table(out, schema=_arrow_schema(cols))
+    valid = None
+    for k in key_cols:
+        v = pc.is_valid(merged[k])
+        valid = v if valid is None else pc.and_(valid, v)
+    return merged.filter(valid)
+
+
+def _read_bucket(bucket_dir: str | None, schema: pa.Schema) -> pa.Table:
+    """A bucket's stored rows under the manifest schema: columns an older
+    file lacks read as null; ``.``/``_``-prefixed files (temp files,
+    ``.crc``, ``_SUCCESS``) are skipped."""
+    if bucket_dir is None:
+        return schema.empty_table()
+    import pyarrow.dataset as ds
+
+    return ds.dataset(bucket_dir, schema=schema,
+                      format="parquet").to_table(use_threads=False)
+
+
+def _write_bucket(table: pa.Table, bucket_dir: str):
+    """Write the bucket's one data file. The temp name is unique per
+    attempt and ``.``-prefixed (readers skip it); ``os.replace`` makes a
+    retried task replace the file rather than add a second one."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(bucket_dir, exist_ok=True)
+    tmp = os.path.join(bucket_dir, f".part-00000.{uuid.uuid4().hex}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(bucket_dir, "part-00000.parquet"))
+
+
+def _bucket_dir(path: str, bucket: int, version: int) -> str:
+    return os.path.join(path, "data", f"v{version:06d}", f"_bucket={bucket}")
+
+
+def _merge_kernel(path: str, version: int, live: dict, cols, key_cols):
+    """The ``mapInArrow`` body: input batches arrive sorted by
+    ``_bucket``; each bucket's delta rows are gathered (a bucket may span
+    batches), merged with its base and written to data version
+    ``version``. Yields one ``(bucket, rows)`` row per bucket."""
+    schema = _arrow_schema(cols)
+    out_schema = pa.schema([("bucket", pa.int64()), ("rows", pa.int64())])
+
+    def flush(bucket, pending):
+        base_v = live.get(str(bucket))
+        base = _read_bucket(None if base_v is None else
+                            _bucket_dir(path, bucket, base_v), schema)
+        merged = merge_bucket(base, pa.Table.from_batches(pending),
+                              cols, key_cols)
+        if merged.num_rows:
+            _write_bucket(merged, _bucket_dir(path, bucket, version))
+        return pa.RecordBatch.from_arrays(
+            [pa.array([bucket], pa.int64()),
+             pa.array([merged.num_rows], pa.int64())], schema=out_schema)
+
+    def run(batches):
+        cur, pending = None, []
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            b = rb.column("_bucket").to_numpy(zero_copy_only=False)
+            cuts = np.flatnonzero(b[1:] != b[:-1]) + 1
+            for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, b.size]):
+                if cur is not None and b[lo] != cur:
+                    yield flush(cur, pending)
+                    pending = []
+                cur = int(b[lo])
+                pending.append(rb.slice(int(lo), int(hi - lo)))
+        if cur is not None:
+            yield flush(cur, pending)
+
+    return run
 
 
 class LakeTable:
@@ -98,8 +276,7 @@ class LakeTable:
         return T.StructType(fields)
 
     def _bucket_dir(self, bucket: int, version: int) -> str:
-        return os.path.join(self.path, "data", f"v{version:06d}",
-                            f"_bucket={bucket}")
+        return _bucket_dir(self.path, bucket, version)
 
     def read(self, buckets=None, at_version: int | None = None) -> DataFrame:
         """Current snapshot (with merge metadata columns). Reading a subset
@@ -150,6 +327,23 @@ class LakeTable:
                    F.lit(self.meta["n_buckets"])),
         )
 
+    def merge_job(self, delta: DataFrame, version: int) -> DataFrame:
+        """The MERGE as one Spark job: ``delta`` (a folded delta with
+        ``_bucket``) is shuffled once on ``_bucket``, sorted by it within
+        each partition, and each bucket is merged and written to data
+        version ``version`` by ``merge_bucket`` in the same task. No fixed
+        partition count, so AQE may coalesce partitions, but hash
+        partitioning never splits a bucket across tasks. Collecting it
+        returns one ``(bucket, rows)`` row per bucket written."""
+        key_cols = self.meta["key"]
+        kernel = _merge_kernel(self.path, version, dict(self.meta["buckets"]),
+                               list(self.meta["columns"]), list(key_cols))
+        return (delta.select(*[f"_k_{k}" for k in key_cols], "del", "full",
+                             "m", "g", "s", "_bucket")
+                .repartition(F.col("_bucket"))
+                .sortWithinPartitions("_bucket")
+                .mapInArrow(kernel, "bucket long, rows long"))
+
     def merge_apply(self, folded: DataFrame, batch_id=None,
                     max_gtid: int | None = None,
                     changed_buckets: list | None = None,
@@ -163,13 +357,13 @@ class LakeTable:
         the caller already knows them (e.g. from its stats aggregation) —
         skips one Spark job; ``folded`` must then already carry ``_bucket``
         (see ``bucket_of``) and be persisted by the caller.
+
+        The rewrite is ``merge_job``: every bucket the delta touches is
+        read, merged and written inside one task, straight to the lake
+        path, which therefore must be a POSIX path every executor sees.
         """
         if batch_id is not None and batch_id in self.meta["applied_batches"]:
             return {"skipped": True, "batch_id": batch_id}
-
-        key_cols = self.meta["key"]
-        n_buckets = self.meta["n_buckets"]
-        cols = self.meta["columns"]
 
         caller_managed = changed_buckets is not None
         delta = folded if "_bucket" in folded.columns else self.bucket_of(folded)
@@ -196,62 +390,19 @@ class LakeTable:
             if not changed:
                 return self._commit_noop(batch_id, max_gtid)
 
-            base = self.read(changed).withColumn(
-                "_bucket", _bucket_expr(key_cols, n_buckets))
-
-            join_cond = [base[k] == delta[f"_k_{k}"] for k in key_cols]
-            j = base.alias("b").join(delta.alias("d"), join_cond, "full_outer")
-
-            has_delta = F.col("d.g").isNotNull()
-            has_base = F.col(f"b.{key_cols[0]}").isNotNull()
-            newer = has_delta & (
-                ~has_base
-                | (F.col("d.g") > F.col("b._gtid_seq"))
-                | ((F.col("d.g") == F.col("b._gtid_seq"))
-                   & (F.col("d.s") >= F.col("b._seq_in_txn")))
-            )
-            drop = newer & F.col("d.del")
-
-            out_cols = []
-            for c in cols:
-                applied = F.when(
-                    F.col("d.full"), F.col("d.m")[c]
-                ).when(
-                    F.map_contains_key(F.col("d.m"), F.lit(c)), F.col("d.m")[c]
-                ).otherwise(F.col(f"b.{c}"))
-                out_cols.append(
-                    F.when(newer, applied).otherwise(F.col(f"b.{c}")).alias(c))
-            out_cols.append(
-                F.when(newer, F.col("d.g"))
-                .otherwise(F.col("b._gtid_seq")).alias("_gtid_seq"))
-            out_cols.append(
-                F.when(newer, F.col("d.s"))
-                .otherwise(F.col("b._seq_in_txn")).alias("_seq_in_txn"))
-            out_cols.append(
-                F.coalesce(F.col("b._bucket"), F.col("d._bucket")).alias("_bucket"))
-
-            result = j.where(~drop).select(*out_cols)
-            # a pure PATCH onto a non-existent base row cannot produce a
-            # complete row; surface it rather than inventing nulls for keys
-            result = result.where(F.col(key_cols[0]).isNotNull())
-
             new_version = self.meta["version"] + 1
-            out_dir = os.path.join(self.path, "data", f"v{new_version:06d}")
-            (result.repartition(max(len(changed), 1), F.col("_bucket"))
-             .write.mode("overwrite").partitionBy("_bucket").parquet(out_dir))
+            written = {r["bucket"]: r["rows"]
+                       for r in self.merge_job(delta, new_version).collect()}
 
-            # a changed bucket can produce ZERO output rows (e.g. its only
-            # key was inserted and deleted within the batch, or every base
-            # row was dropped): partitionBy writes no directory for it, so
-            # commit only directories that exist and remove emptied buckets
-            # from the manifest — pointing at a never-written path would
-            # make every later read crash
-            written = {d.split("=", 1)[1] for d in os.listdir(out_dir)
-                       if d.startswith("_bucket=")} if os.path.isdir(out_dir) else set()
+            # a merged bucket can hold ZERO rows (e.g. its only key was
+            # inserted and deleted within the batch, or every base row was
+            # dropped): the kernel writes no file for it, so it leaves the
+            # manifest — pointing at a never-written path would make every
+            # later read crash
             meta = dict(self.meta)
             meta["buckets"] = dict(meta["buckets"])
-            for b in changed:
-                if str(b) in written:
+            for b, rows in written.items():
+                if rows:
                     meta["buckets"][str(b)] = new_version
                 else:
                     meta["buckets"].pop(str(b), None)
@@ -270,7 +421,8 @@ class LakeTable:
             }]
             self._commit_meta(meta)
             return {"skipped": False, "batch_id": batch_id,
-                    "buckets_rewritten": len(changed),
+                    "buckets_rewritten": len(written),
+                    "rows_written": sum(written.values()),
                     "version": new_version}
         finally:
             if not caller_managed:
@@ -283,7 +435,8 @@ class LakeTable:
         if max_gtid is not None:
             meta["last_gtid"] = max(meta["last_gtid"], int(max_gtid))
         self._commit_meta(meta)
-        return {"skipped": False, "batch_id": batch_id, "buckets_rewritten": 0}
+        return {"skipped": False, "batch_id": batch_id, "buckets_rewritten": 0,
+                "rows_written": 0}
 
     # ------------------------------------------------------------- maintenance
     def vacuum(self) -> dict:

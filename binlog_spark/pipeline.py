@@ -4,7 +4,10 @@ The Spark lifecycle equivalent of the reference's flagship path
 (`RowStreamer.Stream`, `/root/reference/row_streamer.go:66-88` — traced in
 SURVEY.md §3/E1): one shuffle-free Arrow decode stage, one window shuffle
 per binlog file for transaction assembly, one key shuffle for the fold,
-and a bucket-pruned copy-on-write MERGE.
+and a bucket-pruned copy-on-write MERGE — one shuffle of the folded delta
+by bucket, after which each changed bucket is read, merged and written
+inside one Arrow task (``LakeTable.merge_job``), so the lake path must be
+a POSIX path every executor sees.
 """
 
 from __future__ import annotations
@@ -23,8 +26,10 @@ from .operators.lww import fold_changes
 from .operators.merge import LakeTable
 from .operators.transactions import assemble_transactions
 
+# ``ADD [COLUMN] [IF NOT EXISTS] name``; the name may be backquoted
 _ADD_COLUMN_RE = re.compile(
-    r"alter\s+table\s+(\S+)\s+add\s+(?:column\s+)?(\w+)", re.IGNORECASE)
+    r"alter\s+table\s+(\S+)\s+add\s+(?:column\s+)?"
+    r"(?:if\s+not\s+exists\s+)?(`[^`]+`|\w+)", re.IGNORECASE)
 
 # sentinel for replay_batch(stream_meta=...): skip the discovery job and
 # let the decode stage self-discover TABLE_MAPs from its own partitions
@@ -67,7 +72,7 @@ def apply_ddls(lake: LakeTable, ddls: list):
             names = {tbl.lower(), f"{db}.{tbl}".lower()}
             if token not in names:
                 continue
-        lake.evolve_add_column(m.group(2))
+        lake.evolve_add_column(m.group(2).strip("`"))
 
 
 def replay_batch(spark: SparkSession, frames: DataFrame, lake: LakeTable,
@@ -125,7 +130,8 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
     #      the first one materializes decode+assemble+fold, and the DDL
     #      side channel rides along in an accumulator instead of its own
     #      job
-    #   3. per lake, the MERGE join + bucket rewrite itself
+    #   3. per lake, the MERGE: one delta shuffle by bucket, then each
+    #      changed bucket read, merged and written in one task
     t_start = _time.perf_counter()
     if stream_meta is INLINE_DISCOVERY:
         meta = {"checksum_alg": 1, "table_maps": {}}
@@ -193,6 +199,8 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
                     secs = _time.perf_counter() - t_start
                     write_lineage(changes, lake.path, batch_id, metrics={
                         "n_changes": n_changes, "n_ddls": len(ddls),
+                        "buckets_rewritten": stats.get("buckets_rewritten", 0),
+                        "rows_written": stats.get("rows_written", 0),
                         "seconds": round(secs, 3),
                         "events_per_sec": (round(n_changes / secs, 1)
                                            if secs else None),

@@ -73,6 +73,35 @@ def test_merge_apply_final_state_sha_parity(spark, world, tmp_path):
             assert g[col] == row[col], (key, col)
 
 
+def test_merge_reports_rows_written(spark, world, tmp_path):
+    """``merge_apply`` stats and the lineage record's ``metrics`` carry
+    the buckets rewritten and the rows written: on an empty lake every
+    live row; on the second batch the rows of the rewritten buckets."""
+    import json
+
+    result, frames_dir = world
+    lake = LakeTable.create(spark, str(tmp_path / "lake_rw"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=8)
+    frames = pipeline.read_frames(spark, frames_dir)
+    first = F.col("file") == "binlog.000000"
+    for bid, part in enumerate((frames.where(first), frames.where(~first))):
+        stats = pipeline.replay_batch(spark, part, lake,
+                                      genlog.table_registry(), batch_id=bid)
+        fresh = [int(b) for b, v in lake.meta["buckets"].items()
+                 if v == stats["version"]]
+        assert stats["buckets_rewritten"] == len(fresh) > 0
+        assert stats["rows_written"] == lake.read(fresh).count()
+        with open(tmp_path / "lake_rw" / "_lineage"
+                  / f"batch-{bid}.json") as f:
+            metrics = json.load(f)["metrics"]
+        assert metrics["buckets_rewritten"] == stats["buckets_rewritten"]
+        assert metrics["rows_written"] == stats["rows_written"]
+        if bid == 0:
+            assert stats["rows_written"] == lake.to_df().count()
+    assert lake.to_df().count() == len(result.final_state)
+
+
 def test_merge_apply_is_idempotent(spark, world, tmp_path):
     result, frames_dir = world
     lake = LakeTable.create(spark, str(tmp_path / "lake2"),
@@ -1096,6 +1125,21 @@ def test_foreign_table_ddl_does_not_evolve_lake(spark, tmp_path):
     assert "forks" not in lake.meta["columns"]
     assert "stars" in lake.meta["columns"]       # bare own-table name
     assert "watchers" in lake.meta["columns"]    # db-qualified own table
+
+
+def test_add_column_backquoted_and_if_not_exists(spark, tmp_path):
+    """A backquoted column name and MariaDB's ``IF NOT EXISTS`` evolve
+    the named column (they used to evolve ``COLUMN`` and ``IF``, and the
+    real column's values were silently dropped from the lake)."""
+    lake = LakeTable.create(spark, str(tmp_path / "lake_qddl"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=2,
+                            table=("codehub", "repo_content"))
+    pipeline.apply_ddls(lake, [
+        {"sql": "ALTER TABLE repo_content ADD COLUMN `stars` INT"},
+        {"sql": "ALTER TABLE repo_content ADD COLUMN IF NOT EXISTS stars INT"},
+    ])
+    assert lake.meta["columns"] == genlog.table_spec().col_names + ["stars"]
 
 
 def test_bucket_emptied_within_batch_stays_readable(spark, tmp_path):

@@ -854,3 +854,28 @@ def test_bh_fdr_is_jvm_only(spark, sf_dir):
     # expressions; the only windows run over the bounded 120-row frame
     for py in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
         assert py not in plan, plan
+
+
+def test_merge_job_one_bucket_exchange_no_join_no_writer(spark, tmp_path):
+    """The MERGE: ONE Exchange (hash on ``_bucket``) feeding a sort and
+    the per-bucket Arrow kernel, which reads, merges and writes each
+    bucket itself — no Spark join (the base is never shuffled) and no
+    Spark file-write command (no per-file Hadoop commit)."""
+    from binlog_spark.operators.merge import LakeTable
+
+    lake = LakeTable.create(spark, str(tmp_path / "lake"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=4)
+    delta = lake.bucket_of(spark.createDataFrame(
+        [("r", "p", False, True, {"repo": "r", "path": "p"}, 1, 0, 1)],
+        "_k_repo string, _k_path string, del boolean, full boolean, "
+        "m map<string,string>, g long, s int, n_events long"))
+    job = lake.merge_job(delta, 1)
+    plan = plans.physical_plan(job)
+    assert plans.count_shuffles(job) == 1, plan
+    assert "hashpartitioning(_bucket" in plan, plan
+    assert "MapInArrow" in plan, plan
+    assert "Join" not in plan, plan
+    for writer in ("InsertIntoHadoopFsRelation", "WriteFiles",
+                   "DataWritingCommand"):
+        assert writer not in plan, plan
