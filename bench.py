@@ -163,7 +163,6 @@ def time_replay(spark, frames_dir: str, n_changes: int, workdir: str,
     # — and the separate schema-discovery job is skipped (2 actions/batch)
     stats = pipeline.replay_batch(spark, frames, lake,
                                   genlog.table_registry(), batch_id=0,
-                                  record_lineage=False,
                                   stream_meta=pipeline.INLINE_DISCOVERY)
     dt = time.perf_counter() - t0
     assert stats["n_changes"] == n_changes, (stats, n_changes)

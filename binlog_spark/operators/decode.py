@@ -15,7 +15,7 @@ shuffle-free Arrow stages:
    (`row_streamer.go:41-44,220-243`), including its refresh-on-new-TABLE_MAP
    schema-change hook (`row_streamer.go:220-223`).
 
-2. **Main decode** (`decode_frames`): a stateless ``mapInPandas`` over the
+2. **Main decode** (`decode_frames`): a stateless ``mapInArrow`` over the
    full frame set under *any* partitioning — each frame resolves its table
    schema from the broadcast index by (file, table_id, pos) binary search,
    so decode parallelism is unconstrained by transaction or file
@@ -334,8 +334,7 @@ def decode_batch(pdf: pd.DataFrame, ctx, ddl_acc=None,
 
 
 def decode_frames(spark: SparkSession, frames: DataFrame, stream_meta: dict,
-                  registry: dict, ddl_acc=None,
-                  engine: str = "arrow") -> DataFrame:
+                  registry: dict, ddl_acc=None) -> DataFrame:
     """Stateless vectorized decode of every frame → DECODE_OUTPUT_SCHEMA.
 
     ``ddl_acc``: optional CollectionAccumulator; DDL rows are ALSO pushed
@@ -344,34 +343,24 @@ def decode_frames(spark: SparkSession, frames: DataFrame, stream_meta: dict,
     main pass instead of spending a separate Spark job on it. Consumers
     must dedupe by (file, pos): accumulators re-fire on task retries.
 
-    ``engine='arrow'`` (default) runs the columnar cell splitter over
-    ``mapInArrow`` (operators/colsplit.py — per-column numpy offset
-    vectors, Arrow-native map assembly, no per-row Python on NULL-free
-    rows); ``engine='pandas'`` keeps the scalar reference kernel — the
-    two are cross-checked row-for-row in tests/test_colsplit.py.
+    Runs the columnar cell splitter over ``mapInArrow``
+    (operators/colsplit.py — per-column numpy offset vectors,
+    Arrow-native map assembly, no per-row Python on NULL-free rows); the
+    scalar ``decode_batch`` is its fallback and its row-for-row oracle in
+    tests/test_colsplit.py.
     """
+    from . import colsplit
+
     bc = spark.sparkContext.broadcast((stream_meta, registry))
-    selected = frames.select("file", "pos", "etype", "frame")
 
-    if engine == "arrow":
-        from . import colsplit
-
-        def _decode_arrow(batches):
-            meta, reg = bc.value
-            ctx = build_decode_context(meta, reg)
-            for rb in batches:
-                yield from colsplit.decode_batch_arrow(rb, ctx, ddl_acc)
-
-        return selected.mapInArrow(_decode_arrow,
-                                   schema=S.DECODE_OUTPUT_SCHEMA)
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _decode_arrow(batches):
         meta, reg = bc.value
         ctx = build_decode_context(meta, reg)
-        for pdf in batches:
-            yield decode_batch(pdf, ctx, ddl_acc)
+        for rb in batches:
+            yield from colsplit.decode_batch_arrow(rb, ctx, ddl_acc)
 
-    return selected.mapInPandas(_decode, schema=S.DECODE_OUTPUT_SCHEMA)
+    return frames.select("file", "pos", "etype", "frame").mapInArrow(
+        _decode_arrow, schema=S.DECODE_OUTPUT_SCHEMA)
 
 
 def _aux(file, pos, next_pos, ts, gtid, kind, db=None, sql=None, reason=None):

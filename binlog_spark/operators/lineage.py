@@ -8,17 +8,18 @@ stream landed in which lake version.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .merge import write_json_atomic
+
 
 def lineage_summary(changes: DataFrame) -> DataFrame:
-    """Per binlog file: position range + op counts for an applied batch."""
-    return changes.groupBy("file").agg(
+    """Per table and binlog file: position range + op counts."""
+    return changes.groupBy("db", "tbl", "file").agg(
         F.min("pos").alias("min_pos"),
         F.max("next_pos").alias("max_next_pos"),
         F.min("gtid_seq").alias("min_gtid"),
@@ -30,16 +31,26 @@ def lineage_summary(changes: DataFrame) -> DataFrame:
     )
 
 
-def write_lineage(changes: DataFrame, lake_path: str, batch_id,
-                  metrics: dict | None = None) -> list:
-    """Persist the per-file lineage plus batch throughput metrics
-    (events applied, wall seconds, events/sec) next to the lake data."""
-    rows = [r.asDict() for r in lineage_summary(changes).collect()]
+def write_record(lake_path: str, batch_id, rows: list,
+                 metrics: dict | None = None) -> list:
+    """Write ``_lineage/batch-<id>.json`` from the ``lineage_summary``
+    rows (dicts) the lake applied, without their ``db``/``tbl``, plus the
+    batch's metrics. Returns the record's rows."""
+    files = [{k: v for k, v in r.items() if k not in ("db", "tbl")}
+             for r in rows]
     out_dir = os.path.join(lake_path, "_lineage")
     os.makedirs(out_dir, exist_ok=True)
-    doc = {"batch_id": batch_id, "wall_time": time.time(), "files": rows}
+    doc = {"batch_id": batch_id, "wall_time": time.time(), "files": files}
     if metrics:
         doc["metrics"] = metrics
-    with open(os.path.join(out_dir, f"batch-{batch_id}.json"), "w") as f:
-        json.dump(doc, f, default=str)
-    return rows
+    write_json_atomic(os.path.join(out_dir, f"batch-{batch_id}.json"), doc,
+                      default=str)
+    return files
+
+
+def write_lineage(changes: DataFrame, lake_path: str, batch_id,
+                  metrics: dict | None = None) -> list:
+    """``lineage_summary`` of ``changes``, then ``write_record``: the
+    record as one Spark job of its own."""
+    rows = [r.asDict() for r in lineage_summary(changes).collect()]
+    return write_record(lake_path, batch_id, rows, metrics)

@@ -19,7 +19,8 @@ minimal parquet + JSON-manifest implementation of the same physical design:
   rule column by column, and write the bucket's single
   ``part-00000.parquet`` (temp file + ``os.replace``, so a retried task
   replaces its file). The base is never shuffled, and there is no Spark
-  join and no Spark file commit;
+  join and no Spark file commit. The job's ``(bucket, rows)`` output is
+  the list of changed buckets, so no other job looks for them;
 * a tiny ``_meta.json`` manifest maps bucket → data version and records
   schema + applied batch ids + the GTID high-water mark; commits are
   atomic (write new data files, then ``os.replace`` the manifest);
@@ -58,8 +59,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+
 def _bucket_expr(key_cols, n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
+
+
+def write_json_atomic(path: str, obj, **dump_kw):
+    """Write ``obj`` as JSON to ``path`` through a ``.tmp`` sibling and
+    ``os.replace``: a reader sees the old file or the whole new one, and
+    a dump that raises leaves ``path`` as it was."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, **dump_kw)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def _arrow_schema(cols) -> pa.Schema:
@@ -238,10 +254,7 @@ class LakeTable:
             return json.load(f)
 
     def _commit_meta(self, meta: dict):
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path)  # atomic manifest swap
+        write_json_atomic(self._meta_path, meta)  # atomic manifest swap
         self.meta = meta
 
     @classmethod
@@ -261,10 +274,7 @@ class LakeTable:
             "applied_batches": [],
             "last_gtid": -1,
         }
-        tmp = os.path.join(path, "_meta.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(path, "_meta.json"))
+        write_json_atomic(os.path.join(path, "_meta.json"), meta)
         return cls(spark, path)
 
     # ------------------------------------------------------------------ read
@@ -320,12 +330,8 @@ class LakeTable:
 
     def bucket_of(self, folded: DataFrame) -> DataFrame:
         """Attach the table's bucket id to a folded delta (`_k_*` keys)."""
-        key_cols = self.meta["key"]
-        return folded.withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(*[F.col(f"_k_{k}") for k in key_cols]),
-                   F.lit(self.meta["n_buckets"])),
-        )
+        return folded.withColumn("_bucket", _bucket_expr(
+            [f"_k_{k}" for k in self.meta["key"]], self.meta["n_buckets"]))
 
     def merge_job(self, delta: DataFrame, version: int) -> DataFrame:
         """The MERGE as one Spark job: ``delta`` (a folded delta with
@@ -353,19 +359,20 @@ class LakeTable:
         Exactly-once: if ``batch_id`` was already applied, no-op; row-level
         (gtid, seq) guards make re-application idempotent regardless.
 
-        ``changed_buckets``: pass the delta's distinct ``_bucket`` values if
-        the caller already knows them (e.g. from its stats aggregation) —
-        skips one Spark job; ``folded`` must then already carry ``_bucket``
-        (see ``bucket_of``) and be persisted by the caller.
-
-        The rewrite is ``merge_job``: every bucket the delta touches is
-        read, merged and written inside one task, straight to the lake
-        path, which therefore must be a POSIX path every executor sees.
+        One path: the delta rows above the GTID watermark go through
+        ``merge_job``, which reads, merges and writes every bucket the
+        delta touches inside one task, straight to the lake path (so it
+        must be a POSIX path every executor sees). The job's
+        ``(bucket, rows)`` output is the list of changed buckets; when it
+        is empty, the batch commits as a no-op. ``changed_buckets=[]``
+        says the caller knows the delta is empty: the no-op commits
+        without running a job. Any other value is ignored.
         """
         if batch_id is not None and batch_id in self.meta["applied_batches"]:
             return {"skipped": True, "batch_id": batch_id}
+        if changed_buckets == []:
+            return self._commit_noop(batch_id, max_gtid)
 
-        caller_managed = changed_buckets is not None
         delta = folded if "_bucket" in folded.columns else self.bucket_of(folded)
         # GTID high-water-mark guard: in an ordered CDC stream every new
         # batch's per-key folded gtid exceeds everything already applied,
@@ -381,52 +388,42 @@ class LakeTable:
         hwm = self.meta.get("last_gtid", -1) if enforce_gtid_watermark else -1
         if hwm is not None and hwm >= 0:
             delta = delta.where(F.col("g") > F.lit(hwm))
-        if not caller_managed:
-            delta.persist()
-        try:
-            changed = (list(changed_buckets) if caller_managed else
-                       [r["_bucket"] for r in
-                        delta.select("_bucket").distinct().collect()])
-            if not changed:
-                return self._commit_noop(batch_id, max_gtid)
+        new_version = self.meta["version"] + 1
+        written = {r["bucket"]: r["rows"]
+                   for r in self.merge_job(delta, new_version).collect()}
+        if not written:
+            return self._commit_noop(batch_id, max_gtid)
 
-            new_version = self.meta["version"] + 1
-            written = {r["bucket"]: r["rows"]
-                       for r in self.merge_job(delta, new_version).collect()}
-
-            # a merged bucket can hold ZERO rows (e.g. its only key was
-            # inserted and deleted within the batch, or every base row was
-            # dropped): the kernel writes no file for it, so it leaves the
-            # manifest — pointing at a never-written path would make every
-            # later read crash
-            meta = dict(self.meta)
-            meta["buckets"] = dict(meta["buckets"])
-            for b, rows in written.items():
-                if rows:
-                    meta["buckets"][str(b)] = new_version
-                else:
-                    meta["buckets"].pop(str(b), None)
-            meta["version"] = new_version
-            if batch_id is not None:
-                meta["applied_batches"] = meta["applied_batches"] + [batch_id]
-            if max_gtid is not None:
-                meta["last_gtid"] = max(meta["last_gtid"], int(max_gtid))
-            # snapshot log: full bucket map per committed version (tiny —
-            # n_buckets entries), enabling time-travel reads and making
-            # vacuum() deletions auditable. Iceberg snapshot analogue.
-            meta["history"] = list(meta.get("history", [])) + [{
-                "version": new_version, "batch_id": batch_id,
-                "buckets": dict(meta["buckets"]),
-                "last_gtid": meta["last_gtid"],
-            }]
-            self._commit_meta(meta)
-            return {"skipped": False, "batch_id": batch_id,
-                    "buckets_rewritten": len(written),
-                    "rows_written": sum(written.values()),
-                    "version": new_version}
-        finally:
-            if not caller_managed:
-                delta.unpersist()
+        # a merged bucket can hold ZERO rows (e.g. its only key was
+        # inserted and deleted within the batch, or every base row was
+        # dropped): the kernel writes no file for it, so it leaves the
+        # manifest — pointing at a never-written path would make every
+        # later read crash
+        meta = dict(self.meta)
+        meta["buckets"] = dict(meta["buckets"])
+        for b, rows in written.items():
+            if rows:
+                meta["buckets"][str(b)] = new_version
+            else:
+                meta["buckets"].pop(str(b), None)
+        meta["version"] = new_version
+        if batch_id is not None:
+            meta["applied_batches"] = meta["applied_batches"] + [batch_id]
+        if max_gtid is not None:
+            meta["last_gtid"] = max(meta["last_gtid"], int(max_gtid))
+        # snapshot log: full bucket map per committed version (tiny —
+        # n_buckets entries), enabling time-travel reads and making
+        # vacuum() deletions auditable. Iceberg snapshot analogue.
+        meta["history"] = list(meta.get("history", [])) + [{
+            "version": new_version, "batch_id": batch_id,
+            "buckets": dict(meta["buckets"]),
+            "last_gtid": meta["last_gtid"],
+        }]
+        self._commit_meta(meta)
+        return {"skipped": False, "batch_id": batch_id,
+                "buckets_rewritten": len(written),
+                "rows_written": sum(written.values()),
+                "version": new_version}
 
     def _commit_noop(self, batch_id, max_gtid):
         meta = dict(self.meta)

@@ -39,12 +39,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .merge import _bucket_expr, write_json_atomic
+
 AGG_COLS = ["n_rows", "sum_value", "min_value", "max_value"]
-
-
-def _bucket_expr(group_cols, n_buckets: int):
-    return F.pmod(F.xxhash64(*[F.col(c) for c in group_cols]),
-                  F.lit(n_buckets))
 
 
 class RollupTable:
@@ -70,17 +67,11 @@ class RollupTable:
         meta = {"group_cols": list(group_cols), "n_buckets": n_buckets,
                 "buckets": {}, "version": 0, "applied_batches": [],
                 "deltas": [], "compact_every": compact_every}
-        tmp = os.path.join(path, "_meta.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(path, "_meta.json"))
+        write_json_atomic(os.path.join(path, "_meta.json"), meta)
         return cls(spark, path)
 
     def _commit_meta(self, meta: dict):
-        tmp = os.path.join(self.path, "_meta.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.path, "_meta.json"))
+        write_json_atomic(os.path.join(self.path, "_meta.json"), meta)
         self.meta = meta
 
     def _schema(self) -> T.StructType:

@@ -8,6 +8,14 @@ and a bucket-pruned copy-on-write MERGE — one shuffle of the folded delta
 by bucket, after which each changed bucket is read, merged and written
 inside one Arrow task (``LakeTable.merge_job``), so the lake path must be
 a POSIX path every executor sees.
+
+A batch runs these Spark actions: schema discovery (unless the meta is
+passed in), one summary aggregate over the cached change set, and one
+MERGE job per lake with rows in the batch. The summary is the only pass
+that reads decode and assembly, it completes the DDL side channel, and
+its rows give each lake its change count, its GTID high-water mark and
+its lineage record. The fold runs inside the MERGE job, its only
+consumer, so the folded delta is never cached or aggregated.
 """
 
 from __future__ import annotations
@@ -21,7 +29,7 @@ from pyspark.sql import functions as F
 
 from . import schema as S
 from .operators.decode import decode_frames, discover_stream_meta
-from .operators.lineage import write_lineage
+from .operators.lineage import lineage_summary, write_record
 from .operators.lww import fold_changes
 from .operators.merge import LakeTable
 from .operators.transactions import assemble_transactions
@@ -76,7 +84,7 @@ def apply_ddls(lake: LakeTable, ddls: list):
 
 
 def replay_batch(spark: SparkSession, frames: DataFrame, lake: LakeTable,
-                 registry: dict, batch_id=None, record_lineage: bool = True,
+                 registry: dict, batch_id=None,
                  stream_meta: dict | None = None) -> dict:
     """Decode+apply one (micro)batch of frames into the lake table.
 
@@ -90,13 +98,11 @@ def replay_batch(spark: SparkSession, frames: DataFrame, lake: LakeTable,
     key = tuple(table) if table else None
     return replay_batch_multi(spark, frames, {key: lake}, registry,
                               batch_id=batch_id,
-                              record_lineage=record_lineage,
                               stream_meta=stream_meta)[key]
 
 
 def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
                        registry: dict, batch_id=None,
-                       record_lineage: bool = True,
                        stream_meta: dict | None = None) -> dict:
     """One decode pass fanned out to one or more lake tables.
 
@@ -108,8 +114,9 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
     (`row_streamer.go:33-39`), with per-table exactly-once (each lake
     tracks its own batch ids / GTID watermark) and per-table DDL routing
     (``apply_ddls`` matches the statement's table token against each
-    lake's identity). With ``record_lineage`` and a ``batch_id``, every
-    lake gets its ``_lineage/batch-<id>.json``.
+    lake's identity). With a ``batch_id``, every lake that applies the
+    batch gets its ``_lineage/batch-<id>.json``; a lake that already
+    applied it keeps the record it has.
 
     ``stream_meta``: pass a pre-merged TABLE_MAP index (streaming keeps an
     accumulated one across microbatches) to skip the discovery job.
@@ -126,12 +133,14 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
     # Spark actions per batch, everything else pipelined inside them:
     #   1. schema discovery (tiny collect over TABLE_MAP/FORMAT_DESC
     #      frames) — skipped with a passed or inline meta
-    #   2. per lake, per-bucket stats over the folded delta (collect) —
-    #      the first one materializes decode+assemble+fold, and the DDL
-    #      side channel rides along in an accumulator instead of its own
-    #      job
-    #   3. per lake, the MERGE: one delta shuffle by bucket, then each
-    #      changed bucket read, merged and written in one task
+    #   2. the summary: one small aggregate by (db, tbl, file) over the
+    #      cached change set. It materializes decode+assemble into the
+    #      cache, completes the DDL accumulator before any lake evolves,
+    #      and its rows give each lake its change count, its max gtid
+    #      and its lineage record
+    #   3. per lake with rows, the MERGE: the fold, one delta shuffle by
+    #      bucket, then each changed bucket read, merged and written in
+    #      one task
     t_start = _time.perf_counter()
     if stream_meta is INLINE_DISCOVERY:
         meta = {"checksum_alg": 1, "table_maps": {}}
@@ -140,80 +149,50 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
     else:
         meta = discover_stream_meta(frames)
     ddl_acc = spark.sparkContext.accumulator([], _DdlAccum())
-    # decoded is NOT persisted: the first stats action is the only pass
-    # through it when one lake reads it — caching the full decoded set
-    # would cost a storage-memory write of every change row for zero
-    # re-reads. The change set is cached only for a second reader: the
-    # other lakes' folds, or else the lineage summary.
     decoded = decode_frames(spark, frames, meta, registry, ddl_acc=ddl_acc)
-    changes_all = assemble_transactions(decoded)
-    shared = len(lakes) > 1
-    lineage = record_lineage and batch_id is not None
-    cache_own = lineage and not shared
-    if shared:
-        changes_all.persist()
-    ddls = None
-    out = {}
+    changes_all = assemble_transactions(decoded).persist()
     try:
+        summary = [r.asDict() for r in
+                   lineage_summary(changes_all).collect()]
+        # dedupe by (file, pos): task retries re-fire accumulator updates
+        seen, ddls = set(), []
+        for f, p, ts, d, sql, cat in sorted(ddl_acc.value):
+            if (f, p) in seen:
+                continue
+            seen.add((f, p))
+            ddls.append({"file": f, "pos": p, "ts": ts,
+                         "db": d, "sql": sql, "category": cat})
+        out = {}
         for key, lake in lakes.items():
-            changes = changes_all
+            changes, rows = changes_all, summary
             if key is not None:
                 db, tbl = key
                 changes = changes.where(
                     (F.col("db") == db) & (F.col("tbl") == tbl))
-            if cache_own:
-                changes.persist()
-            folded = lake.bucket_of(
-                fold_changes(changes, tuple(lake.meta["key"])))
-            folded.persist()
-            try:
-                per_bucket = (folded.groupBy("_bucket")
-                              .agg(F.sum("n_events").alias("n"),
-                                   F.max("g").alias("g")).collect())
-                n_changes = sum(r["n"] for r in per_bucket)
-                max_gtid = max((r["g"] for r in per_bucket), default=None)
-                # merge_apply drops delta rows at-or-below the lake's gtid
-                # watermark; apply the same cut to the changed-bucket list
-                # so a re-delivered batch commits a no-op instead of
-                # rewriting every touched bucket byte-identically
-                hwm = lake.meta.get("last_gtid", -1)
-                effective = [r for r in per_bucket if r["g"] > hwm]
-                if ddls is None:
-                    # the accumulator is complete once the first stats
-                    # action returns; dedupe by (file, pos) — task
-                    # retries re-fire accumulator updates
-                    seen, ddls = set(), []
-                    for f, p, ts, d, sql, cat in sorted(ddl_acc.value):
-                        if (f, p) in seen:
-                            continue
-                        seen.add((f, p))
-                        ddls.append({"file": f, "pos": p, "ts": ts,
-                                     "db": d, "sql": sql, "category": cat})
-                apply_ddls(lake, ddls)
-                stats = lake.merge_apply(
-                    folded, batch_id=batch_id, max_gtid=max_gtid,
-                    changed_buckets=[r["_bucket"] for r in effective])
-                stats["n_changes"] = n_changes
-                stats["n_ddls"] = len(ddls)
-                if lineage:
-                    secs = _time.perf_counter() - t_start
-                    write_lineage(changes, lake.path, batch_id, metrics={
-                        "n_changes": n_changes, "n_ddls": len(ddls),
-                        "buckets_rewritten": stats.get("buckets_rewritten", 0),
-                        "rows_written": stats.get("rows_written", 0),
-                        "seconds": round(secs, 3),
-                        "events_per_sec": (round(n_changes / secs, 1)
-                                           if secs else None),
-                    })
-                out[key] = stats
-            finally:
-                if cache_own:
-                    changes.unpersist()
-                folded.unpersist()
+                rows = [r for r in rows if (r["db"], r["tbl"]) == (db, tbl)]
+            n_changes = sum(r["n_changes"] for r in rows)
+            max_gtid = max((r["max_gtid"] for r in rows), default=None)
+            apply_ddls(lake, ddls)
+            stats = lake.merge_apply(
+                fold_changes(changes, tuple(lake.meta["key"])),
+                batch_id=batch_id, max_gtid=max_gtid,
+                changed_buckets=None if rows else [])
+            stats["n_changes"] = n_changes
+            stats["n_ddls"] = len(ddls)
+            if batch_id is not None and not stats["skipped"]:
+                secs = _time.perf_counter() - t_start
+                write_record(lake.path, batch_id, rows, metrics={
+                    "n_changes": n_changes, "n_ddls": len(ddls),
+                    "buckets_rewritten": stats["buckets_rewritten"],
+                    "rows_written": stats["rows_written"],
+                    "seconds": round(secs, 3),
+                    "events_per_sec": (round(n_changes / secs, 1)
+                                       if secs else None),
+                })
+            out[key] = stats
         return out
     finally:
-        if shared:
-            changes_all.unpersist()
+        changes_all.unpersist()
 
 
 def read_frames(spark: SparkSession, frames_dir: str) -> DataFrame:
@@ -274,5 +253,5 @@ def bootstrap_from_snapshot(spark: SparkSession, snapshot: DataFrame,
         F.lit(int(snapshot_gtid)).cast("long").alias("g"),
         F.lit(0).cast("int").alias("s"),
         F.lit(1).cast("long").alias("n_events"))
-    return lake.merge_apply(lake.bucket_of(folded), batch_id=batch_id,
+    return lake.merge_apply(folded, batch_id=batch_id,
                             max_gtid=int(snapshot_gtid))

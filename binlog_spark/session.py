@@ -48,11 +48,13 @@ def get_spark(app_name: str = "binlog-spark", cpus: int | None = None,
         # regression guard for the r4 DUPLICATED_MAP_KEY crash
         # canonical temporal rendering is UTC-pinned
         .config("spark.sql.session.timeZone", "UTC")
-        # v2 file committer: task outputs move into place at task commit —
-        # the job-commit rename walk is pure driver-side floor for the
-        # per-batch bucket rewrites (all writes target fresh version dirs,
-        # so v2's weaker failure atomicity is covered by the manifest
-        # commit being the real atomicity point)
+        # v2 file committer: task outputs move into place at task commit,
+        # which skips the driver-side job-commit rename walk. On the lake
+        # side only rollup (delta layers, compaction) and
+        # LakeTable.rebucket still use Spark's committer; the MERGE kernel
+        # writes its own files. Both write fresh version dirs, so v2's
+        # weaker failure atomicity is covered by the manifest commit
+        # being the real atomicity point
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
                 "2")
         # local mode = one JVM for driver+executor: size the heap for the

@@ -31,7 +31,7 @@ from pyspark.sql import SparkSession
 
 from .. import schema as S
 from ..operators.decode import discover_stream_meta
-from ..operators.merge import LakeTable
+from ..operators.merge import LakeTable, write_json_atomic
 from ..pipeline import replay_batch, replay_batch_multi
 from ..sources.binlog_file import frames_from_binary_df
 
@@ -61,11 +61,8 @@ class _MetaStore:
                 for (f, tid), vers in meta["table_maps"].items()
             },
         }
-        tmp = self.path + ".tmp"
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        with open(tmp, "w") as fh:
-            json.dump(raw, fh)
-        os.replace(tmp, self.path)
+        write_json_atomic(self.path, raw)
 
 
 def _merge_meta(acc: dict, new: dict) -> dict:
@@ -118,11 +115,8 @@ class _FileOrderGuard:
                     "file source delivered files out of name order "
                     "(mtime-scrambled directory?); use run_stream_ordered "
                     "for name-ordered ingestion")
-        tmp = self.path + ".tmp"
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump({"max_file": hi, "batch_id": batch_id}, f)
-        os.replace(tmp, self.path)
+        write_json_atomic(self.path, {"max_file": hi, "batch_id": batch_id})
 
 
 def _apply(spark: SparkSession, frames, lakes, registry: dict,
@@ -237,10 +231,7 @@ def run_stream_ordered(spark: SparkSession, frames_dir: str, lake_path: str,
         df = spark.read.schema(S.FRAME_SCHEMA).parquet(
             *[os.path.join(frames_dir, n) for n in chunk])
         _apply(spark, df, lake_path, registry, store, f"ordered-{chunk[0]}")
-        tmp = cursor_path + ".tmp"
         os.makedirs(checkpoint_dir, exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump({"last_file": chunk[-1]}, f)
-        os.replace(tmp, cursor_path)
+        write_json_atomic(cursor_path, {"last_file": chunk[-1]})
         batches += 1
     return {"batches": batches, "files": len(todo)}

@@ -66,7 +66,6 @@ def main():
         t0 = time.perf_counter()
         stats = pipeline.replay_batch(spark, frames, lake,
                                       genlog.table_registry(), batch_id=0,
-                                      record_lineage=False,
                                       stream_meta=pipeline.INLINE_DISCOVERY)
         replay_secs = time.perf_counter() - t0
         assert stats["n_changes"] == len(result.changes), stats

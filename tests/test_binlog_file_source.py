@@ -52,7 +52,7 @@ def test_replay_from_raw_files_matches_generator(spark, world, tmp_path):
                             key_cols=list(genlog.KEY_COLS), n_buckets=4)
     frames = binlog_file.read_binlog_files(spark, d)
     pipeline.replay_batch(spark, frames, lake, genlog.table_registry(),
-                          batch_id=0, record_lineage=False)
+                          batch_id=0)
     got = {(r["repo"], r["path"]):
            hashlib.sha256(r["content"].encode()).hexdigest()
            for r in lake.to_df().collect()}

@@ -315,7 +315,8 @@ def test_wide_table_int_matrix():
     assert (ref["kind"] == "change").sum() == 2
 
 
-@pytest.mark.parametrize("engine", ["arrow", "pandas"])
+# decode_frames has one engine, Arrow; the id names it
+@pytest.mark.parametrize("engine", ["arrow"])
 def test_decode_frames_engines_agree_in_spark(spark, engine):
     gen = genlog.CdcWorldGenerator(seed=5, n_repos=10, paths_per_repo=6,
                                    txns_per_file=50)
@@ -324,8 +325,7 @@ def test_decode_frames_engines_agree_in_spark(spark, engine):
 
     df = spark.createDataFrame(res.frames, FRAME_SCHEMA).repartition(4)
     meta = make_meta(res.frames)
-    out = D.decode_frames(spark, df, meta, genlog.table_registry(),
-                          engine=engine)
+    out = D.decode_frames(spark, df, meta, genlog.table_registry())
     ch = out.where(out.kind == "change")
     assert ch.count() == len(res.changes)
     got = {(r["file"], r["pos"], r["seq_in_event"]):

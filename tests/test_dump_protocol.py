@@ -363,7 +363,7 @@ def test_live_dump_end_to_end(spark, dump_world, tmp_path):
                             columns=genlog.table_spec().col_names,
                             key_cols=list(genlog.KEY_COLS), n_buckets=4)
     pipeline.replay_batch(spark, df, lake, genlog.table_registry(),
-                          batch_id=0, record_lineage=False)
+                          batch_id=0)
     got_state = {(r["repo"], r["path"]): r["content"]
                  for r in lake.to_df().collect()}
     want_state = {k: v["content"] for k, v in dump_world.final_state.items()}
@@ -646,8 +646,7 @@ def test_desc_table_mapper_resolves_schema_over_the_wire(spark, tmp_path):
     lake = LakeTable.create(spark, str(tmp_path / "lake_desc"),
                             columns=genlog.table_spec().col_names,
                             key_cols=list(genlog.KEY_COLS), n_buckets=4)
-    stats = pipeline.replay_batch(spark, df, lake, mapper, batch_id=0,
-                                  record_lineage=False)
+    stats = pipeline.replay_batch(spark, df, lake, mapper, batch_id=0)
     server.stop()
     assert stats["n_changes"] == len(world.changes)
     got = {(r["repo"], r["path"]): r["content"]

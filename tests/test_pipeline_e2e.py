@@ -102,6 +102,98 @@ def test_merge_reports_rows_written(spark, world, tmp_path):
     assert lake.to_df().count() == len(result.final_state)
 
 
+def test_one_summary_action_per_batch(spark, world, tmp_path, monkeypatch):
+    """A batch runs three collects (discovery, the summary, the merge job)
+    and caches one DataFrame, the change set. A lake whose table has no
+    rows in the batch runs no merge job, yet records the batch id and
+    writes its lineage record."""
+    import json
+
+    calls = {"collect": 0, "persist": 0}
+    cls = type(spark.range(1))  # the class every session DataFrame has
+    for name in calls:
+        def counted(self, *a, _name=name, _fn=getattr(cls, name), **kw):
+            calls[_name] += 1
+            return _fn(self, *a, **kw)
+        monkeypatch.setattr(cls, name, counted)
+
+    result, frames_dir = world
+    frames = pipeline.read_frames(spark, frames_dir)
+    lake = LakeTable.create(spark, str(tmp_path / "lake_one"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=8)
+    stats = pipeline.replay_batch(spark, frames, lake,
+                                  genlog.table_registry(), batch_id=0)
+    assert calls == {"collect": 3, "persist": 1}
+    assert stats["n_changes"] == len(result.changes)
+    assert (tmp_path / "lake_one" / "_lineage" / "batch-0.json").exists()
+
+    calls.update(collect=0, persist=0)
+    docs, absent = ("codehub", "repo_content"), ("codehub", "absent")
+    lakes = {key: LakeTable.create(
+        spark, str(tmp_path / key[1]), columns=genlog.table_spec().col_names,
+        key_cols=list(genlog.KEY_COLS), n_buckets=8, table=key)
+        for key in (docs, absent)}
+    out = pipeline.replay_batch_multi(spark, frames, lakes,
+                                      genlog.table_registry(), batch_id=0)
+    assert calls == {"collect": 3, "persist": 1}
+    assert out[docs]["n_changes"] == len(result.changes)
+    assert out[absent]["n_changes"] == 0
+    assert out[absent]["buckets_rewritten"] == 0
+    assert lakes[absent].meta["applied_batches"] == [0]
+    assert lakes[absent].meta["buckets"] == {}
+    with open(tmp_path / "absent" / "_lineage" / "batch-0.json") as f:
+        doc = json.load(f)
+    assert doc["files"] == [] and doc["metrics"]["n_changes"] == 0
+
+
+def test_redelivered_batch_keeps_its_lineage_record(spark, world, tmp_path):
+    """A batch the lake already applied is skipped, and its lineage
+    record keeps the metrics of the apply that committed it."""
+    import json
+
+    _result, frames_dir = world
+    frames = pipeline.read_frames(spark, frames_dir)
+    lake = LakeTable.create(spark, str(tmp_path / "lake_re"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=8)
+    record = tmp_path / "lake_re" / "_lineage" / "batch-0.json"
+    docs = []
+    for _ in range(2):
+        pipeline.replay_batch(spark, frames, lake, genlog.table_registry(),
+                              batch_id=0)
+        with open(record) as f:
+            docs.append(json.load(f))
+    assert docs[0]["metrics"]["buckets_rewritten"] > 0
+    assert docs[1] == docs[0]
+
+
+def test_lineage_record_write_is_atomic(tmp_path, monkeypatch):
+    """A ``json.dump`` that raises leaves no ``batch-<id>.json`` behind,
+    and an existing record as it was."""
+    import json
+
+    from binlog_spark.operators import lineage
+
+    rows = [{"db": "codehub", "tbl": "repo_content", "file": "binlog.000000",
+             "min_pos": 4, "max_next_pos": 90, "min_gtid": 1, "max_gtid": 2,
+             "n_changes": 3, "n_insert": 2, "n_update": 1, "n_delete": 0}]
+    lineage.write_record(str(tmp_path), 1, rows, {"n_changes": 3})
+    good = (tmp_path / "_lineage" / "batch-1.json").read_text()
+
+    def torn_dump(obj, f, **kw):
+        f.write('{"batch_id": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    for bid in (1, 2):
+        with pytest.raises(OSError):
+            lineage.write_record(str(tmp_path), bid, rows, {"n_changes": 3})
+    assert (tmp_path / "_lineage" / "batch-1.json").read_text() == good
+    assert sorted(p.name for p in (tmp_path / "_lineage").iterdir()) == [
+        "batch-1.json"]
+
+
 def test_merge_apply_is_idempotent(spark, world, tmp_path):
     result, frames_dir = world
     lake = LakeTable.create(spark, str(tmp_path / "lake2"),
@@ -193,7 +285,7 @@ def test_inline_discovery_replay_parity(spark, tmp_path):
                             key_cols=list(genlog.KEY_COLS), n_buckets=4)
     stats = pipeline.replay_batch(
         spark, frames, lake, genlog.table_registry(), batch_id=0,
-        record_lineage=False, stream_meta=pipeline.INLINE_DISCOVERY)
+        stream_meta=pipeline.INLINE_DISCOVERY)
     assert stats["n_changes"] == len(result.changes)
     got = {(r["repo"], r["path"]): (r["content"], r["stars"])
            for r in lake.to_df().collect()}
