@@ -158,12 +158,8 @@ def time_replay(spark, frames_dir: str, n_changes: int, workdir: str,
             frames = frames.coalesce(parts)
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     t0 = time.perf_counter()
-    # INLINE_DISCOVERY: the generator writes one parquet per binlog file,
-    # so decode partitions hold whole files — the inline-overlay contract
-    # — and the separate schema-discovery job is skipped (2 actions/batch)
     stats = pipeline.replay_batch(spark, frames, lake,
-                                  genlog.table_registry(), batch_id=0,
-                                  stream_meta=pipeline.INLINE_DISCOVERY)
+                                  genlog.table_registry(), batch_id=0)
     dt = time.perf_counter() - t0
     assert stats["n_changes"] == n_changes, (stats, n_changes)
     shutil.rmtree(lake_path, ignore_errors=True)

@@ -471,19 +471,22 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
     # ---- inline schema discovery overlay: TABLE_MAP / FORMAT_DESCRIPTION
     # frames in THIS partition feed the index directly (they precede their
     # ROWS events in file order, and mapInArrow preserves partition
-    # order), so a caller with file-partitioned input can skip the
-    # separate discovery job entirely. Keys the broadcast discovery
-    # provided are complete (it scanned every frame) and are not
-    # re-parsed; overlay-added keys track their own version evolution.
-    overlay_keys = caches.setdefault("overlay_keys", set())
+    # order), so file-partitioned input needs no separate discovery job.
+    # A passed index covers earlier batches only, so every TABLE_MAP is
+    # parsed and checked against the version in effect at its position;
+    # the versions it adds and the FORMAT_DESCRIPTION algorithms it sees
+    # are listed in caches["found_tmaps"] / ["found_algs"] for the caller
+    # to carry into the next batch's index.
     interned = caches.setdefault("interned", {})
+    found_tmaps = caches.setdefault("found_tmaps", [])
+    found_algs = caches.setdefault("found_algs", [])
     # per-frame checksum width: a FORMAT_DESCRIPTION inside this batch
     # switches the algorithm for every frame AFTER it (frames arrive
     # partition-ordered by (file, pos) and FD is the first event of its
     # file), so the width used to size each ROWS body must track the
     # switch points — a single batch-entry value mis-sizes every rows
-    # frame between the batch start and a mid-batch FD (r3 ADVICE:
-    # stale crc under INLINE_DISCOVERY dropped/invented tail rows)
+    # frame between the batch start and a mid-batch FD (a stale CRC
+    # width dropped or invented tail rows)
     fd_switches: list[tuple[int, int]] = []
     alg_at_entry = fmt.checksum_algorithm
     tm_mask = valid & ((etype_np == C.E_TABLE_MAP)
@@ -494,23 +497,20 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
         if int(etype_np[i]) == C.E_FORMAT_DESCRIPTION:
             alg = E.parse_format_description(frame).checksum_algorithm
             fd_switches.append((i, alg))
+            found_algs.append(alg)
             if alg != fmt.checksum_algorithm:
                 fmt.checksum_algorithm = alg
             continue
         file = file_vals[file_code[i]]
         tid = E.parse_table_id(fmt, C.E_TABLE_MAP, frame)
         key = (file, tid)
-        if key in tmaps and key not in overlay_keys:
-            continue  # discovery-provided: version list already complete
         tm = E.parse_table_map(
             fmt, E.strip_checksum(fmt, C.E_TABLE_MAP, frame))
         sig = (tm.database, tm.name, tuple(tm.types), tuple(tm.metadata))
         pos = int(pos_np[i])
         vers = tmaps.get(key)
         if vers is not None:
-            import bisect as _b
-
-            vi = _b.bisect_right(tmap_keys[key], pos) - 1
+            vi = bisect.bisect_right(tmap_keys[key], pos) - 1
             cur = vers[max(vi, 0)][1]
             if (cur[0], cur[1], tuple(cur[2]), tuple(cur[3])) == sig:
                 continue  # same version already in effect at this pos
@@ -523,7 +523,7 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
             vers.append((pos, payload))
             vers.sort(key=lambda v: v[0])
             tmap_keys[key] = [v[0] for v in vers]
-        overlay_keys.add(key)
+        found_tmaps.append((file, tid, pos, payload))
 
     def _crc_w(alg):
         return 4 if alg == C.CHECKSUM_ALG_CRC32 else 0

@@ -4,24 +4,29 @@ Spark-first re-expression of the reference's single-threaded parse loop
 (`/root/reference/row_streamer.go:90-343` ``parseEvents``) as two
 shuffle-free Arrow stages:
 
-1. **Schema discovery** (`discover_stream_meta`): scan only
-   FORMAT_DESCRIPTION and TABLE_MAP frames (predicate on the `etype`
-   column is pushed down to the parquet scan), decode them in
-   ``mapInPandas``, and aggregate to *distinct schema versions per
-   (file, table_id)* with their first-seen position. The result is tiny
-   (one row per schema version, not per TABLE_MAP event) regardless of
-   input scale, so it is collected and **broadcast** — the distributed
-   analogue of the reference's per-tableID schema cache
-   (`row_streamer.go:41-44,220-243`), including its refresh-on-new-TABLE_MAP
-   schema-change hook (`row_streamer.go:220-223`).
+1. **Decode + assembly** (`decode_assembled`): one ``mapInArrow`` task
+   per partition decodes its frames and assembles their transactions
+   (``transactions.assemble_file_local``). TABLE_MAP and
+   FORMAT_DESCRIPTION frames are resolved by the inline overlay as the
+   task meets them, on top of the index of earlier batches — the
+   distributed analogue of the reference's per-tableID schema cache
+   (`row_streamer.go:41-44,220-243`), including its
+   refresh-on-new-TABLE_MAP schema-change hook (`row_streamer.go:220-223`).
+   The task reports per file whether its partition held it whole, and
+   the versions the overlay added.
 
-2. **Main decode** (`decode_frames`): a stateless ``mapInArrow`` over the
-   full frame set under *any* partitioning — each frame resolves its table
-   schema from the broadcast index by (file, table_id, pos) binary search,
-   so decode parallelism is unconstrained by transaction or file
-   boundaries. Emits change rows plus gtid/begin/commit/rollback marker
-   rows, a DDL side channel, and a dead-letter channel (INTVAR/RAND etc.,
-   which the reference rejects as errors — row_streamer.go:331-339).
+2. **Fallback** for the files that report says were not held whole:
+   schema discovery (`discover_stream_meta`) scans only their
+   FORMAT_DESCRIPTION and TABLE_MAP frames (the predicate on `etype` is
+   pushed down to the parquet scan) and collects distinct schema versions
+   per (file, table_id) with their first-seen position; `decode_frames`
+   then decodes every frame under *any* partitioning, each frame
+   resolving its table schema from that broadcast index by (file,
+   table_id, pos) binary search; ``transactions.assemble_transactions``
+   then groups the result behind one shuffle by file. ``decode_frames``
+   emits change rows plus gtid/begin/commit/rollback marker rows, a DDL
+   side channel, and a dead-letter channel (INTVAR/RAND etc., which the
+   reference rejects as errors — row_streamer.go:331-339).
 
 Column names and signedness come from a pluggable schema provider — the
 analogue of the reference's ``MysqlTableMapper`` (`row_streamer.go:19-21`).
@@ -119,6 +124,20 @@ def discover_stream_meta(frames: DataFrame) -> dict:
     }
 
 
+def merge_stream_meta(acc: dict, new: dict) -> dict:
+    """``acc`` with ``new``'s TABLE_MAP versions added (a version at the
+    same position is replaced) and ``new``'s checksum algorithm, if it
+    has one."""
+    out = {"checksum_alg": new.get("checksum_alg", acc["checksum_alg"]),
+           "table_maps": dict(acc["table_maps"])}
+    for key, vers in new["table_maps"].items():
+        merged = {v[0]: v[1] for v in out["table_maps"].get(key, [])}
+        for pos, schema in vers:
+            merged[pos] = tuple(schema)
+        out["table_maps"][key] = sorted(merged.items())
+    return out
+
+
 _OUT_COLS = [f.name for f in S.DECODE_OUTPUT_SCHEMA.fields]
 
 
@@ -185,7 +204,8 @@ def build_decode_context(stream_meta: dict, registry: dict):
             out.append((pos, interned.setdefault(sig, payload)))
         tmaps[k] = out
     tmap_keys = {k: [v[0] for v in vers] for k, vers in tmaps.items()}
-    return fmt, tmaps, tmap_keys, name_index, mapper, {}
+    # the inline overlay interns the versions it adds in the same table
+    return fmt, tmaps, tmap_keys, name_index, mapper, {"interned": interned}
 
 
 def _resolve_names(name_index, mapper, db, tbl, ncols):
@@ -361,6 +381,42 @@ def decode_frames(spark: SparkSession, frames: DataFrame, stream_meta: dict,
 
     return frames.select("file", "pos", "etype", "frame").mapInArrow(
         _decode_arrow, schema=S.DECODE_OUTPUT_SCHEMA)
+
+
+def decode_assembled(spark: SparkSession, frames: DataFrame,
+                     stream_meta: dict, registry: dict, ddl_acc,
+                     report_acc) -> DataFrame:
+    """Decode and transaction assembly in one ``mapInArrow`` task per
+    partition → committed change rows (CHANGE_SCHEMA).
+
+    ``stream_meta`` indexes the TABLE_MAPs of earlier batches (empty for
+    a self-contained batch); each task's overlay resolves the rest from
+    its own frames. ``ddl_acc`` as for ``decode_frames``. Each task adds
+    one entry ``(partition, [(file, first_pos, last_pos, ok), ...],
+    [(file, table_id, pos, schema), ...], [checksum_alg, ...])`` to
+    ``report_acc``: its files, as ``transactions.assemble_file_local``
+    judged them, and the TABLE_MAP versions and FORMAT_DESCRIPTION
+    algorithms its overlay found. A retried or recomputed task adds its
+    entry again; consumers keep one per partition."""
+    from pyspark import TaskContext
+
+    from .transactions import assemble_file_local
+
+    bc = spark.sparkContext.broadcast((stream_meta, registry))
+
+    def _kernel(batches):
+        meta, reg = bc.value
+        ctx = build_decode_context(meta, reg)
+        files: dict = {}
+        yield from assemble_file_local(batches, ctx, ddl_acc, files)
+        caches = ctx[5]
+        report_acc.add([(
+            TaskContext.get().partitionId(),
+            [(f, st[0], st[1], st[2]) for f, st in files.items()],
+            caches.get("found_tmaps", []), caches.get("found_algs", []))])
+
+    return frames.select("file", "pos", "etype", "frame").mapInArrow(
+        _kernel, schema=S.CHANGE_SCHEMA)
 
 
 def _aux(file, pos, next_pos, ts, gtid, kind, db=None, sql=None, reason=None):

@@ -2,20 +2,23 @@
 
 The Spark lifecycle equivalent of the reference's flagship path
 (`RowStreamer.Stream`, `/root/reference/row_streamer.go:66-88` — traced in
-SURVEY.md §3/E1): one shuffle-free Arrow decode stage, one window shuffle
-per binlog file for transaction assembly, one key shuffle for the fold,
-and a bucket-pruned copy-on-write MERGE — one shuffle of the folded delta
-by bucket, after which each changed bucket is read, merged and written
-inside one Arrow task (``LakeTable.merge_job``), so the lake path must be
-a POSIX path every executor sees.
+SURVEY.md §3/E1): one shuffle-free Arrow stage that decodes each binlog
+file and assembles its transactions in the same task, one key shuffle for
+the fold, and a bucket-pruned copy-on-write MERGE — one shuffle of the
+folded delta by bucket, after which each changed bucket is read, merged
+and written inside one Arrow task (``LakeTable.merge_job``), so the lake
+path must be a POSIX path every executor sees.
 
-A batch runs these Spark actions: schema discovery (unless the meta is
-passed in), one summary aggregate over the cached change set, and one
-MERGE job per lake with rows in the batch. The summary is the only pass
-that reads decode and assembly, it completes the DDL side channel, and
-its rows give each lake its change count, its GTID high-water mark and
-its lineage record. The fold runs inside the MERGE job, its only
-consumer, so the folded delta is never cached or aggregated.
+A batch runs these Spark actions: one summary aggregate over the cached
+change set, and one MERGE job per lake with rows in the batch. There is
+no schema-discovery job: decode tasks resolve TABLE_MAPs from their own
+frames. The summary is the only pass that reads decode and assembly, it
+completes the DDL side channel and the decode tasks' report, and its
+rows give each lake its change count, its GTID high-water mark and its
+lineage record. The fold runs inside the MERGE job, its only consumer,
+so the folded delta is never cached or aggregated. Only when the report
+names files a partition did not hold whole do those files take the
+window path, at the cost of a discovery job and a second summary.
 """
 
 from __future__ import annotations
@@ -28,24 +31,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schema as S
-from .operators.decode import decode_frames, discover_stream_meta
+from .operators.decode import (
+    decode_assembled,
+    decode_frames,
+    discover_stream_meta,
+    merge_stream_meta,
+)
 from .operators.lineage import lineage_summary, write_record
 from .operators.lww import fold_changes
 from .operators.merge import LakeTable
 from .operators.transactions import assemble_transactions
+from .wire import constants as C
 
 # ``ADD [COLUMN] [IF NOT EXISTS] name``; the name may be backquoted
 _ADD_COLUMN_RE = re.compile(
     r"alter\s+table\s+(\S+)\s+add\s+(?:column\s+)?"
     r"(?:if\s+not\s+exists\s+)?(`[^`]+`|\w+)", re.IGNORECASE)
 
-# sentinel for replay_batch(stream_meta=...): skip the discovery job and
-# let the decode stage self-discover TABLE_MAPs from its own partitions
-INLINE_DISCOVERY = "__inline_discovery__"
-
 
 class _DdlAccum(AccumulatorParam):
-    """List accumulator carrying DDL rows out of the decode stage."""
+    """List accumulator carrying side-channel rows out of the decode
+    stage: the DDL rows, and the decode tasks' file report."""
 
     def zero(self, value):
         return []
@@ -101,6 +107,33 @@ def replay_batch(spark: SparkSession, frames: DataFrame, lake: LakeTable,
                               stream_meta=stream_meta)[key]
 
 
+def _read_report(entries: list):
+    """The decode tasks' report → (irregular files, found meta).
+
+    One entry per partition is kept: a retried or recomputed task
+    reports again. A file is irregular when more than one partition saw
+    it or its partition reported it not ok. The found meta holds every
+    TABLE_MAP version the tasks' overlays added and, if any task met a
+    FORMAT_DESCRIPTION, the highest checksum algorithm (as discovery
+    does)."""
+    parts = {e[0]: e[1:] for e in entries}
+    seen: dict = {}
+    tmaps: dict = {}
+    algs = []
+    for files, found, found_algs in parts.values():
+        for file, _first, _last, ok in files:
+            seen.setdefault(file, []).append(ok)
+        for file, tid, pos, schema in found:
+            tmaps.setdefault((file, tid), []).append((pos, schema))
+        algs += found_algs
+    irregular = sorted(f for f, oks in seen.items()
+                       if len(oks) > 1 or not all(oks))
+    found_meta = {"table_maps": tmaps}
+    if algs:
+        found_meta["checksum_alg"] = max(algs)
+    return irregular, found_meta
+
+
 def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
                        registry: dict, batch_id=None,
                        stream_meta: dict | None = None) -> dict:
@@ -118,42 +151,63 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
     batch gets its ``_lineage/batch-<id>.json``; a lake that already
     applied it keeps the record it has.
 
-    ``stream_meta``: pass a pre-merged TABLE_MAP index (streaming keeps an
-    accumulated one across microbatches) to skip the discovery job.
-    ``stream_meta=INLINE_DISCOVERY`` skips the schema-discovery job
-    entirely: the decode stage self-discovers TABLE_MAP /
-    FORMAT_DESCRIPTION frames from its own partitions (the colsplit
-    overlay). Sound whenever decode partitions hold whole binlog files
-    or file prefixes — the standard layout (one parquet per binlog
-    file) — because a TABLE_MAP physically precedes its ROWS events; a
-    rows event whose TABLE_MAP sits in another partition dead-letters
-    rather than mis-decoding. One fewer Spark job per batch.
+    Decode and assembly run file-locally, one task per partition
+    (``decode_assembled``), which is exact for every file a partition
+    holds whole, in position order. The tasks report the files they saw;
+    a file seen by more than one partition, or out of order, is
+    re-assembled by the window path (discovery over its frames,
+    ``decode_frames``, ``assemble_transactions``), and the stats count
+    it as ``fallback_files``. Spark splits a parquet file larger than its
+    split size (``spark.sql.files.maxPartitionBytes``, or less when the
+    input is small against the cores) across partitions by row group, so
+    a batch of such files pays for the file-local pass and then for the
+    window path on every file.
+
+    ``stream_meta``: the TABLE_MAP index of earlier batches (streaming
+    keeps one across microbatches), or None for a self-contained batch.
+    The passed dict is extended in place with the versions this batch
+    found.
 
     Returns ``{key: merge_stats}``."""
     # Spark actions per batch, everything else pipelined inside them:
-    #   1. schema discovery (tiny collect over TABLE_MAP/FORMAT_DESC
-    #      frames) — skipped with a passed or inline meta
-    #   2. the summary: one small aggregate by (db, tbl, file) over the
+    #   1. the summary: one small aggregate by (db, tbl, file) over the
     #      cached change set. It materializes decode+assemble into the
-    #      cache, completes the DDL accumulator before any lake evolves,
-    #      and its rows give each lake its change count, its max gtid
-    #      and its lineage record
+    #      cache, completes the DDL accumulator before any lake evolves
+    #      and the decode tasks' report, and its rows give each lake its
+    #      change count, its max gtid and its lineage record
+    #   2. only with irregular files: discovery over their frames, then
+    #      the summary again over the rebuilt change set
     #   3. per lake with rows, the MERGE: the fold, one delta shuffle by
     #      bucket, then each changed bucket read, merged and written in
     #      one task
     t_start = _time.perf_counter()
-    if stream_meta is INLINE_DISCOVERY:
-        meta = {"checksum_alg": 1, "table_maps": {}}
-    elif stream_meta is not None:
-        meta = stream_meta
-    else:
-        meta = discover_stream_meta(frames)
+    meta = (stream_meta if stream_meta is not None else
+            {"checksum_alg": C.CHECKSUM_ALG_CRC32, "table_maps": {}})
     ddl_acc = spark.sparkContext.accumulator([], _DdlAccum())
-    decoded = decode_frames(spark, frames, meta, registry, ddl_acc=ddl_acc)
-    changes_all = assemble_transactions(decoded).persist()
+    report_acc = spark.sparkContext.accumulator([], _DdlAccum())
+    changes_all = decode_assembled(spark, frames, meta, registry, ddl_acc,
+                                   report_acc).persist()
     try:
         summary = [r.asDict() for r in
                    lineage_summary(changes_all).collect()]
+        irregular, found = _read_report(report_acc.value)
+        found = merge_stream_meta(meta, found)
+        if irregular:
+            redo = F.col("file").isin(irregular)
+            rest = frames.where(redo)
+            disc = discover_stream_meta(rest)
+            found = merge_stream_meta(found,
+                                      {"table_maps": disc["table_maps"]})
+            rebuilt = changes_all.where(~redo).unionByName(
+                assemble_transactions(decode_frames(
+                    spark, rest, found, registry, ddl_acc=ddl_acc)))
+            rebuilt.persist()
+            summary = [r.asDict() for r in
+                       lineage_summary(rebuilt).collect()]
+            changes_all.unpersist()
+            changes_all = rebuilt
+        if stream_meta is not None:
+            stream_meta.update(found)
         # dedupe by (file, pos): task retries re-fire accumulator updates
         seen, ddls = set(), []
         for f, p, ts, d, sql, cat in sorted(ddl_acc.value):
@@ -179,10 +233,12 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
                 changed_buckets=None if rows else [])
             stats["n_changes"] = n_changes
             stats["n_ddls"] = len(ddls)
+            stats["fallback_files"] = len(irregular)
             if batch_id is not None and not stats["skipped"]:
                 secs = _time.perf_counter() - t_start
                 write_record(lake.path, batch_id, rows, metrics={
                     "n_changes": n_changes, "n_ddls": len(ddls),
+                    "fallback_files": len(irregular),
                     "buckets_rewritten": stats["buckets_rewritten"],
                     "rows_written": stats["rows_written"],
                     "seconds": round(secs, 3),

@@ -10,11 +10,12 @@ feeds ``foreachBatch``; each microbatch runs decode → transaction assembly
 * the lake manifest records applied ``(batch_id)`` and the GTID high-water
   mark — a batch replayed after a crash (offsets committed but sink not,
   or vice versa) is a no-op thanks to the batch-id + row-level guards,
-* the TABLE_MAP schema cache discovered so far is persisted next to the
-  checkpoint (tiny JSON) and merged per batch, so a rows-event whose
-  TABLE_MAP arrived in an earlier microbatch still decodes — the streaming
-  equivalent of the reference's per-tableID cache refresh
-  (`row_streamer.go:220-243`).
+* the TABLE_MAP schema cache is persisted next to the checkpoint (tiny
+  JSON) and fed by the decode tasks: each batch decodes with the cache of
+  the batches before it, and the TABLE_MAPs its tasks meet are added to
+  the cache after the batch, so a rows-event whose TABLE_MAP arrived in
+  an earlier microbatch still decodes — the streaming equivalent of the
+  reference's per-tableID cache refresh (`row_streamer.go:220-243`).
 
 Microbatches are the tumbling processing-time windows of SURVEY §2.2; the
 generator emits whole transactions within one binlog file, and the file
@@ -30,7 +31,8 @@ import os
 from pyspark.sql import SparkSession
 
 from .. import schema as S
-from ..operators.decode import discover_stream_meta
+# _merge_meta: the name cdcbench/layers.py imports for its traced copy
+from ..operators.decode import merge_stream_meta as _merge_meta  # noqa: F401
 from ..operators.merge import LakeTable, write_json_atomic
 from ..pipeline import replay_batch, replay_batch_multi
 from ..sources.binlog_file import frames_from_binary_df
@@ -63,17 +65,6 @@ class _MetaStore:
         }
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
         write_json_atomic(self.path, raw)
-
-
-def _merge_meta(acc: dict, new: dict) -> dict:
-    out = {"checksum_alg": new.get("checksum_alg", acc["checksum_alg"]),
-           "table_maps": dict(acc["table_maps"])}
-    for key, vers in new["table_maps"].items():
-        merged = {v[0]: v[1] for v in out["table_maps"].get(key, [])}
-        for pos, schema in vers:
-            merged[pos] = tuple(schema) if not isinstance(schema, tuple) else schema
-        out["table_maps"][key] = sorted(merged.items())
-    return out
 
 
 class _FileOrderGuard:
@@ -121,13 +112,17 @@ class _FileOrderGuard:
 
 def _apply(spark: SparkSession, frames, lakes, registry: dict,
            store: _MetaStore, batch_id: str):
-    """The per-batch step every driver shares: merge this batch's
-    TABLE_MAPs into the persisted stream meta, then decode once and apply
-    to every lake — ``lakes`` is one lake path or ``{(db, tbl): path}``.
-    Manifests are re-read per batch: the previous batch may have
-    committed."""
-    meta = _merge_meta(store.load(), discover_stream_meta(frames))
-    store.save(meta)
+    """The per-batch step every driver shares: decode once and apply to
+    every lake — ``lakes`` is one lake path or ``{(db, tbl): path}`` —
+    with the persisted stream meta, which the replay extends with the
+    TABLE_MAPs this batch's decode tasks found; then save it. Manifests
+    are re-read per batch: the previous batch may have committed.
+
+    Crash order: the lakes commit before the store is saved. A batch
+    re-delivered after a crash between the two is skipped by every lake
+    that committed it, but it is decoded again, so the store it saves
+    holds that batch's TABLE_MAPs."""
+    meta = store.load()
     if isinstance(lakes, dict):
         replay_batch_multi(spark, frames, {
             key: LakeTable(spark, path) for key, path in lakes.items()},
@@ -135,6 +130,7 @@ def _apply(spark: SparkSession, frames, lakes, registry: dict,
     else:
         replay_batch(spark, frames, LakeTable(spark, lakes), registry,
                      batch_id=batch_id, stream_meta=meta)
+    store.save(meta)
 
 
 def run_stream(spark: SparkSession, source_dir: str, lakes,

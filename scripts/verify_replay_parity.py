@@ -65,8 +65,7 @@ def main():
 
         t0 = time.perf_counter()
         stats = pipeline.replay_batch(spark, frames, lake,
-                                      genlog.table_registry(), batch_id=0,
-                                      stream_meta=pipeline.INLINE_DISCOVERY)
+                                      genlog.table_registry(), batch_id=0)
         replay_secs = time.perf_counter() - t0
         assert stats["n_changes"] == len(result.changes), stats
 
@@ -107,6 +106,7 @@ def main():
             "mismatches": mismatches,
             "missing": missing,
             "extra": extra,
+            "fallback_files": stats["fallback_files"],
             "parity": mismatches == 0 and missing == 0 and extra == 0,
             "replay_seconds": round(replay_secs, 2),
             "events_per_sec": round(len(result.changes) / replay_secs, 1),

@@ -229,7 +229,7 @@ def test_exotic_types_fall_back_to_scalar_kernel():
 def test_inline_discovery_checksumless_stream_sizes_bodies_right():
     """r3 ADVICE regression: the per-batch checksum width must follow the
     FORMAT_DESCRIPTION overlay, not the batch-entry value. A checksum-less
-    stream decoded under INLINE_DISCOVERY (whose meta hardcodes
+    stream decoded with an empty index (whose meta assumes
     checksum_alg=1 until the FD frame corrects it) used to mis-size every
     ROWS body by 4 bytes — silently dropping a tiny final row or
     wave-decoding garbage from the missing-CRC slot."""
@@ -237,7 +237,7 @@ def test_inline_discovery_checksumless_stream_sizes_bodies_right():
     rows = [(None, {"id": str(v)}) for v in (11, 22, 33)]
     frames, registry = _custom_world(
         cols, [(C.E_WRITE_ROWS_V2, rows)], checksum_alg=0)
-    # INLINE_DISCOVERY contract: empty table_maps + assumed CRC32 until
+    # the self-contained batch's index: empty table_maps + assumed CRC32 until
     # the stream's own FORMAT_DESCRIPTION says otherwise
     ctx = D.build_decode_context(
         {"checksum_alg": C.CHECKSUM_ALG_CRC32, "table_maps": {}}, registry)

@@ -103,10 +103,10 @@ def test_merge_reports_rows_written(spark, world, tmp_path):
 
 
 def test_one_summary_action_per_batch(spark, world, tmp_path, monkeypatch):
-    """A batch runs three collects (discovery, the summary, the merge job)
-    and caches one DataFrame, the change set. A lake whose table has no
-    rows in the batch runs no merge job, yet records the batch id and
-    writes its lineage record."""
+    """A batch runs two collects (the summary, the merge job) and caches
+    one DataFrame, the change set; no discovery job runs. A lake whose
+    table has no rows in the batch runs no merge job, yet records the
+    batch id and writes its lineage record."""
     import json
 
     calls = {"collect": 0, "persist": 0}
@@ -124,8 +124,9 @@ def test_one_summary_action_per_batch(spark, world, tmp_path, monkeypatch):
                             key_cols=list(genlog.KEY_COLS), n_buckets=8)
     stats = pipeline.replay_batch(spark, frames, lake,
                                   genlog.table_registry(), batch_id=0)
-    assert calls == {"collect": 3, "persist": 1}
+    assert calls == {"collect": 2, "persist": 1}
     assert stats["n_changes"] == len(result.changes)
+    assert stats["fallback_files"] == 0
     assert (tmp_path / "lake_one" / "_lineage" / "batch-0.json").exists()
 
     calls.update(collect=0, persist=0)
@@ -136,7 +137,7 @@ def test_one_summary_action_per_batch(spark, world, tmp_path, monkeypatch):
         for key in (docs, absent)}
     out = pipeline.replay_batch_multi(spark, frames, lakes,
                                       genlog.table_registry(), batch_id=0)
-    assert calls == {"collect": 3, "persist": 1}
+    assert calls == {"collect": 2, "persist": 1}
     assert out[docs]["n_changes"] == len(result.changes)
     assert out[absent]["n_changes"] == 0
     assert out[absent]["buckets_rewritten"] == 0
@@ -271,9 +272,9 @@ def test_hot_key_world_replay_parity(spark, tmp_path):
 
 
 def test_inline_discovery_replay_parity(spark, tmp_path):
-    """INLINE_DISCOVERY skips the discovery job; the decode overlay
+    """The default replay runs no discovery job; the decode overlay
     resolves TABLE_MAPs from its own partitions — including a mid-stream
-    ALTER — and the final state matches the discovered-meta replay."""
+    ALTER — and the final state matches the generator's."""
     gen = genlog.CdcWorldGenerator(seed=17, n_repos=12, paths_per_repo=8,
                                    txns_per_file=30, evolve_at_txn=45)
     result = gen.generate(n_txns=120)
@@ -284,9 +285,9 @@ def test_inline_discovery_replay_parity(spark, tmp_path):
                             columns=genlog.table_spec(True).col_names,
                             key_cols=list(genlog.KEY_COLS), n_buckets=4)
     stats = pipeline.replay_batch(
-        spark, frames, lake, genlog.table_registry(), batch_id=0,
-        stream_meta=pipeline.INLINE_DISCOVERY)
+        spark, frames, lake, genlog.table_registry(), batch_id=0)
     assert stats["n_changes"] == len(result.changes)
+    assert stats["fallback_files"] == 0
     got = {(r["repo"], r["path"]): (r["content"], r["stars"])
            for r in lake.to_df().collect()}
     want = {k: (v["content"], v.get("stars"))
@@ -297,7 +298,8 @@ def test_inline_discovery_replay_parity(spark, tmp_path):
 def test_inline_discovery_foreign_partition_dead_letters(spark, tmp_path):
     """The documented contract when partitions do NOT hold whole files:
     a ROWS event whose TABLE_MAP landed elsewhere dead-letters (never
-    mis-decodes); with the discovery job the same layout decodes fully."""
+    mis-decodes); with the discovery job the same layout decodes fully,
+    and ``replay_batch`` takes that path for every split file."""
     from binlog_spark.operators.decode import (decode_frames,
                                                discover_stream_meta)
 
@@ -318,6 +320,20 @@ def test_inline_discovery_foreign_partition_dead_letters(spark, tmp_path):
     meta = discover_stream_meta(df)
     full = decode_frames(spark, df, meta, genlog.table_registry())
     assert full.where(full.kind == "change").count() == len(result.changes)
+
+    # the replay sees the split layout in its decode tasks' report and
+    # re-assembles every file on the window path: nothing dead-letters
+    lake = LakeTable.create(spark, str(tmp_path / "lake_split"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=4)
+    stats = pipeline.replay_batch(spark, df, lake, genlog.table_registry(),
+                                  batch_id=0)
+    assert stats["fallback_files"] > 0
+    assert stats["n_changes"] == len(result.changes)
+    got = {(r["repo"], r["path"]): r.asDict() for r in
+           lake.to_df().collect()}
+    assert got == {k: {c: v.get(c) for c in genlog.table_spec().col_names}
+                   for k, v in result.final_state.items()}
 
 
 def test_lww_latest_and_txn_summaries(spark, world):

@@ -43,6 +43,34 @@ def test_decode_stage_is_shuffle_free(spark, frames):
     assert plans.count_shuffles(decoded) == 0, plans.physical_plan(decoded)
 
 
+def test_replay_change_set_is_one_shuffle_free_stage(spark, frames,
+                                                     tmp_path, monkeypatch):
+    """The change set a whole-file batch persists is decoded and
+    transaction-assembled in the scan's own tasks: no Window node, no
+    Exchange."""
+    from binlog_spark.operators.merge import LakeTable
+
+    cls = type(frames)
+    real = cls.persist
+    persisted = []
+
+    def capture(self, *a, **kw):
+        persisted.append(self)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "persist", capture)
+    lake = LakeTable.create(spark, str(tmp_path / "lake"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=4)
+    stats = pipeline.replay_batch(spark, frames, lake,
+                                  genlog.table_registry(), batch_id=0)
+    assert stats["fallback_files"] == 0
+    (changes,) = persisted
+    plan = plans.physical_plan(changes)
+    assert "Window" not in plan, plan
+    assert plans.count_shuffles(changes) == 0, plan
+
+
 def test_dim_join_broadcasts(spark, sf_dir):
     df = join_broadcast_part_counts(spark, sf_dir)
     assert plans.has_broadcast_join(df), plans.physical_plan(df)

@@ -139,3 +139,66 @@ def test_structured_stream_guard_stays_silent_in_order(spark, tmp_path):
                    str(tmp_path / "ckpt3"), max_files_per_trigger=1)
     q.awaitTermination(120)
     assert _state(LakeTable(spark, lake.path)) == _want(result)
+
+
+def test_file_spanning_microbatches_feeds_the_store(spark, tmp_path,
+                                                     monkeypatch):
+    """One binlog file landed as two parquet chunks split at a GTID, one
+    chunk per microbatch: the first batch's decode tasks put the file's
+    TABLE_MAP in the stored cache, the second batch decodes with it, the
+    lake ends equal to the generator's state, and no batch runs a
+    discovery job (two collects each: the summary and the merge)."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from binlog_spark.wire import constants as C
+
+    gen = genlog.CdcWorldGenerator(seed=33, n_repos=6, paths_per_repo=5,
+                                   txns_per_file=1000)
+    result = gen.generate(n_txns=40)
+    (name,) = {f for f, _, _, _ in result.frames}
+    gtids = [p for _, p, et, _ in result.frames if et == C.E_GTID]
+    cut = gtids[len(gtids) // 2]
+    src = str(tmp_path / "frames")
+    os.makedirs(src)
+    for tag, keep in (("a", lambda p: p < cut), ("b", lambda p: p >= cut)):
+        rows = [r for r in result.frames if keep(r[1])]
+        pq.write_table(pa.table({
+            "file": pa.array([r[0] for r in rows], pa.string()),
+            "pos": pa.array([r[1] for r in rows], pa.int64()),
+            "etype": pa.array([r[2] for r in rows], pa.int32()),
+            "frame": pa.array([r[3] for r in rows], pa.binary()),
+        }), os.path.join(src, f"{name}.{tag}.parquet"))
+
+    calls = {"collect": 0}
+    cls = type(spark.range(1))
+    real = cls.collect
+
+    def counted(self, *a, **kw):
+        calls["collect"] += 1
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "collect", counted)
+    staged = str(tmp_path / "staged")
+    os.makedirs(staged)
+    lake = LakeTable.create(spark, str(tmp_path / "lake_span"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=4)
+    ckpt = str(tmp_path / "ckpt_span")
+    store = os.path.join(ckpt, "table_map_cache.json")
+    for tag in ("a", "b"):
+        chunk = f"{name}.{tag}.parquet"
+        os.link(os.path.join(src, chunk), os.path.join(staged, chunk))
+        calls["collect"] = 0
+        out = run_stream_ordered(spark, staged, lake.path,
+                                 genlog.table_registry(), ckpt,
+                                 max_files_per_trigger=1)
+        assert out == {"batches": 1, "files": 1}
+        assert calls["collect"] == 2
+        if tag == "a":
+            with open(store) as f:
+                keys = list(json.load(f)["table_maps"])
+            assert keys and all(k.startswith(f"{name}@") for k in keys)
+    assert _state(LakeTable(spark, lake.path)) == _want(result)
