@@ -11,8 +11,9 @@ Public surface, by half of the pipeline:
 * change rows → lake: ``operators.merge.LakeTable`` (bucketed
   copy-on-write, idempotent MERGE, snapshot log/time travel),
   ``pipeline.replay_batch`` / ``replay_batch_multi`` (batch apply,
-  multi-table fan-out; ``operators.lww.fold_changes`` is the one per-key
-  fold), ``streaming.pipeline.run_stream`` (checkpointed exactly-once
+  multi-table fan-out; ``operators.lww.fold_batches`` is the one per-key
+  fold kernel, run inside the MERGE by ``LakeTable.apply_changes``),
+  ``streaming.pipeline.run_stream`` (checkpointed exactly-once
   streaming from frame parquet or a raw-binlog archive, to one lake or
   several) / ``run_stream_ordered`` (name-ordered, mtime-immune),
   ``operators.rollup.RollupTable`` (incremental continuous aggregate),

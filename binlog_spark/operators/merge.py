@@ -12,15 +12,20 @@ minimal parquet + JSON-manifest implementation of the same physical design:
   (copy-on-write at bucket granularity, the same pruning Iceberg's MERGE
   INTO gets from partition-level copy-on-write); hot repos spread across
   buckets because the key includes ``path``;
-* a merge is ONE Spark job with ONE shuffle: the folded delta is
-  hash-partitioned on ``_bucket`` and sorted by it, and one Arrow task per
-  partition then handles each of its buckets in turn — read that bucket's
-  live files, hash-join base and delta on the key in Arrow, apply the LWW
-  rule column by column, and write the bucket's single
-  ``part-00000.parquet`` (temp file + ``os.replace``, so a retried task
-  replaces its file). The base is never shuffled, and there is no Spark
-  join and no Spark file commit. The job's ``(bucket, rows)`` output is
-  the list of changed buckets, so no other job looks for them;
+* an apply is ONE Spark job with ONE shuffle: the replay's change rows
+  (``apply_changes``) are hash-partitioned on ``_bucket``, computed from
+  the key, and sorted by ``(_bucket, key, gtid, seq)``; one Arrow task per
+  partition folds each key run (``lww.fold_batches``, capped at
+  ``n_buckets`` tasks) and handles each of its buckets in turn — read
+  that bucket's live files, hash-join base and folded delta on the key in
+  Arrow, apply the LWW rule column by column, and write the bucket's
+  single ``part-00000.parquet`` (temp file + ``os.replace``, so a retried
+  task replaces its file). An already folded delta (``merge_apply``: the
+  bootstrap snapshot) takes the same kernel without the fold. The base is
+  never shuffled, and there is no Spark join and no Spark file commit. The
+  job's ``(bucket, rows, keys)`` output is the list of changed buckets, so
+  no other job looks for them; ``rebucket`` writes through the same
+  bucket writer;
 * a tiny ``_meta.json`` manifest maps bucket → data version and records
   schema + applied batch ids + the GTID high-water mark; commits are
   atomic (write new data files, then ``os.replace`` the manifest);
@@ -41,7 +46,7 @@ see (local disk, or a shared mount such as NFS): the manifest commit uses
 bucket files directly.
 
 At 100 TB: n_buckets scales to O(10^4); per-batch work is
-(decode) + (fold shuffle on key) + (delta shuffle on bucket + per-bucket
+(decode) + (change shuffle on bucket + per-bucket fold and
 read/merge/write of touched buckets only).
 """
 
@@ -58,6 +63,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .lww import fold_batches, with_key
 
 
 def _bucket_expr(key_cols, n_buckets: int):
@@ -95,8 +102,8 @@ def _ints(values, idx: np.ndarray) -> np.ndarray:
 
 def merge_bucket(base: pa.Table, delta: pa.Table, cols, key_cols) -> pa.Table:
     """One bucket's MERGE in Arrow: ``base`` (stored rows, ``_arrow_schema``)
-    ⊕ ``delta`` (folded rows ``_k_*, del, full, m, g, s``) → the bucket's
-    new rows.
+    ⊕ ``delta`` (folded rows ``_k_*, del, full, mk, mv, g, s``, as
+    ``lww.fold_batches`` yields them) → the bucket's new rows.
 
     The hash join carries only row indices; every output column is one
     ``take``. A delta row applies when it is newer than the base row's
@@ -134,21 +141,24 @@ def merge_bucket(base: pa.Table, delta: pa.Table, cols, key_cols) -> pa.Table:
     full = newer & flags["full"][dc]
 
     # the map's flattened entries: ``pos[j, r]`` is the entry index of
-    # column ``cols[j]`` in delta row ``r`` (-1 when the key is absent)
-    m = delta["m"].combine_chunks()
-    offs = np.asarray(m.offsets, dtype=np.int64)
+    # column ``cols[j]`` in delta row ``r`` (-1 when the key is absent).
+    # ``mk`` and ``mv`` hold one entry per map entry, so they share their
+    # offsets, which index the unsliced ``values``
+    mk, mv = delta["mk"].combine_chunks(), delta["mv"].combine_chunks()
+    keys, items = mk.values, mv.values
+    offs = np.asarray(mk.offsets, dtype=np.int64)
     lens = np.diff(offs)
-    lens[~m.is_valid().to_numpy(zero_copy_only=False)] = 0
+    lens[~mk.is_valid().to_numpy(zero_copy_only=False)] = 0
     rows = np.repeat(np.arange(nd, dtype=np.int64), lens)
     ent = (np.arange(rows.size, dtype=np.int64)
            - np.repeat(np.cumsum(lens) - lens, lens)
            + np.repeat(offs[:-1], lens))
-    code = pc.fill_null(pc.index_in(m.keys, value_set=pa.array(
+    code = pc.fill_null(pc.index_in(keys, value_set=pa.array(
         list(cols), pa.string())), -1).to_numpy(zero_copy_only=False)[ent]
     pos = np.full((len(cols), nd), -1, np.int64)
     hit = code >= 0
     pos[code[hit], rows[hit]] = ent[hit]
-    items = pc.cast(m.items, pa.string())
+    items = pc.cast(items, pa.string())
 
     out = {}
     for jc, c in enumerate(cols):
@@ -199,41 +209,71 @@ def _bucket_dir(path: str, bucket: int, version: int) -> str:
     return os.path.join(path, "data", f"v{version:06d}", f"_bucket={bucket}")
 
 
-def _merge_kernel(path: str, version: int, live: dict, cols, key_cols):
-    """The ``mapInArrow`` body: input batches arrive sorted by
-    ``_bucket``; each bucket's delta rows are gathered (a bucket may span
+def _bucket_runs(batches):
+    """Batches clustered by ``_bucket`` → one ``(bucket, slices)`` per
+    bucket, in input order; a bucket may span batches. A bucket that
+    comes back after its run ended raises: writing it again would
+    replace the file of its first run."""
+    cur, pending, done = None, [], set()
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        b = rb.column("_bucket").to_numpy(zero_copy_only=False)
+        cuts = np.flatnonzero(b[1:] != b[:-1]) + 1
+        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, b.size]):
+            if b[lo] != cur:
+                if cur is not None:
+                    yield cur, pending
+                    done.add(cur)
+                cur, pending = int(b[lo]), []
+                if cur in done:
+                    raise RuntimeError(
+                        f"bucket {cur} is not contiguous in its partition")
+            pending.append(rb.slice(int(lo), int(hi - lo)))
+    if cur is not None:
+        yield cur, pending
+
+
+_KERNEL_OUT = "bucket long, rows long, keys long"
+
+
+def _merge_kernel(path: str, version: int, live: dict, cols, key_cols,
+                  hwm: int, fold: bool):
+    """The ``mapInArrow`` body. Input batches arrive clustered by
+    ``_bucket``: folded delta rows, or with ``fold`` change rows
+    ``(_bucket, _k_*, gtid_seq, seq_in_txn, op, after)`` sorted by
+    ``(_bucket, _k_*, gtid_seq, seq_in_txn)``, which ``lww.fold_batches``
+    folds first (``_bucket`` is a function of the key, so it leads the
+    key without changing the key runs). Folded rows at or below ``hwm``
+    are dropped. Each bucket's rows are gathered (a bucket may span
     batches), merged with its base and written to data version
-    ``version``. Yields one ``(bucket, rows)`` row per bucket."""
+    ``version``. Yields one ``(bucket, rows, keys)`` row per bucket:
+    ``rows`` written, ``keys`` the folded delta rows merged."""
     schema = _arrow_schema(cols)
-    out_schema = pa.schema([("bucket", pa.int64()), ("rows", pa.int64())])
+    out_schema = pa.schema([("bucket", pa.int64()), ("rows", pa.int64()),
+                            ("keys", pa.int64())])
 
     def flush(bucket, pending):
+        delta = pa.Table.from_batches(pending)
         base_v = live.get(str(bucket))
         base = _read_bucket(None if base_v is None else
                             _bucket_dir(path, bucket, base_v), schema)
-        merged = merge_bucket(base, pa.Table.from_batches(pending),
-                              cols, key_cols)
+        merged = merge_bucket(base, delta, cols, key_cols)
         if merged.num_rows:
             _write_bucket(merged, _bucket_dir(path, bucket, version))
         return pa.RecordBatch.from_arrays(
-            [pa.array([bucket], pa.int64()),
-             pa.array([merged.num_rows], pa.int64())], schema=out_schema)
+            [pa.array([v], pa.int64())
+             for v in (bucket, merged.num_rows, delta.num_rows)],
+            schema=out_schema)
 
     def run(batches):
-        cur, pending = None, []
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            b = rb.column("_bucket").to_numpy(zero_copy_only=False)
-            cuts = np.flatnonzero(b[1:] != b[:-1]) + 1
-            for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, b.size]):
-                if cur is not None and b[lo] != cur:
-                    yield flush(cur, pending)
-                    pending = []
-                cur = int(b[lo])
-                pending.append(rb.slice(int(lo), int(hi - lo)))
-        if cur is not None:
-            yield flush(cur, pending)
+        if fold:
+            batches = fold_batches(batches, len(key_cols) + 1)
+        if hwm >= 0:
+            batches = (rb.filter(pc.greater(rb.column("g"), hwm))
+                       for rb in batches)
+        for bucket, pending in _bucket_runs(batches):
+            yield flush(bucket, pending)
 
     return run
 
@@ -333,47 +373,7 @@ class LakeTable:
         return folded.withColumn("_bucket", _bucket_expr(
             [f"_k_{k}" for k in self.meta["key"]], self.meta["n_buckets"]))
 
-    def merge_job(self, delta: DataFrame, version: int) -> DataFrame:
-        """The MERGE as one Spark job: ``delta`` (a folded delta with
-        ``_bucket``) is shuffled once on ``_bucket``, sorted by it within
-        each partition, and each bucket is merged and written to data
-        version ``version`` by ``merge_bucket`` in the same task. No fixed
-        partition count, so AQE may coalesce partitions, but hash
-        partitioning never splits a bucket across tasks. Collecting it
-        returns one ``(bucket, rows)`` row per bucket written."""
-        key_cols = self.meta["key"]
-        kernel = _merge_kernel(self.path, version, dict(self.meta["buckets"]),
-                               list(self.meta["columns"]), list(key_cols))
-        return (delta.select(*[f"_k_{k}" for k in key_cols], "del", "full",
-                             "m", "g", "s", "_bucket")
-                .repartition(F.col("_bucket"))
-                .sortWithinPartitions("_bucket")
-                .mapInArrow(kernel, "bucket long, rows long"))
-
-    def merge_apply(self, folded: DataFrame, batch_id=None,
-                    max_gtid: int | None = None,
-                    changed_buckets: list | None = None,
-                    enforce_gtid_watermark: bool = True) -> dict:
-        """Apply a per-key folded delta (from ``lww.fold_changes``).
-
-        Exactly-once: if ``batch_id`` was already applied, no-op; row-level
-        (gtid, seq) guards make re-application idempotent regardless.
-
-        One path: the delta rows above the GTID watermark go through
-        ``merge_job``, which reads, merges and writes every bucket the
-        delta touches inside one task, straight to the lake path (so it
-        must be a POSIX path every executor sees). The job's
-        ``(bucket, rows)`` output is the list of changed buckets; when it
-        is empty, the batch commits as a no-op. ``changed_buckets=[]``
-        says the caller knows the delta is empty: the no-op commits
-        without running a job. Any other value is ignored.
-        """
-        if batch_id is not None and batch_id in self.meta["applied_batches"]:
-            return {"skipped": True, "batch_id": batch_id}
-        if changed_buckets == []:
-            return self._commit_noop(batch_id, max_gtid)
-
-        delta = folded if "_bucket" in folded.columns else self.bucket_of(folded)
+    def _kernel(self, version: int, fold: bool):
         # GTID high-water-mark guard: in an ordered CDC stream every new
         # batch's per-key folded gtid exceeds everything already applied,
         # so rows at-or-below the lake's watermark are by construction
@@ -381,59 +381,122 @@ class LakeTable:
         # replays no-ops even for keys whose base row a DELETE physically
         # removed (the tombstone problem: without this, a late older
         # insert would resurrect a deleted key).
-        # Contract: batches arrive in gtid order (the CDC stream order) —
-        # a backfill that intentionally replays an OLD gtid range must
-        # pass enforce_gtid_watermark=False and accepts that deletes below
-        # the watermark have no tombstone to guard against resurrection.
-        hwm = self.meta.get("last_gtid", -1) if enforce_gtid_watermark else -1
-        if hwm is not None and hwm >= 0:
-            delta = delta.where(F.col("g") > F.lit(hwm))
-        new_version = self.meta["version"] + 1
-        written = {r["bucket"]: r["rows"]
-                   for r in self.merge_job(delta, new_version).collect()}
-        if not written:
-            return self._commit_noop(batch_id, max_gtid)
+        return _merge_kernel(self.path, version, dict(self.meta["buckets"]),
+                             list(self.meta["columns"]),
+                             list(self.meta["key"]),
+                             self.meta.get("last_gtid", -1), fold)
 
-        # a merged bucket can hold ZERO rows (e.g. its only key was
-        # inserted and deleted within the batch, or every base row was
-        # dropped): the kernel writes no file for it, so it leaves the
-        # manifest — pointing at a never-written path would make every
-        # later read crash
+    def merge_job(self, delta: DataFrame, version: int) -> DataFrame:
+        """The MERGE of a folded delta as one Spark job: ``delta`` (with
+        ``_bucket``; its map ``m`` goes on as the key and value lists
+        ``merge_bucket`` reads) is shuffled once on ``_bucket``, sorted by
+        it within each partition, and each bucket is merged and written to
+        data version ``version`` by ``merge_bucket`` in the same task. No
+        fixed partition count, so AQE may coalesce partitions, but hash
+        partitioning never splits a bucket across tasks. Rows at or below
+        the lake's GTID watermark are dropped in the kernel. Collecting it
+        returns one ``(bucket, rows, keys)`` row per bucket written."""
+        return (delta.select(*[f"_k_{k}" for k in self.meta["key"]], "del",
+                             "full", F.map_keys("m").alias("mk"),
+                             F.map_values("m").alias("mv"), "g", "s",
+                             "_bucket")
+                .repartition(F.col("_bucket"))
+                .sortWithinPartitions("_bucket")
+                .mapInArrow(self._kernel(version, fold=False), _KERNEL_OUT))
+
+    def apply_job(self, changes: DataFrame, version: int) -> DataFrame:
+        """Fold and MERGE of change rows (CHANGE_SCHEMA) as one Spark job:
+        ``_bucket`` is computed from the key before the job's one shuffle,
+        on ``_bucket``; each partition is sorted by
+        ``(_bucket, _k_*, gtid_seq, seq_in_txn)``, and one Arrow task folds
+        each key run (``lww.fold_batches``) and merges and writes each of
+        its buckets. The fold's parallelism is capped at ``n_buckets``
+        tasks (32 in the test and benchmark lakes, so the cap does not
+        bind at 4 cores); AQE coalesces whole partitions, so a bucket
+        never splits. Collecting it returns one ``(bucket, rows, keys)``
+        row per bucket written."""
+        key_cols = self.meta["key"]
+        keys = [f"_k_{k}" for k in key_cols]
+        src = self.bucket_of(with_key(changes, key_cols))
+        return (src.select("_bucket", *keys, "gtid_seq", "seq_in_txn", "op",
+                           "after")
+                .repartition(F.col("_bucket"))
+                .sortWithinPartitions("_bucket", *keys, "gtid_seq",
+                                      "seq_in_txn")
+                .mapInArrow(self._kernel(version, fold=True), _KERNEL_OUT))
+
+    def merge_apply(self, folded: DataFrame, batch_id=None,
+                    max_gtid: int | None = None,
+                    changed_buckets: list | None = None) -> dict:
+        """Apply a per-key folded delta (from ``lww.fold_changes``, or a
+        snapshot as ``pipeline.bootstrap_from_snapshot`` builds it)
+        through ``merge_job``, with ``apply_changes``' exactly-once
+        commit and stats."""
+        delta = folded if "_bucket" in folded.columns else self.bucket_of(folded)
+        return self._apply(lambda v: self.merge_job(delta, v), batch_id,
+                           max_gtid, changed_buckets)
+
+    def apply_changes(self, changes: DataFrame, batch_id=None,
+                      max_gtid: int | None = None,
+                      changed_buckets: list | None = None) -> dict:
+        """Fold and apply change rows (CHANGE_SCHEMA) in one job,
+        ``apply_job``: the replay's path.
+
+        Exactly-once: if ``batch_id`` was already applied, no-op; row-level
+        (gtid, seq) guards make re-application idempotent regardless.
+        Folded rows at or below the lake's GTID watermark are dropped.
+
+        The job's ``(bucket, rows, keys)`` output is the list of changed
+        buckets; when it is empty, the batch commits as a no-op.
+        ``changed_buckets=[]`` says the caller knows the input is empty:
+        the no-op commits without running a job. Any other value is
+        ignored. The stats count ``delta_keys``, the folded rows merged,
+        next to ``rows_written``."""
+        return self._apply(lambda v: self.apply_job(changes, v), batch_id,
+                           max_gtid, changed_buckets)
+
+    def _apply(self, job, batch_id, max_gtid, changed_buckets) -> dict:
+        """Run ``job(version)`` unless the batch is a re-delivery or known
+        empty, then commit the manifest: the one commit of both applies."""
+        if batch_id is not None and batch_id in self.meta["applied_batches"]:
+            return {"skipped": True, "batch_id": batch_id}
+        written = {}
+        if changed_buckets != []:
+            written = {r["bucket"]: (r["rows"], r["keys"]) for r in
+                       job(self.meta["version"] + 1).collect()}
         meta = dict(self.meta)
-        meta["buckets"] = dict(meta["buckets"])
-        for b, rows in written.items():
-            if rows:
-                meta["buckets"][str(b)] = new_version
-            else:
-                meta["buckets"].pop(str(b), None)
-        meta["version"] = new_version
         if batch_id is not None:
             meta["applied_batches"] = meta["applied_batches"] + [batch_id]
         if max_gtid is not None:
             meta["last_gtid"] = max(meta["last_gtid"], int(max_gtid))
-        # snapshot log: full bucket map per committed version (tiny —
-        # n_buckets entries), enabling time-travel reads and making
-        # vacuum() deletions auditable. Iceberg snapshot analogue.
-        meta["history"] = list(meta.get("history", [])) + [{
-            "version": new_version, "batch_id": batch_id,
-            "buckets": dict(meta["buckets"]),
-            "last_gtid": meta["last_gtid"],
-        }]
+        stats = {"skipped": False, "batch_id": batch_id,
+                 "buckets_rewritten": len(written),
+                 "rows_written": sum(r for r, _ in written.values()),
+                 "delta_keys": sum(k for _, k in written.values())}
+        if written:
+            # a merged bucket can hold ZERO rows (e.g. its only key was
+            # inserted and deleted within the batch, or every base row
+            # was dropped): the kernel writes no file for it, so it
+            # leaves the manifest — pointing at a never-written path
+            # would make every later read crash
+            new_version = meta["version"] + 1
+            meta["buckets"] = dict(meta["buckets"])
+            for b, (rows, _) in written.items():
+                if rows:
+                    meta["buckets"][str(b)] = new_version
+                else:
+                    meta["buckets"].pop(str(b), None)
+            meta["version"] = stats["version"] = new_version
+            # snapshot log: full bucket map per committed version (tiny —
+            # n_buckets entries), enabling time-travel reads and making
+            # vacuum() deletions auditable. Iceberg snapshot analogue.
+            meta["history"] = list(meta.get("history", [])) + [{
+                "version": new_version, "batch_id": batch_id,
+                "buckets": dict(meta["buckets"]),
+                "last_gtid": meta["last_gtid"],
+            }]
         self._commit_meta(meta)
-        return {"skipped": False, "batch_id": batch_id,
-                "buckets_rewritten": len(written),
-                "rows_written": sum(written.values()),
-                "version": new_version}
-
-    def _commit_noop(self, batch_id, max_gtid):
-        meta = dict(self.meta)
-        if batch_id is not None:
-            meta["applied_batches"] = meta["applied_batches"] + [batch_id]
-        if max_gtid is not None:
-            meta["last_gtid"] = max(meta["last_gtid"], int(max_gtid))
-        self._commit_meta(meta)
-        return {"skipped": False, "batch_id": batch_id, "buckets_rewritten": 0,
-                "rows_written": 0}
+        return stats
 
     # ------------------------------------------------------------- maintenance
     def vacuum(self) -> dict:
@@ -487,19 +550,28 @@ class LakeTable:
         new bucket id, no driver-side data movement.
         """
         key_cols = self.meta["key"]
-        base = self.read()
-        new_version = self.meta["version"] + 1
-        out_dir = os.path.join(self.path, "data", f"v{new_version:06d}")
-        df = base.withColumn("_bucket",
-                             _bucket_expr(key_cols, new_n_buckets))
-        (df.repartition(max(new_n_buckets, 1), F.col("_bucket"))
-         .write.mode("overwrite").partitionBy("_bucket").parquet(out_dir))
-        written = {d.split("=", 1)[1] for d in os.listdir(out_dir)
-                   if d.startswith("_bucket=")} if os.path.isdir(out_dir) \
-            else set()
+        schema = _arrow_schema(self.meta["columns"])
+        path, new_version = self.path, self.meta["version"] + 1
+
+        def write(batches):
+            for bucket, parts in _bucket_runs(batches):
+                table = (pa.Table.from_batches(parts).select(schema.names)
+                         .cast(schema))
+                _write_bucket(table, _bucket_dir(path, bucket, new_version))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([bucket], pa.int64()),
+                     pa.array([table.num_rows], pa.int64())],
+                    names=["bucket", "rows"])
+
+        bucket = _bucket_expr(key_cols, new_n_buckets)
+        written = {r["bucket"]: r["rows"] for r in self.read()
+                   .withColumn("_bucket", bucket)
+                   .repartition(F.col("_bucket"))
+                   .sortWithinPartitions("_bucket")
+                   .mapInArrow(write, "bucket long, rows long").collect()}
         meta = dict(self.meta)
         meta["n_buckets"] = int(new_n_buckets)
-        meta["buckets"] = {b: new_version for b in sorted(written, key=int)}
+        meta["buckets"] = {str(b): new_version for b in sorted(written)}
         meta["version"] = new_version
         meta["history"] = list(meta.get("history", [])) + [{
             "version": new_version,

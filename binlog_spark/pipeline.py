@@ -3,11 +3,11 @@
 The Spark lifecycle equivalent of the reference's flagship path
 (`RowStreamer.Stream`, `/root/reference/row_streamer.go:66-88` — traced in
 SURVEY.md §3/E1): one shuffle-free Arrow stage that decodes each binlog
-file and assembles its transactions in the same task, one key shuffle for
-the fold, and a bucket-pruned copy-on-write MERGE — one shuffle of the
-folded delta by bucket, after which each changed bucket is read, merged
-and written inside one Arrow task (``LakeTable.merge_job``), so the lake
-path must be a POSIX path every executor sees.
+file and assembles its transactions in the same task, then one shuffle of
+the change rows by key bucket feeding the fold and a bucket-pruned
+copy-on-write MERGE: one Arrow task folds each key run and reads, merges
+and writes each of its changed buckets (``LakeTable.apply_changes``), so
+the lake path must be a POSIX path every executor sees.
 
 A batch runs these Spark actions: one summary aggregate over the cached
 change set, and one MERGE job per lake with rows in the batch. There is
@@ -15,10 +15,11 @@ no schema-discovery job: decode tasks resolve TABLE_MAPs from their own
 frames. The summary is the only pass that reads decode and assembly, it
 completes the DDL side channel and the decode tasks' report, and its
 rows give each lake its change count, its GTID high-water mark and its
-lineage record. The fold runs inside the MERGE job, its only consumer,
-so the folded delta is never cached or aggregated. Only when the report
-names files a partition did not hold whole do those files take the
-window path, at the cost of a discovery job and a second summary.
+lineage record. The fold runs inside the MERGE kernel, its only
+consumer, so the folded delta is never shuffled, cached or aggregated.
+Only when the report names files a partition did not hold whole do those
+files take the window path, at the cost of a discovery job and a second
+summary.
 """
 
 from __future__ import annotations
@@ -38,7 +39,6 @@ from .operators.decode import (
     merge_stream_meta,
 )
 from .operators.lineage import lineage_summary, write_record
-from .operators.lww import fold_changes
 from .operators.merge import LakeTable
 from .operators.transactions import assemble_transactions
 from .wire import constants as C
@@ -177,9 +177,9 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
     #      change count, its max gtid and its lineage record
     #   2. only with irregular files: discovery over their frames, then
     #      the summary again over the rebuilt change set
-    #   3. per lake with rows, the MERGE: the fold, one delta shuffle by
-    #      bucket, then each changed bucket read, merged and written in
-    #      one task
+    #   3. per lake with rows, the MERGE: one shuffle of the change rows
+    #      by key bucket, then one task folds each key run and reads,
+    #      merges and writes each changed bucket
     t_start = _time.perf_counter()
     meta = (stream_meta if stream_meta is not None else
             {"checksum_alg": C.CHECKSUM_ALG_CRC32, "table_maps": {}})
@@ -227,9 +227,8 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
             n_changes = sum(r["n_changes"] for r in rows)
             max_gtid = max((r["max_gtid"] for r in rows), default=None)
             apply_ddls(lake, ddls)
-            stats = lake.merge_apply(
-                fold_changes(changes, tuple(lake.meta["key"])),
-                batch_id=batch_id, max_gtid=max_gtid,
+            stats = lake.apply_changes(
+                changes, batch_id=batch_id, max_gtid=max_gtid,
                 changed_buckets=None if rows else [])
             stats["n_changes"] = n_changes
             stats["n_ddls"] = len(ddls)
@@ -241,6 +240,7 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
                     "fallback_files": len(irregular),
                     "buckets_rewritten": stats["buckets_rewritten"],
                     "rows_written": stats["rows_written"],
+                    "delta_keys": stats["delta_keys"],
                     "seconds": round(secs, 3),
                     "events_per_sec": (round(n_changes / secs, 1)
                                        if secs else None),
@@ -291,7 +291,8 @@ def bootstrap_from_snapshot(spark: SparkSession, snapshot: DataFrame,
     Implementation is one ``merge_apply`` of the snapshot expressed as a
     full-row folded delta — bootstrap rides the same exactly-once
     bookkeeping (re-delivering the bootstrap batch is a manifest no-op)
-    and the same one-shuffle bucketed write as every CDC batch.
+    and the same one-shuffle bucketed MERGE kernel as every CDC batch,
+    without the fold.
     """
     if batch_id in lake.meta["applied_batches"]:
         return {"skipped": True, "batch_id": batch_id}  # crash re-delivery

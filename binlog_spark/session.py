@@ -50,11 +50,10 @@ def get_spark(app_name: str = "binlog-spark", cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         # v2 file committer: task outputs move into place at task commit,
         # which skips the driver-side job-commit rename walk. On the lake
-        # side only rollup (delta layers, compaction) and
-        # LakeTable.rebucket still use Spark's committer; the MERGE kernel
-        # writes its own files. Both write fresh version dirs, so v2's
-        # weaker failure atomicity is covered by the manifest commit
-        # being the real atomicity point
+        # side only rollup (delta layers, compaction) still uses Spark's
+        # committer; LakeTable writes its own bucket files. Rollup writes
+        # fresh version dirs, so v2's weaker failure atomicity is covered
+        # by the manifest commit being the real atomicity point
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
                 "2")
         # local mode = one JVM for driver+executor: size the heap for the

@@ -102,6 +102,34 @@ def test_merge_reports_rows_written(spark, world, tmp_path):
     assert lake.to_df().count() == len(result.final_state)
 
 
+def test_delta_keys_counts_folded_rows_above_watermark(spark, world,
+                                                      tmp_path):
+    """``delta_keys`` in the stats and in the lineage record's ``metrics``
+    is the number of folded rows merged: ``fold_changes`` over the batch,
+    above the lake's GTID watermark. The second batch re-delivers the
+    first file, so some of its folded rows sit at or below the mark."""
+    import json
+
+    _result, frames_dir = world
+    lake = LakeTable.create(spark, str(tmp_path / "lake_dk"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=8)
+    frames = pipeline.read_frames(spark, frames_dir)
+    registry = genlog.table_registry()
+    for bid, part in enumerate((frames.where(F.col("file") == "binlog.000000"),
+                                frames)):
+        folded = fold_changes(pipeline.decode_to_changes(spark, part,
+                                                         registry))
+        want = folded.where(F.col("g") > lake.meta["last_gtid"]).count()
+        stats = pipeline.replay_batch(spark, part, lake, registry,
+                                      batch_id=bid)
+        assert stats["delta_keys"] == want > 0
+        with open(tmp_path / "lake_dk" / "_lineage"
+                  / f"batch-{bid}.json") as f:
+            assert json.load(f)["metrics"]["delta_keys"] == want
+    assert want < folded.count()
+
+
 def test_one_summary_action_per_batch(spark, world, tmp_path, monkeypatch):
     """A batch runs two collects (the summary, the merge job) and caches
     one DataFrame, the change set; no discovery job runs. A lake whose

@@ -907,3 +907,37 @@ def test_merge_job_one_bucket_exchange_no_join_no_writer(spark, tmp_path):
     for writer in ("InsertIntoHadoopFsRelation", "WriteFiles",
                    "DataWritingCommand"):
         assert writer not in plan, plan
+
+
+def test_apply_changes_job_one_bucket_exchange_fold_in_kernel(
+        spark, tmp_path, monkeypatch):
+    """The replay's fold + MERGE (``LakeTable.apply_changes``): ONE
+    Exchange (hash on ``_bucket``) feeding a sort and ONE Arrow kernel
+    that folds, merges and writes. No ``map_from_arrays`` (the kernel
+    reads the fold's lists as the map), no Spark join and no Spark
+    file-write command."""
+    import re
+
+    from binlog_spark import schema as S
+    from binlog_spark.operators.merge import LakeTable
+
+    lake = LakeTable.create(spark, str(tmp_path / "lake"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=4)
+    changes = spark.createDataFrame(
+        [(1, 1, 0, "binlog.000001", 4, 90, 0, "I", "db", "t", None,
+          {"repo": "r", "path": "p"})], S.CHANGE_SCHEMA)
+    cls = type(changes)
+    jobs = []
+    monkeypatch.setattr(cls, "collect", lambda self: jobs.append(self) or [])
+    lake.apply_changes(changes, batch_id=0)
+    (job,) = jobs
+    plan = plans.physical_plan(job)
+    assert plans.count_shuffles(job) == 1, plan
+    assert "hashpartitioning(_bucket" in plan, plan
+    assert len(set(re.findall(r"\((\d+)\) MapInArrow", plan))) == 1, plan
+    assert "map_from_arrays" not in plan, plan
+    assert "Join" not in plan, plan
+    for writer in ("InsertIntoHadoopFsRelation", "WriteFiles",
+                   "DataWritingCommand"):
+        assert writer not in plan, plan
