@@ -25,5 +25,10 @@ Public surface, by half of the pipeline:
 * deterministic test world: ``genlog.CdcWorldGenerator``.
 
 Imports stay lazy (submodules) so ``import binlog_spark`` is cheap and
-needs no SparkSession.
+needs no SparkSession. The one eager import, ``worker_zipimport``, stops
+a PySpark worker from re-reading pyspark.zip before each task.
 """
+
+from .worker_zipimport import install as _install_zipimport_guard
+
+_install_zipimport_guard()

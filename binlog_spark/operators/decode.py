@@ -353,8 +353,16 @@ def decode_batch(pdf: pd.DataFrame, ctx, ddl_acc=None,
     return pd.DataFrame(rows, columns=_OUT_COLS)
 
 
+def _broadcast(spark: SparkSession, value, broadcasts: list | None):
+    bc = spark.sparkContext.broadcast(value)
+    if broadcasts is not None:
+        broadcasts.append(bc)
+    return bc
+
+
 def decode_frames(spark: SparkSession, frames: DataFrame, stream_meta: dict,
-                  registry: dict, ddl_acc=None) -> DataFrame:
+                  registry: dict, ddl_acc=None,
+                  broadcasts: list | None = None) -> DataFrame:
     """Stateless vectorized decode of every frame → DECODE_OUTPUT_SCHEMA.
 
     ``ddl_acc``: optional CollectionAccumulator; DDL rows are ALSO pushed
@@ -362,6 +370,11 @@ def decode_frames(spark: SparkSession, frames: DataFrame, stream_meta: dict,
     materializes the decode — fusing the DDL side-channel scan into the
     main pass instead of spending a separate Spark job on it. Consumers
     must dedupe by (file, pos): accumulators re-fire on task retries.
+
+    ``broadcasts``: optional list that gets the broadcast of
+    ``(stream_meta, registry)``, for the caller to ``destroy()`` once the
+    result is consumed; PySpark keeps each broadcast's pickle in a driver
+    temp file until then.
 
     Runs the columnar cell splitter over ``mapInArrow``
     (operators/colsplit.py — per-column numpy offset vectors,
@@ -371,7 +384,7 @@ def decode_frames(spark: SparkSession, frames: DataFrame, stream_meta: dict,
     """
     from . import colsplit
 
-    bc = spark.sparkContext.broadcast((stream_meta, registry))
+    bc = _broadcast(spark, (stream_meta, registry), broadcasts)
 
     def _decode_arrow(batches):
         meta, reg = bc.value
@@ -385,7 +398,7 @@ def decode_frames(spark: SparkSession, frames: DataFrame, stream_meta: dict,
 
 def decode_assembled(spark: SparkSession, frames: DataFrame,
                      stream_meta: dict, registry: dict, ddl_acc,
-                     report_acc) -> DataFrame:
+                     report_acc, broadcasts: list | None = None) -> DataFrame:
     """Decode and transaction assembly in one ``mapInArrow`` task per
     partition → committed change rows (CHANGE_SCHEMA).
 
@@ -397,12 +410,13 @@ def decode_assembled(spark: SparkSession, frames: DataFrame,
     ``report_acc``: its files, as ``transactions.assemble_file_local``
     judged them, and the TABLE_MAP versions and FORMAT_DESCRIPTION
     algorithms its overlay found. A retried or recomputed task adds its
-    entry again; consumers keep one per partition."""
+    entry again; consumers keep one per partition. ``broadcasts`` as for
+    ``decode_frames``."""
     from pyspark import TaskContext
 
     from .transactions import assemble_file_local
 
-    bc = spark.sparkContext.broadcast((stream_meta, registry))
+    bc = _broadcast(spark, (stream_meta, registry), broadcasts)
 
     def _kernel(batches):
         meta, reg = bc.value

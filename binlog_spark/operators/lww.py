@@ -56,15 +56,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def key_columns(key_cols) -> dict:
+    """``{"_k_<k>": expression}`` for each key column, read from the row
+    images (after first — inserts and updates carry the key there;
+    deletes only in the identify image)."""
+    return {f"_k_{k}": F.coalesce(F.col("after")[k], F.col("before")[k])
+            for k in key_cols}
+
+
 def with_key(changes: DataFrame, key_cols=("repo", "path")) -> DataFrame:
-    """Materialize key columns from the row images (after first — inserts
-    and updates carry the key there; deletes only in the identify image)."""
-    out = changes
-    for k in key_cols:
-        out = out.withColumn(
-            f"_k_{k}", F.coalesce(F.col("after")[k], F.col("before")[k])
-        )
-    return out
+    """Materialize the key columns of ``key_columns``."""
+    return changes.withColumns(key_columns(key_cols))
 
 
 def _partial_schema(keys):

@@ -64,11 +64,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .lww import fold_batches, with_key
+from .lww import fold_batches, key_columns
 
 
 def _bucket_expr(key_cols, n_buckets: int):
-    return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
+    """Bucket id of the key columns (names or Columns)."""
+    return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
 
 
 def write_json_atomic(path: str, obj, **dump_kw):
@@ -414,14 +415,15 @@ class LakeTable:
         tasks (32 in the test and benchmark lakes, so the cap does not
         bind at 4 cores); AQE coalesces whole partitions, so a bucket
         never splits. Collecting it returns one ``(bucket, rows, keys)``
-        row per bucket written."""
-        key_cols = self.meta["key"]
-        keys = [f"_k_{k}" for k in key_cols]
-        src = self.bucket_of(with_key(changes, key_cols))
-        return (src.select("_bucket", *keys, "gtid_seq", "seq_in_txn", "op",
-                           "after")
+        row per bucket written. The input is one ``select``: each
+        DataFrame step is one analysis round trip through Py4J."""
+        kcols = key_columns(self.meta["key"])
+        bucket = _bucket_expr(list(kcols.values()), self.meta["n_buckets"])
+        return (changes.select(bucket.alias("_bucket"),
+                               *[c.alias(k) for k, c in kcols.items()],
+                               "gtid_seq", "seq_in_txn", "op", "after")
                 .repartition(F.col("_bucket"))
-                .sortWithinPartitions("_bucket", *keys, "gtid_seq",
+                .sortWithinPartitions("_bucket", *kcols, "gtid_seq",
                                       "seq_in_txn")
                 .mapInArrow(self._kernel(version, fold=True), _KERNEL_OUT))
 

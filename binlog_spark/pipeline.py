@@ -185,8 +185,9 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
             {"checksum_alg": C.CHECKSUM_ALG_CRC32, "table_maps": {}})
     ddl_acc = spark.sparkContext.accumulator([], _DdlAccum())
     report_acc = spark.sparkContext.accumulator([], _DdlAccum())
+    broadcasts: list = []
     changes_all = decode_assembled(spark, frames, meta, registry, ddl_acc,
-                                   report_acc).persist()
+                                   report_acc, broadcasts).persist()
     try:
         summary = [r.asDict() for r in
                    lineage_summary(changes_all).collect()]
@@ -200,7 +201,8 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
                                       {"table_maps": disc["table_maps"]})
             rebuilt = changes_all.where(~redo).unionByName(
                 assemble_transactions(decode_frames(
-                    spark, rest, found, registry, ddl_acc=ddl_acc)))
+                    spark, rest, found, registry, ddl_acc=ddl_acc,
+                    broadcasts=broadcasts)))
             rebuilt.persist()
             summary = [r.asDict() for r in
                        lineage_summary(rebuilt).collect()]
@@ -249,6 +251,8 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
         return out
     finally:
         changes_all.unpersist()
+        for bc in broadcasts:
+            bc.destroy()
 
 
 def read_frames(spark: SparkSession, frames_dir: str) -> DataFrame:

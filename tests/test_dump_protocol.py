@@ -116,6 +116,16 @@ def _result_packets(columns, rows):
     return pkts
 
 
+def _recv_exact(sock, n: int) -> bytes:
+    buf = b""
+    while len(buf) < n:
+        chunk = sock.recv(n - len(buf))
+        if not chunk:
+            raise ConnectionError("connection closed mid-packet")
+        buf += chunk
+    return buf
+
+
 class FakeDumpServer(threading.Thread):
     """Speaks just enough protocol: handshake, scramble-checked auth,
     OK or a canned result set for COM_QUERY, packetized frame stream +
@@ -172,7 +182,7 @@ class FakeDumpServer(threading.Thread):
             pass  # client hung up (e.g. refused an auth switch)
 
     def _serve_inner(self, conn):
-        rf, wf = conn.makefile("rb"), conn.makefile("wb")
+        wf = conn.makefile("wb")
         hs = _handshake_v10()
         if self.ssl_ctx is not None:
             # flip CLIENT_SSL on in the advertised capability low bytes
@@ -184,7 +194,12 @@ class FakeDumpServer(threading.Thread):
             _s.pack_into("<H", hs, pos, cap_low)
             hs = bytes(hs)
         D._write_packet(wf, 0, hs)
-        _, resp = D._read_packet(rf)
+        # the handshake response is read with no read-ahead: a client
+        # that sends an SSLRequest sends its TLS ClientHello right after
+        # it, and a buffered reader would swallow that before wrap_socket
+        resp = _recv_exact(conn, int.from_bytes(_recv_exact(conn, 4)[:3],
+                                                "little"))
+        rf = conn.makefile("rb")
         if self.ssl_ctx is not None and len(resp) == 32:  # SSLRequest
             caps = int.from_bytes(resp[:4], "little")
             if caps & D.CLIENT_SSL:

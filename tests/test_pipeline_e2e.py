@@ -176,6 +176,31 @@ def test_one_summary_action_per_batch(spark, world, tmp_path, monkeypatch):
     assert doc["files"] == [] and doc["metrics"]["n_changes"] == 0
 
 
+def test_replay_leaves_no_broadcast_files(spark, world, tmp_path):
+    """PySpark keeps each broadcast's pickle in a driver temp file until
+    ``destroy()``. A batch destroys its decode broadcasts, on the
+    file-local path and on the window path (a split layout), so a stream
+    of batches leaves no file behind per batch."""
+    import os
+
+    from binlog_spark.schema import FRAME_SCHEMA
+
+    result, frames_dir = world
+    whole = pipeline.read_frames(spark, frames_dir)
+    split = spark.createDataFrame(result.frames, FRAME_SCHEMA).repartition(8)
+    lake = LakeTable.create(spark, str(tmp_path / "lake_bc"),
+                            columns=genlog.table_spec().col_names,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=4)
+    temp_dir = spark.sparkContext._temp_dir
+    before = sorted(os.listdir(temp_dir))
+    for bid, frames in enumerate((whole, whole, split, split)):
+        stats = pipeline.replay_batch(spark, frames, lake,
+                                      genlog.table_registry(), batch_id=bid)
+        assert stats["n_changes"] == len(result.changes)
+    assert stats["fallback_files"] > 0
+    assert sorted(os.listdir(temp_dir)) == before
+
+
 def test_redelivered_batch_keeps_its_lineage_record(spark, world, tmp_path):
     """A batch the lake already applied is skipped, and its lineage
     record keeps the metrics of the apply that committed it."""
