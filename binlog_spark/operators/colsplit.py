@@ -510,9 +510,12 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
         pos = int(pos_np[i])
         vers = tmaps.get(key)
         if vers is not None:
+            # a split or shuffled file's frames come out of position
+            # order: a TABLE_MAP before every known version is new
             vi = bisect.bisect_right(tmap_keys[key], pos) - 1
-            cur = vers[max(vi, 0)][1]
-            if (cur[0], cur[1], tuple(cur[2]), tuple(cur[3])) == sig:
+            cur = vers[vi][1]
+            if vi >= 0 and (cur[0], cur[1], tuple(cur[2]),
+                            tuple(cur[3])) == sig:
                 continue  # same version already in effect at this pos
         payload = interned.setdefault(
             sig, (tm.database, tm.name, tm.types, tm.metadata))

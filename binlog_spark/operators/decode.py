@@ -16,17 +16,19 @@ shuffle-free Arrow stages:
    the versions the overlay added.
 
 2. **Fallback** for the files that report says were not held whole:
-   schema discovery (`discover_stream_meta`) scans only their
-   FORMAT_DESCRIPTION and TABLE_MAP frames (the predicate on `etype` is
-   pushed down to the parquet scan) and collects distinct schema versions
-   per (file, table_id) with their first-seen position; `decode_frames`
+   every frame still met some task's overlay, so the reported versions
+   index every TABLE_MAP of those files at its position; `decode_frames`
    then decodes every frame under *any* partitioning, each frame
    resolving its table schema from that broadcast index by (file,
    table_id, pos) binary search; ``transactions.assemble_transactions``
    then groups the result behind one shuffle by file. ``decode_frames``
    emits change rows plus gtid/begin/commit/rollback marker rows, a DDL
    side channel, and a dead-letter channel (INTVAR/RAND etc., which the
-   reference rejects as errors — row_streamer.go:331-339).
+   reference rejects as errors — row_streamer.go:331-339). Without a
+   report (`pipeline.decode_to_changes`), schema discovery
+   (`discover_stream_meta`) builds the index in a job of its own from
+   the FORMAT_DESCRIPTION and TABLE_MAP frames alone (the `etype`
+   predicate is pushed down to the parquet scan).
 
 Column names and signedness come from a pluggable schema provider — the
 analogue of the reference's ``MysqlTableMapper`` (`row_streamer.go:19-21`).

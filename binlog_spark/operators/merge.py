@@ -12,7 +12,7 @@ minimal parquet + JSON-manifest implementation of the same physical design:
   (copy-on-write at bucket granularity, the same pruning Iceberg's MERGE
   INTO gets from partition-level copy-on-write); hot repos spread across
   buckets because the key includes ``path``;
-* an apply is ONE Spark job with ONE shuffle: the replay's change rows
+* an apply is ONE Spark job with ONE shuffle: change rows
   (``apply_changes``) are hash-partitioned on ``_bucket``, computed from
   the key, and sorted by ``(_bucket, key, gtid, seq)``; one Arrow task per
   partition folds each key run (``lww.fold_batches``, capped at
@@ -20,12 +20,13 @@ minimal parquet + JSON-manifest implementation of the same physical design:
   that bucket's live files, hash-join base and folded delta on the key in
   Arrow, apply the LWW rule column by column, and write the bucket's
   single ``part-00000.parquet`` (temp file + ``os.replace``, so a retried
-  task replaces its file). An already folded delta (``merge_apply``: the
-  bootstrap snapshot) takes the same kernel without the fold. The base is
-  never shuffled, and there is no Spark join and no Spark file commit. The
-  job's ``(bucket, rows, keys)`` output is the list of changed buckets, so
-  no other job looks for them; ``rebucket`` writes through the same
-  bucket writer;
+  task replaces its file). Every write takes this job: the replay's
+  change rows, the bootstrap snapshot as insert rows, and an already
+  folded delta (``merge_apply``) as the one change row per key that
+  folds back to it. The base is never shuffled, and there is no Spark
+  join and no Spark file commit. The job's ``(bucket, rows, keys)``
+  output is the list of changed buckets, so no other job looks for them;
+  ``rebucket`` writes through the same bucket writer;
 * a tiny ``_meta.json`` manifest maps bucket → data version and records
   schema + applied batch ids + the GTID high-water mark; commits are
   atomic (write new data files, then ``os.replace`` the manifest);
@@ -239,17 +240,16 @@ _KERNEL_OUT = "bucket long, rows long, keys long"
 
 
 def _merge_kernel(path: str, version: int, live: dict, cols, key_cols,
-                  hwm: int, fold: bool):
+                  hwm: int):
     """The ``mapInArrow`` body. Input batches arrive clustered by
-    ``_bucket``: folded delta rows, or with ``fold`` change rows
-    ``(_bucket, _k_*, gtid_seq, seq_in_txn, op, after)`` sorted by
-    ``(_bucket, _k_*, gtid_seq, seq_in_txn)``, which ``lww.fold_batches``
-    folds first (``_bucket`` is a function of the key, so it leads the
-    key without changing the key runs). Folded rows at or below ``hwm``
-    are dropped. Each bucket's rows are gathered (a bucket may span
-    batches), merged with its base and written to data version
-    ``version``. Yields one ``(bucket, rows, keys)`` row per bucket:
-    ``rows`` written, ``keys`` the folded delta rows merged."""
+    ``_bucket``: change rows ``(_bucket, _k_*, gtid_seq, seq_in_txn, op,
+    after)`` sorted by ``(_bucket, _k_*, gtid_seq, seq_in_txn)``, which
+    ``lww.fold_batches`` folds first (``_bucket`` is a function of the
+    key, so it leads the key without changing the key runs). Folded rows
+    at or below ``hwm`` are dropped. Each bucket's rows are gathered (a
+    bucket may span batches), merged with its base and written to data
+    version ``version``. Yields one ``(bucket, rows, keys)`` row per
+    bucket: ``rows`` written, ``keys`` the folded delta rows merged."""
     schema = _arrow_schema(cols)
     out_schema = pa.schema([("bucket", pa.int64()), ("rows", pa.int64()),
                             ("keys", pa.int64())])
@@ -268,8 +268,7 @@ def _merge_kernel(path: str, version: int, live: dict, cols, key_cols,
             schema=out_schema)
 
     def run(batches):
-        if fold:
-            batches = fold_batches(batches, len(key_cols) + 1)
+        batches = fold_batches(batches, len(key_cols) + 1)
         if hwm >= 0:
             batches = (rb.filter(pc.greater(rb.column("g"), hwm))
                        for rb in batches)
@@ -370,40 +369,11 @@ class LakeTable:
         self._commit_meta(meta)
 
     def bucket_of(self, folded: DataFrame) -> DataFrame:
-        """Attach the table's bucket id to a folded delta (`_k_*` keys)."""
+        """Attach the table's bucket id to a folded delta (`_k_*` keys),
+        for a caller that groups it by bucket; the apply computes its
+        own."""
         return folded.withColumn("_bucket", _bucket_expr(
             [f"_k_{k}" for k in self.meta["key"]], self.meta["n_buckets"]))
-
-    def _kernel(self, version: int, fold: bool):
-        # GTID high-water-mark guard: in an ordered CDC stream every new
-        # batch's per-key folded gtid exceeds everything already applied,
-        # so rows at-or-below the lake's watermark are by construction
-        # re-deliveries (crash replay, late slice) — dropping them keeps
-        # replays no-ops even for keys whose base row a DELETE physically
-        # removed (the tombstone problem: without this, a late older
-        # insert would resurrect a deleted key).
-        return _merge_kernel(self.path, version, dict(self.meta["buckets"]),
-                             list(self.meta["columns"]),
-                             list(self.meta["key"]),
-                             self.meta.get("last_gtid", -1), fold)
-
-    def merge_job(self, delta: DataFrame, version: int) -> DataFrame:
-        """The MERGE of a folded delta as one Spark job: ``delta`` (with
-        ``_bucket``; its map ``m`` goes on as the key and value lists
-        ``merge_bucket`` reads) is shuffled once on ``_bucket``, sorted by
-        it within each partition, and each bucket is merged and written to
-        data version ``version`` by ``merge_bucket`` in the same task. No
-        fixed partition count, so AQE may coalesce partitions, but hash
-        partitioning never splits a bucket across tasks. Rows at or below
-        the lake's GTID watermark are dropped in the kernel. Collecting it
-        returns one ``(bucket, rows, keys)`` row per bucket written."""
-        return (delta.select(*[f"_k_{k}" for k in self.meta["key"]], "del",
-                             "full", F.map_keys("m").alias("mk"),
-                             F.map_values("m").alias("mv"), "g", "s",
-                             "_bucket")
-                .repartition(F.col("_bucket"))
-                .sortWithinPartitions("_bucket")
-                .mapInArrow(self._kernel(version, fold=False), _KERNEL_OUT))
 
     def apply_job(self, changes: DataFrame, version: int) -> DataFrame:
         """Fold and MERGE of change rows (CHANGE_SCHEMA) as one Spark job:
@@ -419,30 +389,56 @@ class LakeTable:
         DataFrame step is one analysis round trip through Py4J."""
         kcols = key_columns(self.meta["key"])
         bucket = _bucket_expr(list(kcols.values()), self.meta["n_buckets"])
+        # GTID high-water-mark guard: in an ordered CDC stream every new
+        # batch's per-key folded gtid exceeds everything already applied,
+        # so rows at-or-below the lake's watermark are by construction
+        # re-deliveries (crash replay, late slice) — dropping them keeps
+        # replays no-ops even for keys whose base row a DELETE physically
+        # removed (the tombstone problem: without this, a late older
+        # insert would resurrect a deleted key).
+        kernel = _merge_kernel(self.path, version, dict(self.meta["buckets"]),
+                               list(self.meta["columns"]),
+                               list(self.meta["key"]),
+                               self.meta.get("last_gtid", -1))
         return (changes.select(bucket.alias("_bucket"),
                                *[c.alias(k) for k, c in kcols.items()],
                                "gtid_seq", "seq_in_txn", "op", "after")
                 .repartition(F.col("_bucket"))
                 .sortWithinPartitions("_bucket", *kcols, "gtid_seq",
                                       "seq_in_txn")
-                .mapInArrow(self._kernel(version, fold=True), _KERNEL_OUT))
+                .mapInArrow(kernel, _KERNEL_OUT))
 
     def merge_apply(self, folded: DataFrame, batch_id=None,
                     max_gtid: int | None = None,
                     changed_buckets: list | None = None) -> dict:
-        """Apply a per-key folded delta (from ``lww.fold_changes``, or a
-        snapshot as ``pipeline.bootstrap_from_snapshot`` builds it)
-        through ``merge_job``, with ``apply_changes``' exactly-once
-        commit and stats."""
-        delta = folded if "_bucket" in folded.columns else self.bucket_of(folded)
-        return self._apply(lambda v: self.merge_job(delta, v), batch_id,
-                           max_gtid, changed_buckets)
+        """Apply a per-key folded delta (``lww.fold_changes``' rows:
+        ``_k_*, del, full, m, g, s``) through ``apply_changes``. Each
+        folded row becomes the one change row that folds back to it: op
+        ``D`` if ``del``, ``I`` if ``full``, else ``U``; ``after = m``;
+        ``before`` the map of the ``_k_*`` keys; ``(gtid_seq, seq_in_txn)
+        = (g, s)``. A fold's ``m`` holds a key column only with the key's
+        own value, so the change row keys to the same ``_k_*``.
+        ``_bucket`` and ``n_events``, if present, are ignored."""
+        keys = self.meta["key"]
+        changes = folded.select(
+            F.when(F.col("del"), "D").when(F.col("full"), "I")
+            .otherwise("U").alias("op"),
+            F.create_map(*[x for k in keys
+                           for x in (F.lit(k), F.col(f"_k_{k}"))])
+            .alias("before"),
+            F.col("m").alias("after"),
+            F.col("g").alias("gtid_seq"), F.col("s").alias("seq_in_txn"))
+        return self.apply_changes(changes, batch_id, max_gtid,
+                                  changed_buckets)
 
     def apply_changes(self, changes: DataFrame, batch_id=None,
                       max_gtid: int | None = None,
                       changed_buckets: list | None = None) -> dict:
-        """Fold and apply change rows (CHANGE_SCHEMA) in one job,
-        ``apply_job``: the replay's path.
+        """Fold and apply change rows (CHANGE_SCHEMA; ``apply_job`` reads
+        ``op``, ``before``, ``after``, ``gtid_seq``, ``seq_in_txn``) in one
+        job, then commit the manifest: the one way rows reach the lake
+        (``rebucket`` aside), taken by the replay, the bootstrap snapshot
+        and ``merge_apply``.
 
         Exactly-once: if ``batch_id`` was already applied, no-op; row-level
         (gtid, seq) guards make re-application idempotent regardless.
@@ -454,18 +450,13 @@ class LakeTable:
         the no-op commits without running a job. Any other value is
         ignored. The stats count ``delta_keys``, the folded rows merged,
         next to ``rows_written``."""
-        return self._apply(lambda v: self.apply_job(changes, v), batch_id,
-                           max_gtid, changed_buckets)
-
-    def _apply(self, job, batch_id, max_gtid, changed_buckets) -> dict:
-        """Run ``job(version)`` unless the batch is a re-delivery or known
-        empty, then commit the manifest: the one commit of both applies."""
         if batch_id is not None and batch_id in self.meta["applied_batches"]:
             return {"skipped": True, "batch_id": batch_id}
         written = {}
         if changed_buckets != []:
             written = {r["bucket"]: (r["rows"], r["keys"]) for r in
-                       job(self.meta["version"] + 1).collect()}
+                       self.apply_job(changes, self.meta["version"] + 1)
+                       .collect()}
         meta = dict(self.meta)
         if batch_id is not None:
             meta["applied_batches"] = meta["applied_batches"] + [batch_id]

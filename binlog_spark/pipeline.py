@@ -18,8 +18,9 @@ rows give each lake its change count, its GTID high-water mark and its
 lineage record. The fold runs inside the MERGE kernel, its only
 consumer, so the folded delta is never shuffled, cached or aggregated.
 Only when the report names files a partition did not hold whole do those
-files take the window path, at the cost of a discovery job and a second
-summary.
+files take the window path, decoded under the TABLE_MAP versions the
+decode tasks reported, at the cost of a second summary. The bootstrap
+snapshot takes the same MERGE job as insert rows.
 """
 
 from __future__ import annotations
@@ -114,8 +115,8 @@ def _read_report(entries: list):
     reports again. A file is irregular when more than one partition saw
     it or its partition reported it not ok. The found meta holds every
     TABLE_MAP version the tasks' overlays added and, if any task met a
-    FORMAT_DESCRIPTION, the highest checksum algorithm (as discovery
-    does)."""
+    FORMAT_DESCRIPTION, the highest checksum algorithm: every frame met
+    some task's overlay, so split files are covered too."""
     parts = {e[0]: e[1:] for e in entries}
     seen: dict = {}
     tmaps: dict = {}
@@ -155,13 +156,13 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
     (``decode_assembled``), which is exact for every file a partition
     holds whole, in position order. The tasks report the files they saw;
     a file seen by more than one partition, or out of order, is
-    re-assembled by the window path (discovery over its frames,
-    ``decode_frames``, ``assemble_transactions``), and the stats count
-    it as ``fallback_files``. Spark splits a parquet file larger than its
-    split size (``spark.sql.files.maxPartitionBytes``, or less when the
-    input is small against the cores) across partitions by row group, so
-    a batch of such files pays for the file-local pass and then for the
-    window path on every file.
+    re-assembled by the window path (``decode_frames`` under the
+    TABLE_MAP versions the tasks reported, ``assemble_transactions``),
+    and the stats count it as ``fallback_files``. Spark splits a parquet
+    file larger than its split size (``spark.sql.files.maxPartitionBytes``,
+    or less when the input is small against the cores) across partitions
+    by row group, so a batch of such files pays for the file-local pass
+    and then for the window path on every file.
 
     ``stream_meta``: the TABLE_MAP index of earlier batches (streaming
     keeps one across microbatches), or None for a self-contained batch.
@@ -175,8 +176,9 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
     #      cache, completes the DDL accumulator before any lake evolves
     #      and the decode tasks' report, and its rows give each lake its
     #      change count, its max gtid and its lineage record
-    #   2. only with irregular files: discovery over their frames, then
-    #      the summary again over the rebuilt change set
+    #   2. only with irregular files: the summary again over the rebuilt
+    #      change set, whose window path decodes them under the reported
+    #      TABLE_MAP versions
     #   3. per lake with rows, the MERGE: one shuffle of the change rows
     #      by key bucket, then one task folds each key run and reads,
     #      merges and writes each changed bucket
@@ -195,14 +197,10 @@ def replay_batch_multi(spark: SparkSession, frames: DataFrame, lakes: dict,
         found = merge_stream_meta(meta, found)
         if irregular:
             redo = F.col("file").isin(irregular)
-            rest = frames.where(redo)
-            disc = discover_stream_meta(rest)
-            found = merge_stream_meta(found,
-                                      {"table_maps": disc["table_maps"]})
             rebuilt = changes_all.where(~redo).unionByName(
                 assemble_transactions(decode_frames(
-                    spark, rest, found, registry, ddl_acc=ddl_acc,
-                    broadcasts=broadcasts)))
+                    spark, frames.where(redo), found, registry,
+                    ddl_acc=ddl_acc, broadcasts=broadcasts)))
             rebuilt.persist()
             summary = [r.asDict() for r in
                        lineage_summary(rebuilt).collect()]
@@ -292,27 +290,24 @@ def bootstrap_from_snapshot(spark: SparkSession, snapshot: DataFrame,
     overlap deleted are simply absent from the snapshot and stay absent),
     and everything after applies through the normal LWW merge.
 
-    Implementation is one ``merge_apply`` of the snapshot expressed as a
-    full-row folded delta — bootstrap rides the same exactly-once
-    bookkeeping (re-delivering the bootstrap batch is a manifest no-op)
-    and the same one-shuffle bucketed MERGE kernel as every CDC batch,
-    without the fold.
+    Implementation is one ``apply_changes`` of the snapshot as insert
+    change rows (op ``I``, ``after`` every lake column as a string) —
+    bootstrap rides the same exactly-once bookkeeping (re-delivering the
+    bootstrap batch is a manifest no-op) and the same one-shuffle
+    fold + bucketed MERGE job as every CDC batch: one Spark action.
     """
     if batch_id in lake.meta["applied_batches"]:
         return {"skipped": True, "batch_id": batch_id}  # crash re-delivery
     if lake.meta["buckets"] or lake.meta["applied_batches"]:
         raise ValueError("bootstrap_from_snapshot requires an empty lake "
                          "(bootstrap is the FIRST batch by definition)")
-    cols = lake.meta["columns"]
-    key_cols = lake.meta["key"]
-    m = F.create_map(*[x for c in cols
-                       for x in (F.lit(c), F.col(c).cast("string"))])
-    folded = snapshot.select(
-        *[F.col(k).cast("string").alias(f"_k_{k}") for k in key_cols],
-        F.lit(False).alias("del"), F.lit(True).alias("full"),
-        m.alias("m"),
-        F.lit(int(snapshot_gtid)).cast("long").alias("g"),
-        F.lit(0).cast("int").alias("s"),
-        F.lit(1).cast("long").alias("n_events"))
-    return lake.merge_apply(folded, batch_id=batch_id,
-                            max_gtid=int(snapshot_gtid))
+    after = F.create_map(*[x for c in lake.meta["columns"]
+                           for x in (F.lit(c), F.col(c).cast("string"))])
+    changes = snapshot.select(
+        F.lit("I").alias("op"),
+        F.lit(None).cast("map<string,string>").alias("before"),
+        after.alias("after"),
+        F.lit(int(snapshot_gtid)).cast("long").alias("gtid_seq"),
+        F.lit(0).cast("int").alias("seq_in_txn"))
+    return lake.apply_changes(changes, batch_id=batch_id,
+                              max_gtid=int(snapshot_gtid))

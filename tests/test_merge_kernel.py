@@ -1,6 +1,6 @@
 """The per-bucket Arrow MERGE (``merge.merge_bucket`` inside
-``LakeTable.merge_job``) against the SQL MERGE oracle, row for row, plus the
-file layout it leaves behind.
+``LakeTable.apply_job``, reached through ``merge_apply``) against the SQL
+MERGE oracle, row for row, plus the file layout it leaves behind.
 
 The base is written by Spark's ``partitionBy`` writer — the layout of lakes
 written before the Arrow kernel (several part files per bucket, ``.crc``
@@ -213,18 +213,18 @@ def test_bootstrap_delta_matches_sql_oracle(spark, case, tmp_path):
     snapshot = spark.createDataFrame(
         [(*r[:5], None if i % 3 else str(i)) for i, r in enumerate(base)],
         ", ".join(f"{c} string" for c in COLS))
-    seen = []
-    apply = lake.merge_apply
-
-    def capture(folded, **kw):
-        seen.append(folded)
-        return apply(folded, **kw)
-
-    lake.merge_apply = capture
+    # the snapshot as the folded delta it stands for: one full row per
+    # key, every column as a string, stamped (42, 0)
+    delta = snapshot.select(
+        *[F.col(k).alias(f"_k_{k}") for k in KEY],
+        F.lit(False).alias("del"), F.lit(True).alias("full"),
+        F.create_map(*[x for c in COLS for x in (F.lit(c), F.col(c))])
+        .alias("m"),
+        F.lit(42).cast("long").alias("g"), F.lit(0).alias("s"))
     stats = pipeline.bootstrap_from_snapshot(spark, snapshot, lake,
                                              snapshot_gtid=42)
     empty = spark.createDataFrame([], lake._schema())
-    want = _norm(merge_oracle(empty, seen[0], COLS, KEY).collect())
+    want = _norm(merge_oracle(empty, delta, COLS, KEY).collect())
     rows = lake.read().collect()
     assert _norm(rows) == want
     assert len(rows) == len(base) == stats["rows_written"]

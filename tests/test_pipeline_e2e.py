@@ -352,7 +352,8 @@ def test_inline_discovery_foreign_partition_dead_letters(spark, tmp_path):
     """The documented contract when partitions do NOT hold whole files:
     a ROWS event whose TABLE_MAP landed elsewhere dead-letters (never
     mis-decodes); with the discovery job the same layout decodes fully,
-    and ``replay_batch`` takes that path for every split file."""
+    and ``replay_batch`` re-decodes every split file on the window path
+    under the TABLE_MAP versions its decode tasks reported."""
     from binlog_spark.operators.decode import (decode_frames,
                                                discover_stream_meta)
 
@@ -944,17 +945,12 @@ def test_run_stream_multi_two_microbatches(spark, tmp_path):
                 assert _json.load(f)["batch_id"] == bid
 
 
-def test_type_widening_mid_stream(spark, tmp_path):
-    """ALTER-driven type WIDENING (north rule: column add/type-widen):
-    the TABLE_MAP's type vector changes INT→BIGINT mid-stream at the
-    same column count. The width-keyed schema lookup binds the same name
-    vector, cells decode through the new wire type, and the canonical
-    byte-string model makes the widened values land losslessly —
-    including one beyond int32 range."""
+def _widening_frames(narrow_rows, wide_txns):
+    """Frames of one binlog file for table ``db.m`` ``(k, n)``: one
+    insert transaction per row of ``narrow_rows`` under ``n INT``, then
+    the widening ALTER, then ``wide_txns`` — ``(etype, rows)`` pairs —
+    under ``n BIGINT``, every transaction with its own TABLE_MAP."""
     import struct as _struct
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from binlog_spark.wire import constants as C
     from binlog_spark.wire import events as E
@@ -965,7 +961,6 @@ def test_type_widening_mid_stream(spark, tmp_path):
                  ("n", C.TYPE_LONGLONG, 0, False)]
     narrow = E.TableMapSpec(database="db", name="m", columns=cols_narrow)
     wide = E.TableMapSpec(database="db", name="m", columns=cols_wide)
-    registry = {("db", "m"): [[("k", False), ("n", False)]]}
 
     fmt = E.BinlogFormat()
     frames, pos, gtid = [], 4, 0
@@ -993,14 +988,37 @@ def test_type_widening_mid_stream(spark, tmp_path):
         emit(C.E_XID, E.make_xid(gtid))
 
     emit(C.E_FORMAT_DESCRIPTION, E.make_format_description(fmt))
-    txn(narrow, C.E_WRITE_ROWS_V2, [(None, {"k": "a", "n": "41"})])
+    for row in narrow_rows:
+        txn(narrow, C.E_WRITE_ROWS_V2, [(None, row)])
     # the widening ALTER arrives as a QUERY event (classified, logged,
     # not applied — same as the reference), then TABLE_MAP carries the
     # new type vector
     txn(None, None, None, ddl="ALTER TABLE m MODIFY COLUMN n BIGINT")
-    txn(wide, C.E_WRITE_ROWS_V2,
-        [(None, {"k": "b", "n": str(2**40 + 7)})])  # beyond int32
-    txn(wide, C.E_UPDATE_ROWS_V2, [({"k": "a"}, {"n": "42"})])
+    for etype, rows in wide_txns:
+        txn(wide, etype, rows)
+    return frames
+
+
+_WIDEN_REGISTRY = {("db", "m"): [[("k", False), ("n", False)]]}
+
+
+def test_type_widening_mid_stream(spark, tmp_path):
+    """ALTER-driven type WIDENING (north rule: column add/type-widen):
+    the TABLE_MAP's type vector changes INT→BIGINT mid-stream at the
+    same column count. The width-keyed schema lookup binds the same name
+    vector, cells decode through the new wire type, and the canonical
+    byte-string model makes the widened values land losslessly —
+    including one beyond int32 range."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from binlog_spark.wire import constants as C
+
+    frames = _widening_frames(
+        [{"k": "a", "n": "41"}],
+        [(C.E_WRITE_ROWS_V2,
+          [(None, {"k": "b", "n": str(2**40 + 7)})]),  # beyond int32
+         (C.E_UPDATE_ROWS_V2, [({"k": "a"}, {"n": "42"})])])
 
     t = pa.table({"file": pa.array([f[0] for f in frames]),
                   "pos": pa.array([f[1] for f in frames], pa.int64()),
@@ -1014,10 +1032,71 @@ def test_type_widening_mid_stream(spark, tmp_path):
                             columns=["k", "n"], key_cols=["k"],
                             n_buckets=2, table=("db", "m"))
     fr = pipeline.read_frames(spark, str(d))
-    stats = pipeline.replay_batch(spark, fr, lake, registry, batch_id=0)
+    stats = pipeline.replay_batch(spark, fr, lake, _WIDEN_REGISTRY,
+                                  batch_id=0)
     assert stats["n_changes"] == 3
     got = {r["k"]: r["n"] for r in lake.to_df().collect()}
     assert got == {"a": "42", "b": str(2**40 + 7)}
+
+
+def test_type_widening_split_layout(spark, tmp_path, monkeypatch):
+    """The widening world with its one file out of position order: over
+    8 partitions (``repartition(8)``: every partition holds a shuffled
+    slice), and in one partition in reverse order. The file takes the
+    window path, decoded under the TABLE_MAP versions the decode tasks'
+    overlays reported — a task that meets a BIGINT TABLE_MAP before
+    every INT one must still index the INT ones, and the BIGINT ones it
+    meets after — with no discovery job: the batch runs three collects
+    (the summary, the summary over the rebuilt change set, the MERGE).
+    The versions the batch hands on to the next one resolve every
+    TABLE_MAP's position to that TABLE_MAP's own types."""
+    import bisect
+
+    from binlog_spark.schema import FRAME_SCHEMA
+    from binlog_spark.wire import constants as C
+    from binlog_spark.wire import events as E
+
+    frames = _widening_frames(
+        [{"k": f"a{i}", "n": str(i)} for i in range(6)],
+        [(C.E_WRITE_ROWS_V2, [(None, {"k": f"b{i}",
+                                      "n": str(2**40 + 7 + i)})])
+         for i in range(6)])
+    want = {f"a{i}": str(i) for i in range(6)}
+    want.update({f"b{i}": str(2**40 + 7 + i) for i in range(6)})
+    fmt = E.BinlogFormat()
+    tm_types = {p: E.parse_table_map(fmt, E.strip_checksum(
+        fmt, et, fr)).types for _, p, et, fr in frames
+        if et == C.E_TABLE_MAP}
+    layouts = {
+        "split": spark.createDataFrame(frames, FRAME_SCHEMA).repartition(8),
+        "reversed": spark.createDataFrame(frames[::-1],
+                                          FRAME_SCHEMA).coalesce(1),
+    }
+    for name, frames_df in layouts.items():
+        lake = LakeTable.create(spark, str(tmp_path / f"lk_widen_{name}"),
+                                columns=["k", "n"], key_cols=["k"],
+                                n_buckets=2, table=("db", "m"))
+        collects = []
+        cls = type(frames_df)
+        collect = cls.collect
+        monkeypatch.setattr(cls, "collect", lambda self: (
+            collects.append(self) or collect(self)))
+        meta = {"checksum_alg": C.CHECKSUM_ALG_CRC32, "table_maps": {}}
+        stats = pipeline.replay_batch(spark, frames_df, lake,
+                                      _WIDEN_REGISTRY, batch_id=0,
+                                      stream_meta=meta)
+        monkeypatch.undo()
+        vers = meta["table_maps"][("binlog.000000", 77)]
+        at = [v[0] for v in vers]
+        for pos, types in tm_types.items():
+            vi = bisect.bisect_right(at, pos) - 1
+            assert vi >= 0 and list(vers[vi][1][2]) == list(types), (
+                name, pos)
+        assert len(collects) == 3, name
+        assert stats["fallback_files"] == 1, name
+        assert stats["n_changes"] == 12, name
+        got = {r["k"]: r["n"] for r in lake.to_df().collect()}
+        assert got == want, name
 
 
 def test_run_stream_multi_kill_and_resume(spark, tmp_path):

@@ -884,29 +884,44 @@ def test_bh_fdr_is_jvm_only(spark, sf_dir):
         assert py not in plan, plan
 
 
-def test_merge_job_one_bucket_exchange_no_join_no_writer(spark, tmp_path):
-    """The MERGE: ONE Exchange (hash on ``_bucket``) feeding a sort and
-    the per-bucket Arrow kernel, which reads, merges and writes each
-    bucket itself — no Spark join (the base is never shuffled) and no
-    Spark file-write command (no per-file Hadoop commit)."""
+def test_merge_apply_and_bootstrap_one_bucket_exchange_no_join_no_writer(
+        spark, tmp_path, monkeypatch):
+    """The MERGE of a folded delta (``merge_apply``) and of a bootstrap
+    snapshot, each through ``apply_changes``: ONE Exchange (hash on
+    ``_bucket``) feeding a sort and the per-bucket Arrow kernel, which
+    reads, merges and writes each bucket itself — no Spark join (the
+    base is never shuffled) and no Spark file-write command (no per-file
+    Hadoop commit). A bootstrap runs one Spark action."""
     from binlog_spark.operators.merge import LakeTable
 
-    lake = LakeTable.create(spark, str(tmp_path / "lake"),
-                            columns=genlog.table_spec().col_names,
+    cols = genlog.table_spec().col_names
+    lake = LakeTable.create(spark, str(tmp_path / "lake"), columns=cols,
                             key_cols=list(genlog.KEY_COLS), n_buckets=4)
     delta = lake.bucket_of(spark.createDataFrame(
         [("r", "p", False, True, {"repo": "r", "path": "p"}, 1, 0, 1)],
         "_k_repo string, _k_path string, del boolean, full boolean, "
         "m map<string,string>, g long, s int, n_events long"))
-    job = lake.merge_job(delta, 1)
-    plan = plans.physical_plan(job)
-    assert plans.count_shuffles(job) == 1, plan
-    assert "hashpartitioning(_bucket" in plan, plan
-    assert "MapInArrow" in plan, plan
-    assert "Join" not in plan, plan
-    for writer in ("InsertIntoHadoopFsRelation", "WriteFiles",
-                   "DataWritingCommand"):
-        assert writer not in plan, plan
+    snapshot = spark.createDataFrame(
+        [tuple(f"{c}-0" for c in cols)],
+        ", ".join(f"{c} string" for c in cols))
+    jobs = []
+    monkeypatch.setattr(type(delta), "collect",
+                        lambda self: jobs.append(self) or [])
+    lake.merge_apply(delta, batch_id=0)
+    assert len(jobs) == 1
+    boot = LakeTable.create(spark, str(tmp_path / "boot"), columns=cols,
+                            key_cols=list(genlog.KEY_COLS), n_buckets=4)
+    pipeline.bootstrap_from_snapshot(spark, snapshot, boot, snapshot_gtid=5)
+    assert len(jobs) == 2  # the bootstrap's one action
+    for job in jobs:
+        plan = plans.physical_plan(job)
+        assert plans.count_shuffles(job) == 1, plan
+        assert "hashpartitioning(_bucket" in plan, plan
+        assert "MapInArrow" in plan, plan
+        assert "Join" not in plan, plan
+        for writer in ("InsertIntoHadoopFsRelation", "WriteFiles",
+                       "DataWritingCommand"):
+            assert writer not in plan, plan
 
 
 def test_apply_changes_job_one_bucket_exchange_fold_in_kernel(
