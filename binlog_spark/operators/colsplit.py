@@ -26,11 +26,13 @@ replaces that inner loop for the overwhelmingly common case with a
    ``MapArray``s from (constant-per-group) key vectors and one
    interleaving ``take`` — no per-row Python dict ever exists.
 
-Rows carrying SQL NULLs (data-dependent layout) divert row-by-row to the
-scalar codegen kernel mid-wave — exactness first, vectorization for the
-NULL-free common case. Schemas with cell types outside the columnar set
+A SQL NULL cell is a zero-width cell: each step reads its column's bit
+from the row image's null bitmap, a NULL row's cursor moves by 0 and its
+value is null in the column's Arrow validity (a ``None`` map value, as the
+scalar kernel emits). Schemas with cell types outside the columnar set
 (ints, VARCHAR/VARSTRING, BLOB family) fall back frame-wise to the scalar
-kernel, as do marker/bookkeeping events (tiny fixed work per frame).
+kernel, as do marker/bookkeeping events (tiny fixed work per frame) and a
+group whose wave overruns a rows-event body.
 
 Output is produced as Arrow ``RecordBatch``es for ``mapInArrow`` — the
 decode stage hands Spark ready-made Arrow buffers, skipping the
@@ -45,7 +47,7 @@ import pyarrow as pa
 from .. import schema as S
 from ..wire import constants as C
 from ..wire import events as E
-from ..wire.codec import read_lenenc_int
+from ..wire.codec import read_lenenc_int, to_text
 
 _INT_W = {C.TYPE_TINY: 1, C.TYPE_SHORT: 2, C.TYPE_INT24: 3,
           C.TYPE_LONG: 4, C.TYPE_LONGLONG: 8}
@@ -92,12 +94,10 @@ def make_image_plan(types, metadata, unsigned, names, bits: int,
     kernel). ``collations``: per-column MySQL collation ids — "var"
     steps for text columns with a known non-UTF-8 charset carry the
     source codec (decode-at-source, same contract as the scalar
-    kernel's ``make_image_decoder``)."""
+    kernel)."""
     from ..wire.collations import source_codec
 
     cols = [c for c in range(len(types)) if bits >> c & 1]
-    if (len(cols) + 7) // 8 > 7:  # int64 null-bitmap vector limit
-        return None
     steps, pnames = [], []
     for c in cols:
         t, m = types[c], metadata[c]
@@ -123,19 +123,28 @@ def _read_uint(buf, starts, nbytes: int):
     return v
 
 
-def _wave_cells(buf, starts, plan: ImagePlan):
-    """Decode one image for every row in a wave (all rows NULL-free).
+def _wave_cells(buf, cur, plan: ImagePlan):
+    """Decode one image for every row in a wave.
 
-    ``starts`` points AFTER the null bitmap. Returns (per-step values,
-    end offsets): values are int arrays for "int" steps and
-    ``(cell_starts, cell_lens)`` for "var" steps.
+    ``cur`` points at the image's null bitmap. Returns (per-step values,
+    end offsets): ``(ints, null)`` for "int" steps and ``(cell_starts,
+    cell_lens, null)`` for "var" steps. A NULL cell is zero-width; its
+    bytes are read at offset 0 instead (a NULL cell may end the buffer)
+    and ignored.
     """
-    cur = starts
+    nb = plan.null_nb
+    nulls = np.unpackbits(buf[cur[:, None] + np.arange(nb)], axis=1,
+                          count=len(plan.steps),
+                          bitorder="little").view(bool)
+    any_null = nulls.any()
+    cur = cur + nb
     out = []
-    for step in plan.steps:
+    for j, step in enumerate(plan.steps):
+        null = nulls[:, j]
+        at = np.where(null, 0, cur) if any_null else cur
         if step[0] == "int":
             w, signed = step[1], step[2]
-            v = _read_uint(buf, cur, w)
+            v = _read_uint(buf, at, w)
             if signed:
                 if w == 8:
                     v = v.view(np.int64)
@@ -145,36 +154,25 @@ def _wave_cells(buf, starts, plan: ImagePlan):
                     v = v - (v >= half) * full
             elif w != 8:
                 v = v.astype(np.int64)
-            out.append(v)
-            cur = cur + w
+            out.append((v, null))
+            cur = cur + (np.where(null, 0, w) if any_null else w)
         else:
             p = step[1]
-            ln = _read_uint(buf, cur, p).astype(np.int64)
-            out.append((cur + p, ln))
-            cur = cur + p + ln
+            ln = _read_uint(buf, at, p).astype(np.int64)
+            if any_null:
+                ln[null] = 0
+            out.append((cur + p, ln, null))
+            cur = cur + (np.where(null, 0, p + ln) if any_null else p + ln)
     return out, cur
 
 
-def _null_bits(buf, starts, null_nb: int):
-    v = buf[starts].astype(np.int64)
-    for b in range(1, null_nb):
-        v |= buf[starts + b].astype(np.int64) << (8 * b)
-    return v
-
-
-def _to_text(raw: bytes) -> str:
-    try:
-        return raw.decode("utf-8")
-    except UnicodeDecodeError:
-        return raw.decode("latin-1")
-
-
-def _string_column(buf, starts, lens, codec=None) -> pa.Array:
+def _string_column(buf, starts, lens, null, codec=None) -> pa.Array:
     """Gather variable-length cells into one contiguous Arrow string array.
 
     One repeat/cumsum fancy-index per column per batch; UTF-8 validation
     is Arrow's C++ binary→utf8 cast, with the engine's lossless latin-1
-    per-cell fallback on invalid bytes (codec.to_text contract).
+    per-cell fallback on invalid bytes (codec.to_text contract). NULL
+    cells (``null``, zero length) come out null.
     ``codec``: a declared non-UTF-8 column charset decodes every cell
     with the real codec instead (per-cell Python — acceptable: it runs
     only for columns a schema provider explicitly marked non-UTF-8)."""
@@ -205,20 +203,22 @@ def _string_column(buf, starts, lens, codec=None) -> pa.Array:
         step[bnd] = s32[1:] - (s32[:-1] + l32[:-1]) + 1
     idx = np.cumsum(step, dtype=np.int32)
     data = buf[idx]
+    validity = (pa.py_buffer(np.packbits(~null, bitorder="little"))
+                if null.any() else None)
     arr = pa.Array.from_buffers(
-        pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(data)])
+        pa.binary(), n, [validity, pa.py_buffer(offsets), pa.py_buffer(data)])
     if codec is not None:
-        return pa.array([b.decode(codec, "replace") for b in arr.to_pylist()],
-                        type=pa.string())
+        return pa.array([None if b is None else b.decode(codec, "replace")
+                         for b in arr.to_pylist()], type=pa.string())
     try:
         return arr.cast(pa.string())
     except pa.lib.ArrowInvalid:
-        return pa.array([_to_text(b) for b in arr.to_pylist()],
-                        type=pa.string())
+        return pa.array([None if b is None else to_text(b)
+                         for b in arr.to_pylist()], type=pa.string())
 
 
-def _int_column(vals) -> pa.Array:
-    return pa.array(vals).cast(pa.string())
+def _int_column(vals, null) -> pa.Array:
+    return pa.array(vals, mask=null).cast(pa.string())
 
 
 def _map_column(names, value_arrays, n: int) -> pa.Array:
@@ -241,68 +241,37 @@ def _map_column(names, value_arrays, n: int) -> pa.Array:
 
 class _Group:
     """All ROWS frames of one (schema, etype, bitmaps) signature in a
-    batch, plus the per-frame scalar-fallback hooks."""
+    batch."""
 
-    __slots__ = ("ident_plan", "data_plan", "op", "db", "tbl",
-                 "ident_dec", "data_dec", "bidx", "row_start", "body_end",
-                 "frame_off")
+    __slots__ = ("ident_plan", "data_plan", "op", "db", "tbl", "bidx",
+                 "row_start", "body_end")
 
-    def __init__(self, ident_plan, data_plan, op, db, tbl, ident_dec,
-                 data_dec):
+    def __init__(self, ident_plan, data_plan, op, db, tbl):
         self.ident_plan = ident_plan
         self.data_plan = data_plan
         self.op = op
         self.db = db
         self.tbl = tbl
-        self.ident_dec = ident_dec  # scalar codegen decoders (NULL fallback)
-        self.data_dec = data_dec
         self.bidx = []        # batch row index per frame
         self.row_start = []   # absolute offset of first row image
         self.body_end = []    # absolute end (checksum excluded)
-        self.frame_off = []   # absolute frame start (for scalar rel-pos)
 
 
-def decode_group(group: _Group, buf, mv, pos_np, next_np, ts_np, file_col,
-                 scalar_rows):
+def decode_group(group: _Group, buf, pos_np, next_np, ts_np, file_col):
     """Wave-decode one signature group → a DECODE_OUTPUT RecordBatch
-    (or None if every row diverted / group empty).
+    holding every row of its frames, NULL cells included (None if the
+    group is empty).
 
-    NULL-bearing rows divert to the scalar codegen decoders (appended to
-    ``scalar_rows`` as output tuples) while their cursor advance keeps the
-    wave exact for the remaining rows."""
-    F = len(group.bidx)
+    Raises ValueError when a wave overruns a frame's body (the caller
+    sends the group to the scalar kernel)."""
     bidx = np.asarray(group.bidx, np.int64)
     cur = np.asarray(group.row_start, np.int64)
     end = np.asarray(group.body_end, np.int64)
-    foff = np.asarray(group.frame_off, np.int64)
     ip, dp = group.ident_plan, group.data_plan
 
     acc_bidx, acc_seq = [], []
     acc_ident = [[] for _ in (ip.steps if ip else [])]
     acc_data = [[] for _ in (dp.steps if dp else [])]
-
-    frame_bytes_cache = {}
-
-    def _scalar_row(fi: int, abs_pos: int, wave: int) -> int:
-        """Decode one diverted row via the codegen kernel; emits output
-        tuples into scalar_rows; returns the new absolute cursor."""
-        fb = frame_bytes_cache.get(fi)
-        if fb is None:
-            lo = int(foff[fi])
-            fb = bytes(mv[lo:int(end[fi])])
-            frame_bytes_cache[fi] = fb
-        rel = abs_pos - int(foff[fi])
-        before = after = None
-        if group.ident_dec is not None:
-            before, rel = group.ident_dec(fb, rel)
-        if group.data_dec is not None:
-            after, rel = group.data_dec(fb, rel)
-        b = int(bidx[fi])
-        scalar_rows.append((
-            None, None, None, file_col[b].as_py(), int(pos_np[b]),
-            int(next_np[b]), int(ts_np[b]), group.op, group.db, group.tbl,
-            before, after, wave, "change", None, None))
-        return int(foff[fi]) + rel
 
     wave = 0
     while True:
@@ -310,66 +279,20 @@ def decode_group(group: _Group, buf, mv, pos_np, next_np, ts_np, file_col,
         if alive.size == 0:
             break
         acur = cur[alive]
-
-        # ---- identify image: nulls gate, then columnar cells
-        if ip is not None:
-            nulls_i = _null_bits(buf, acur, ip.null_nb)
-            ok1 = nulls_i == 0
-        else:
-            ok1 = np.ones(alive.size, bool)
-        div1 = alive[~ok1]
-        sel = alive[ok1]
-        scur = acur[ok1]
-        ident_vals = []
-        if ip is not None and sel.size:
-            ident_vals, scur = _wave_cells(buf, scur + ip.null_nb, ip)
+        for plan, acc in ((ip, acc_ident), (dp, acc_data)):
+            if plan is None:
+                continue
+            vals, acur = _wave_cells(buf, acur, plan)
             # bounds sanity: a cursor past body_end means the frame was
-            # mis-sized or corrupt — divert the WHOLE group to the scalar
+            # mis-sized or corrupt — the WHOLE group goes to the scalar
             # kernel (caller catches) instead of emitting garbage rows
-            if np.any(scur > end[sel]):
+            if np.any(acur > end[alive]):
                 raise ValueError("wave overran rows-event body")
-
-        # ---- data image
-        if dp is not None and sel.size:
-            nulls_d = _null_bits(buf, scur, dp.null_nb)
-            ok2 = nulls_d == 0
-            div2 = sel[~ok2]
-            d2cur = scur[~ok2]
-            sel = sel[ok2]
-            scur = scur[ok2]
-            if ip is not None:
-                ident_vals = [
-                    (v[0][ok2], v[1][ok2]) if isinstance(v, tuple)
-                    else v[ok2] for v in ident_vals]
-            data_vals = []
-            if sel.size:
-                data_vals, scur = _wave_cells(buf, scur + dp.null_nb, dp)
-                if np.any(scur > end[sel]):
-                    raise ValueError("wave overran rows-event body")
-        else:
-            ok2 = None
-            div2 = np.empty(0, np.int64)
-            data_vals = []
-
-        # ---- commit columnar rows
-        if sel.size:
-            acc_bidx.append(bidx[sel])
-            acc_seq.append(np.full(sel.size, wave, np.int32))
-            for i, v in enumerate(ident_vals):
-                acc_ident[i].append(v)
-            for i, v in enumerate(data_vals):
-                acc_data[i].append(v)
-            cur[sel] = scur
-
-        # ---- diverted rows: scalar decode advances their cursor exactly.
-        # div1 rows start at the row start; div2 rows already have a known
-        # ident-image start too — both re-decode the full row scalar (the
-        # codegen kernel re-reads the null bitmap itself).
-        for fi, p in zip(div1.tolist(), acur[~ok1].tolist()):
-            cur[fi] = _scalar_row(fi, p, wave)
-        if div2.size:
-            for fi, p in zip(div2.tolist(), acur[ok1][~ok2].tolist()):
-                cur[fi] = _scalar_row(fi, p, wave)
+            for a, v in zip(acc, vals):
+                a.append(v)
+        acc_bidx.append(bidx[alive])
+        acc_seq.append(np.full(alive.size, wave, np.int32))
+        cur[alive] = acur
         wave += 1
 
     n = sum(a.size for a in acc_bidx)
@@ -379,12 +302,10 @@ def decode_group(group: _Group, buf, mv, pos_np, next_np, ts_np, file_col,
     seq_all = np.concatenate(acc_seq)
 
     def _column(step, chunks):
+        parts = [np.concatenate(c) for c in zip(*chunks)]
         if step[0] == "int":
-            return _int_column(np.concatenate(chunks))
-        starts = np.concatenate([c[0] for c in chunks])
-        lens = np.concatenate([c[1] for c in chunks])
-        return _string_column(buf, starts, lens,
-                              step[2] if len(step) > 2 else None)
+            return _int_column(*parts)
+        return _string_column(buf, *parts, step[2] if len(step) > 2 else None)
 
     before = (pa.nulls(n, type=_MAP_T) if ip is None else _map_column(
         ip.names, [_column(s, acc_ident[i]) for i, s in enumerate(ip.steps)],
@@ -417,7 +338,7 @@ def decode_group(group: _Group, buf, mv, pos_np, next_np, ts_np, file_col,
 def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
     """One input RecordBatch (file, pos, etype, frame) → iterator of
     DECODE_OUTPUT RecordBatches: columnar groups first, then one batch of
-    scalar rows (markers, dead letters, fallback frames, NULL rows)."""
+    scalar rows (markers, dead letters, fallback frames)."""
     import bisect
 
     import pandas as pd
@@ -460,7 +381,7 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
     rows_mask = valid & np.isin(etype_np, list(C.ROWS_EVENT_TYPES))
 
     scalar_idx = []   # batch rows for the scalar sub-decode
-    scalar_rows = []  # pre-built output tuples (diverted rows, deadletters)
+    scalar_rows = []  # pre-built output tuples (deadletters)
 
     # file strings once per distinct value (frames are file-clustered) —
     # a per-frame Arrow scalar .as_py() is ~1µs each at 10^4 frames/batch
@@ -567,13 +488,15 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
         file = file_vals[file_code[i]]
         key = (file, table_id)
         vers = tmaps.get(key)
-        if not vers:
+        # only a TABLE_MAP at an earlier position resolves the id
+        vi = (bisect.bisect_right(tmap_keys[key], int(pos_np[i])) - 1
+              if vers else -1)
+        if vi < 0:
             scalar_rows.append(D._aux(
                 file, int(pos_np[i]), int(next_np[i]), int(ts_np[i]), None,
                 "deadletter", reason=f"no TABLE_MAP for id {table_id}"))
             continue
-        vi = bisect.bisect_right(tmap_keys[key], int(pos_np[i])) - 1
-        payload = vers[max(vi, 0)][1]
+        payload = vers[vi][1]
         db, tbl, types, metadata = payload
         if len(types) != ncols:
             scalar_idx.append(i)  # let the scalar kernel dead-letter it
@@ -598,13 +521,7 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
                 else:
                     op = ("I" if etype in C.WRITE_ROWS_TYPES else
                           "U" if etype in C.UPDATE_ROWS_TYPES else "D")
-                    ident_dec = (E.make_image_decoder(
-                        types, metadata, unsigned, names, ident_bits, colls)
-                        if has_ident else None)
-                    data_dec = (E.make_image_decoder(
-                        types, metadata, unsigned, names, data_bits, colls)
-                        if has_data else None)
-                    group = _Group(ip, dp, op, db, tbl, ident_dec, data_dec)
+                    group = _Group(ip, dp, op, db, tbl)
             plan_cache[gkey] = group
         if group == "scalar":
             scalar_idx.append(i)
@@ -612,7 +529,6 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
         group.bidx.append(i)
         group.row_start.append(p)
         group.body_end.append(fs + int(flen[i]) - int(crc_np[i]))
-        group.frame_off.append(fs)
 
     # ---- markers, vectorized: GTID (both flavors) and XID rows have a
     # fixed-offset payload — decode them columnar. QUERY classification,
@@ -670,17 +586,14 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
     live_groups = [g for g in plan_cache.values()
                    if isinstance(g, _Group) and g.bidx]
     for g in live_groups:
-        diverted: list = []
         try:
-            rb = decode_group(g, buf, mv, pos_np, next_np, ts_np, file_col,
-                              diverted)
+            rb = decode_group(g, buf, pos_np, next_np, ts_np, file_col)
         except (IndexError, ValueError):
             scalar_idx.extend(g.bidx)
         else:
-            scalar_rows.extend(diverted)
             if rb is not None:
                 yield rb
-        g.bidx, g.row_start, g.body_end, g.frame_off = [], [], [], []
+        g.bidx, g.row_start, g.body_end = [], [], []
 
     # ---- scalar sub-batch through the reference kernel
     if scalar_idx or scalar_rows:

@@ -288,12 +288,13 @@ def decode_batch(pdf: pd.DataFrame, ctx, ddl_acc=None,
             table_id = E.parse_table_id(fmt, etype, body)
             key = (file, table_id)
             vers = tmaps.get(key)
-            if not vers:
+            # only a TABLE_MAP at an earlier position resolves the id
+            vi = bisect.bisect_right(tmap_keys[key], pos) - 1 if vers else -1
+            if vi < 0:
                 append(_aux(file, pos, next_pos, ts, None, "deadletter",
                             reason=f"no TABLE_MAP for id {table_id}"))
                 continue
-            vi = bisect.bisect_right(tmap_keys[key], pos) - 1
-            db, tbl, types, metadata = vers[max(vi, 0)][1]
+            db, tbl, types, metadata = vers[vi][1]
             names_uns = _resolve_names(name_index, mapper, db, tbl,
                                        len(types))
             if names_uns is None:
@@ -380,7 +381,7 @@ def decode_frames(spark: SparkSession, frames: DataFrame, stream_meta: dict,
 
     Runs the columnar cell splitter over ``mapInArrow``
     (operators/colsplit.py — per-column numpy offset vectors,
-    Arrow-native map assembly, no per-row Python on NULL-free rows); the
+    Arrow-native map assembly, no per-row Python, NULL cells included); the
     scalar ``decode_batch`` is its fallback and its row-for-row oracle in
     tests/test_colsplit.py.
     """

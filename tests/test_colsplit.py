@@ -1,5 +1,5 @@
 """Columnar cell splitter vs the scalar reference kernel: row-for-row
-equality on worlds exercising schema evolution, NULL diversion, minimal
+equality on worlds exercising schema evolution, NULL cells, minimal
 row images, non-UTF8 bytes, and exotic-type fallback."""
 
 import numpy as np
@@ -8,6 +8,7 @@ import pyarrow as pa
 import pytest
 
 import os
+import struct
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -157,7 +158,24 @@ def _custom_world(columns, rows_events, table="t1", db="d1",
     return frames, registry
 
 
-def test_null_rows_divert_to_scalar_kernel_exactly():
+def wave_rows(frames, registry, monkeypatch):
+    """Rows each columnar group yields when ``frames`` decode as one batch
+    (a group that falls back to the scalar kernel yields none)."""
+    counts = []
+    decode_group = CS.decode_group
+
+    def spy(*args):
+        rb = decode_group(*args)
+        counts.append(0 if rb is None else rb.num_rows)
+        return rb
+
+    monkeypatch.setattr(CS, "decode_group", spy)
+    ctx = D.build_decode_context(make_meta(frames), registry)
+    list(CS.decode_batch_arrow(to_batch(frames), ctx))
+    return counts
+
+
+def test_null_cells_decode_in_the_wave_exactly(monkeypatch):
     cols = [("id", C.TYPE_LONG, 0, False),
             ("name", C.TYPE_VARCHAR, 80, False),
             ("num", C.TYPE_LONGLONG, 0, True)]
@@ -177,6 +195,67 @@ def test_null_rows_divert_to_scalar_kernel_exactly():
             for m in ch["after"]}
     assert maps["2"]["name"] is None
     assert maps["3"]["num"] == str(2**63 + 9)  # unsigned 64-bit range
+    # every row, NULL rows included, comes out of the one columnar batch
+    assert wave_rows(frames, registry, monkeypatch) == [5]
+
+
+def test_null_cell_ending_the_batch_buffer_decodes_in_the_wave(monkeypatch):
+    """Checksum off and the trailing XID left out: the rows frame ends the
+    batch buffer, and its last cell is NULL — the zero-width cell sits at
+    the buffer's end and must not read past it."""
+    cols = [("id", C.TYPE_LONG, 0, False),
+            ("name", C.TYPE_VARCHAR, 80, False)]
+    rows = [(None, {"id": "1", "name": "a"}),
+            (None, {"id": "2", "name": None})]
+    frames, registry = _custom_world(
+        cols, [(C.E_WRITE_ROWS_V2, rows)], checksum_alg=0)
+    frames = frames[:-1]
+    assert frames[-1][2] == C.E_WRITE_ROWS_V2
+    ref, got = cross_check(frames, registry)
+    assert (ref["kind"] == "change").sum() == 2
+    assert wave_rows(frames, registry, monkeypatch) == [2]
+
+
+def test_wide_table_update_with_nulls_decodes_in_the_wave(monkeypatch):
+    """70 present columns: a 9-byte null bitmap per image."""
+    cols = [(f"c{i}", C.TYPE_LONG if i % 2 else C.TYPE_VARCHAR,
+             0 if i % 2 else 300, False) for i in range(70)]
+
+    def image(r):
+        return {f"c{i}": (None if (i + r) % 7 == 0 else str(i * 31 - r))
+                for i in range(70)}
+
+    rows = [(image(r), image(r + 3)) for r in range(4)]
+    frames, registry = _custom_world(cols, [(C.E_UPDATE_ROWS_V2, rows)])
+    ref, got = cross_check(frames, registry)
+    ch = ref[ref["kind"] == "change"]
+    assert len(ch) == 4
+    assert dict(ch["after"].iloc[0])["c4"] is None
+    assert wave_rows(frames, registry, monkeypatch) == [4]
+
+
+def test_rows_event_before_its_table_map_is_a_dead_letter():
+    """Only a TABLE_MAP already read resolves a rows event's table id
+    (`row_streamer.go:220-243`): a WRITE_ROWS ahead of its TABLE_MAP is
+    a dead letter in both kernels, not decoded under the later map."""
+    cols = [("id", C.TYPE_LONG, 0, False)]
+    frames, registry = _custom_world(
+        cols, [(C.E_WRITE_ROWS_V2, [(None, {"id": "1"})])])
+    # FD, GTID, BEGIN, WRITE_ROWS, TABLE_MAP, XID — re-laid at new positions
+    order = [0, 1, 2, 4, 3, 5]
+    swapped, pos = [], 4
+    for f, _, et, fr in (frames[i] for i in order):
+        fr = bytearray(fr)
+        struct.pack_into("<I", fr, 13, pos + len(fr))
+        swapped.append((f, pos, et, bytes(fr)))
+        pos += len(fr)
+    assert [et for _, _, et, _ in swapped][3:5] == [
+        C.E_WRITE_ROWS_V2, C.E_TABLE_MAP]
+    ref, got = cross_check(swapped, registry)
+    assert (ref["kind"] == "change").sum() == 0
+    dead = ref[ref["kind"] == "deadletter"]
+    assert dead["reason"].tolist() == ["no TABLE_MAP for id 77"]
+    assert dead["pos"].tolist() == [swapped[3][1]]
 
 
 def test_minimal_update_and_delete_images_match():

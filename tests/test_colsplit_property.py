@@ -103,13 +103,21 @@ _COLUMN_TEMPLATES = [
 ]
 
 
+# the templates the columnar kernel decodes in the wave
+_COLUMNAR = [t for t in _COLUMN_TEMPLATES if t[1] in (
+    C.TYPE_TINY, C.TYPE_SHORT, C.TYPE_INT24, C.TYPE_LONG, C.TYPE_LONGLONG,
+    C.TYPE_VARCHAR, C.TYPE_BLOB)]
+
+
 @st.composite
-def _world(draw):
-    idxs = draw(st.lists(st.integers(0, len(_COLUMN_TEMPLATES) - 1),
-                         min_size=1, max_size=6))
+def _world(draw, templates, max_cols):
+    # the width first, so wide worlds are drawn as often as narrow ones
+    ncols = draw(st.integers(1, max_cols))
+    idxs = draw(st.lists(st.integers(0, len(templates) - 1),
+                         min_size=ncols, max_size=ncols))
     cols, val_strats = [], []
     for j, i in enumerate(idxs):
-        prefix, typ, meta, unsigned, vs = _COLUMN_TEMPLATES[i]
+        prefix, typ, meta, unsigned, vs = templates[i]
         cols.append((f"{prefix}{j}", typ, meta, unsigned))
         val_strats.append(vs)
 
@@ -136,8 +144,18 @@ def _world(draw):
 
 @settings(max_examples=250, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
-@given(_world())
+@given(_world(_COLUMN_TEMPLATES, 6))
 def test_columnar_matches_scalar_on_random_worlds(world):
+    cols, events = world
+    frames, registry = _custom_world(cols, events)
+    cross_check(frames, registry)
+
+
+@settings(max_examples=100, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_world(_COLUMNAR, 70))
+def test_columnar_matches_scalar_on_wide_columnar_worlds(world):
+    """Up to 70 columns of wave-decoded types: multi-byte null bitmaps."""
     cols, events = world
     frames, registry = _custom_world(cols, events)
     cross_check(frames, registry)
