@@ -526,9 +526,16 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
         if group == "scalar":
             scalar_idx.append(i)
             continue
+        body_end = fs + int(flen[i]) - int(crc_np[i])
+        if not (ident_bits | data_bits) and p < body_end:
+            # zero-width images: no wave would advance (as read_row_maps)
+            scalar_rows.append(D._aux(
+                file, int(pos_np[i]), int(next_np[i]), int(ts_np[i]), None,
+                "deadletter", reason=E.NO_PRESENT_COLUMNS))
+            continue
         group.bidx.append(i)
         group.row_start.append(p)
-        group.body_end.append(fs + int(flen[i]) - int(crc_np[i]))
+        group.body_end.append(body_end)
 
     # ---- markers, vectorized: GTID (both flavors) and XID rows have a
     # fixed-offset payload — decode them columnar. QUERY classification,

@@ -239,8 +239,8 @@ def decode_batch(pdf: pd.DataFrame, ctx, ddl_acc=None,
 
     The inner loop is the throughput-critical kernel (the Spark analogue
     of the reference's single-threaded ``parseEvents`` loop): rows-event
-    images decode through fused per-column str decoders
-    (``events.iter_row_maps``) straight into the before/after maps, and
+    images decode through the generated image decoders
+    (``events.read_row_maps``) straight into the before/after maps, and
     output rows accumulate as tuples in schema column order — no per-row
     dict construction, no second bytes→str pass. Module-level (not a
     closure) so it is directly profilable and unit-testable."""
@@ -308,6 +308,13 @@ def decode_batch(pdf: pd.DataFrame, ctx, ddl_acc=None,
                             f"table {db}.{tbl} not in registry")))
                 continue
             names, unsigned, collations = names_uns
+            image_rows = E.read_row_maps(fmt, etype, body, types,
+                                         metadata, unsigned, names,
+                                         collations)
+            if image_rows is None:
+                append(_aux(file, pos, next_pos, ts, None, "deadletter",
+                            reason=E.NO_PRESENT_COLUMNS))
+                continue
             if etype in C.WRITE_ROWS_TYPES:
                 op = "I"
             elif etype in C.UPDATE_ROWS_TYPES:
@@ -316,9 +323,7 @@ def decode_batch(pdf: pd.DataFrame, ctx, ddl_acc=None,
                 op = "D"
             posi, nposi, tsi = int(pos), int(next_pos), int(ts)
             seq = 0
-            for before, after in E.read_row_maps(fmt, etype, body, types,
-                                                 metadata, unsigned, names,
-                                                 collations):
+            for before, after in image_rows:
                 append((None, None, None, file, posi, nposi, tsi, op, db,
                         tbl, before, after, seq, "change", None, None))
                 seq += 1

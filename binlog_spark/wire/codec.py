@@ -455,7 +455,7 @@ def _decode_new_decimal(data, pos: int, metadata: int):
 
 
 # ---------------------------------------------------------------------------
-# per-column decoder specialization
+# cell text
 # ---------------------------------------------------------------------------
 
 
@@ -475,80 +475,6 @@ def to_text(raw: bytes) -> str:
         return raw.decode("latin-1")
 
 
-_DECODER_CACHE: dict = {}
-
-
-def make_cell_decoder(typ: int, metadata: int, unsigned: bool):
-    """Specialized ``(data, pos) -> (bytes|None, consumed)`` closure for one
-    column — hoists the type dispatch and metadata branching out of the
-    per-cell hot loop (the generic ``cell_bytes`` if-chain costs ~15
-    comparisons per cell for the string/blob types a repo-content table is
-    made of). Cached per (type, metadata, unsigned)."""
-    key = (typ, metadata, unsigned)
-    d = _DECODER_CACHE.get(key)
-    if d is None:
-        d = _DECODER_CACHE[key] = _build_decoder(typ, metadata, unsigned)
-    return d
-
-
-def _build_decoder(typ: int, metadata: int, unsigned: bool):
-    if typ in (C.TYPE_VARCHAR, C.TYPE_VARSTRING):
-        if metadata > 255:
-            def d(data, pos):
-                ln = data[pos] | data[pos + 1] << 8
-                return bytes(data[pos + 2 : pos + 2 + ln]), ln + 2
-        else:
-            def d(data, pos):
-                ln = data[pos]
-                return bytes(data[pos + 1 : pos + 1 + ln]), ln + 1
-        return d
-
-    if typ in (C.TYPE_TINYBLOB, C.TYPE_MEDIUMBLOB, C.TYPE_LONGBLOB,
-               C.TYPE_BLOB, C.TYPE_GEOMETRY) and 1 <= metadata <= 4:
-        width = metadata
-
-        def d(data, pos):
-            ln = int.from_bytes(data[pos : pos + width], "little")
-            start = pos + width
-            return bytes(data[start : start + ln]), ln + width
-        return d
-
-    if typ == C.TYPE_LONG:
-        if unsigned:
-            def d(data, pos):
-                return b"%d" % int.from_bytes(data[pos : pos + 4], "little"), 4
-        else:
-            def d(data, pos):
-                v = int.from_bytes(data[pos : pos + 4], "little")
-                return b"%d" % (v - 0x100000000 if v >= 0x80000000 else v), 4
-        return d
-
-    if typ == C.TYPE_LONGLONG:
-        if unsigned:
-            def d(data, pos):
-                return b"%d" % int.from_bytes(data[pos : pos + 8], "little"), 8
-        else:
-            def d(data, pos):
-                v = int.from_bytes(data[pos : pos + 8], "little")
-                return b"%d" % (v - (1 << 64) if v >= 1 << 63 else v), 8
-        return d
-
-    if typ == C.TYPE_TINY:
-        if unsigned:
-            def d(data, pos):
-                return b"%d" % data[pos], 1
-        else:
-            def d(data, pos):
-                v = data[pos]
-                return b"%d" % (v - 0x100 if v >= 0x80 else v), 1
-        return d
-
-    # everything else: generic path (fixed small cost, rarely dominant)
-    def d(data, pos):
-        return cell_bytes(data, pos, typ, metadata, unsigned)
-    return d
-
-
 _STR_DECODER_CACHE: dict = {}
 
 
@@ -561,105 +487,25 @@ _TEXT_TYPES = {C.TYPE_VARCHAR, C.TYPE_VARSTRING, C.TYPE_STRING,
 
 def make_cell_str_decoder(typ: int, metadata: int, unsigned: bool,
                           codec: str | None = None):
-    """Specialized ``(data, pos) -> (str, consumed)`` closure: the decode
-    and the canonical text conversion fused in one call, so the hot row
-    loop does one closure call per cell with no intermediate bytes→str
-    second pass. Non-UTF8 bytes take the lossless ``to_text`` path.
+    """Cached ``(data, pos) -> (str, consumed)`` closure over ``cell_bytes``
+    for one column: the cell's canonical bytes as text (``to_text``).
 
     ``codec``: a known non-UTF-8 column charset (collations.source_codec)
-    decodes AT SOURCE with that codec — no post-hoc re-interpretation,
-    which is ambiguous for non-UTF-8 bytes that happen to form valid
-    UTF-8 (r4 ADVICE / operators/charset.py residual case)."""
+    decodes a text-type cell AT SOURCE with that codec — no post-hoc
+    re-interpretation, which is ambiguous for non-UTF-8 bytes that happen
+    to form valid UTF-8 (r4 ADVICE / operators/charset.py residual case)."""
     key = (typ, metadata, unsigned, codec)
     d = _STR_DECODER_CACHE.get(key)
     if d is None:
         if codec is not None and typ in _TEXT_TYPES:
-            raw = _build_decoder(typ, metadata, unsigned)
-
-            def d(data, pos, _raw=raw, _codec=codec):
-                v, ln = _raw(data, pos)
+            def d(data, pos):
+                v, ln = cell_bytes(data, pos, typ, metadata, unsigned)
                 # substitution on decode only: one corrupt cell must not
                 # fail the job (charset_decode_column contract)
-                return v.decode(_codec, errors="replace"), ln
+                return v.decode(codec, "replace"), ln
         else:
-            d = _build_str_decoder(typ, metadata, unsigned)
+            def d(data, pos):
+                v, ln = cell_bytes(data, pos, typ, metadata, unsigned)
+                return to_text(v), ln
         _STR_DECODER_CACHE[key] = d
-    return d
-
-
-def _build_str_decoder(typ: int, metadata: int, unsigned: bool):
-    # NOTE: the try/except UTF-8→latin-1 fallback (see ``to_text``) is
-    # inlined in the string closures — a zero-cost try on the valid-UTF8
-    # fast path beats a per-cell helper call (~0.6 s / M cells measured)
-    if typ in (C.TYPE_VARCHAR, C.TYPE_VARSTRING):
-        if metadata > 255:
-            def d(data, pos):
-                ln = data[pos] | data[pos + 1] << 8
-                raw = data[pos + 2 : pos + 2 + ln]
-                try:
-                    return raw.decode("utf-8"), ln + 2
-                except UnicodeDecodeError:
-                    return raw.decode("latin-1"), ln + 2
-        else:
-            def d(data, pos):
-                ln = data[pos]
-                raw = data[pos + 1 : pos + 1 + ln]
-                try:
-                    return raw.decode("utf-8"), ln + 1
-                except UnicodeDecodeError:
-                    return raw.decode("latin-1"), ln + 1
-        return d
-
-    if typ in (C.TYPE_TINYBLOB, C.TYPE_MEDIUMBLOB, C.TYPE_LONGBLOB,
-               C.TYPE_BLOB, C.TYPE_GEOMETRY) and 1 <= metadata <= 4:
-        width = metadata
-
-        def d(data, pos):
-            ln = int.from_bytes(data[pos : pos + width], "little")
-            start = pos + width
-            raw = data[start : start + ln]
-            try:
-                return raw.decode("utf-8"), ln + width
-            except UnicodeDecodeError:
-                return raw.decode("latin-1"), ln + width
-        return d
-
-    if typ == C.TYPE_LONG:
-        if unsigned:
-            def d(data, pos):
-                return "%d" % int.from_bytes(data[pos : pos + 4],
-                                             "little"), 4
-        else:
-            def d(data, pos):
-                v = int.from_bytes(data[pos : pos + 4], "little")
-                return "%d" % (v - 0x100000000 if v >= 0x80000000 else v), 4
-        return d
-
-    if typ == C.TYPE_LONGLONG:
-        if unsigned:
-            def d(data, pos):
-                return "%d" % int.from_bytes(data[pos : pos + 8],
-                                             "little"), 8
-        else:
-            def d(data, pos):
-                v = int.from_bytes(data[pos : pos + 8], "little")
-                return "%d" % (v - (1 << 64) if v >= 1 << 63 else v), 8
-        return d
-
-    if typ == C.TYPE_TINY:
-        if unsigned:
-            def d(data, pos):
-                return "%d" % data[pos], 1
-        else:
-            def d(data, pos):
-                v = data[pos]
-                return "%d" % (v - 0x100 if v >= 0x80 else v), 1
-        return d
-
-    # generic fallback: bytes decoder + text conversion
-    raw = _build_decoder(typ, metadata, unsigned)
-
-    def d(data, pos):
-        v, ln = raw(data, pos)
-        return to_text(v), ln
     return d

@@ -7,7 +7,7 @@ binlog_event_make.go:11-411` — Packetize header layout per
 `binlog_event_common.go:13-31`; CRC32 slot present but zeroed).
 
 The parser side (`parse_header`, `parse_format_description`, `parse_query`,
-`parse_rotate`, `parse_gtid`, `parse_table_map`, `iter_rows`) is the
+`parse_rotate`, `parse_gtid`, `parse_table_map`, `read_row_maps`) is the
 event-level decode used inside the Arrow UDF stage (operators/decode.py).
 """
 
@@ -528,77 +528,6 @@ def parse_table_map(fmt: BinlogFormat, data) -> ParsedTableMap:
                           bytes(body[pos : pos + nb]))
 
 
-def iter_rows(fmt: BinlogFormat, typ: int, data, types, metadata, unsigned=None):
-    """Yield (identify_cells, data_cells) per row of a ROWS event.
-
-    Each image is a list aligned to table columns: ``(b"...", False)`` for a
-    value, ``(None, False)`` for SQL NULL, ``(None, True)`` for
-    absent-from-event (minimal row image / IsEmpty). Parity:
-    binlog_event_rbr.go:348-465 + row_streamer.go:388-477.
-    """
-    from .codec import make_cell_decoder  # local import keeps module load cheap
-
-    if unsigned is None:
-        unsigned = [False] * len(types)
-    body = data[fmt.header_length :]
-    has_identify = typ in C.UPDATE_ROWS_TYPES or typ in C.DELETE_ROWS_TYPES
-    has_data = typ in C.WRITE_ROWS_TYPES or typ in C.UPDATE_ROWS_TYPES
-
-    pos = 6 if fmt.header_size(typ) != 6 else 4
-    pos += 2  # flags
-    if typ in C.ROWS_V2_TYPES:
-        extra_len = struct.unpack_from("<H", body, pos)[0]
-        pos += extra_len
-    ncols, pos = read_lenenc_int(body, pos)
-    nb = (ncols + 7) // 8
-
-    # per-column specialized decoders (type dispatch hoisted out of the
-    # per-cell loop; cached across events)
-    decoders = [make_cell_decoder(types[c], metadata[c], unsigned[c])
-                for c in range(ncols)]
-    mask = (1 << ncols) - 1
-
-    identify_cols = data_cols = None
-    n_identify = n_data = 0
-    if has_identify:
-        identify_cols = body[pos : pos + nb]
-        pos += nb
-        n_identify = (int.from_bytes(identify_cols, "little") & mask).bit_count()
-    if has_data:
-        data_cols = body[pos : pos + nb]
-        pos += nb
-        n_data = (int.from_bytes(data_cols, "little") & mask).bit_count()
-
-    def read_image(pos, present, n_present):
-        null_nb = (n_present + 7) // 8
-        nulls = int.from_bytes(body[pos : pos + null_nb], "little")
-        present_bits = int.from_bytes(present, "little")
-        pos += null_nb
-        cells = []
-        vidx = 0
-        for c in range(ncols):
-            if not present_bits >> c & 1:
-                cells.append((None, True))  # absent: minimal row image
-                continue
-            if nulls >> vidx & 1:
-                cells.append((None, False))  # SQL NULL
-                vidx += 1
-                continue
-            val, ln = decoders[c](body, pos)
-            cells.append((val, False))
-            pos += ln
-            vidx += 1
-        return cells, pos
-
-    while pos < len(body):
-        ident = dat = None
-        if has_identify:
-            ident, pos = read_image(pos, identify_cols, n_identify)
-        if has_data:
-            dat, pos = read_image(pos, data_cols, n_data)
-        yield ident, dat
-
-
 _IMAGE_DECODER_CACHE: dict = {}
 
 
@@ -611,9 +540,11 @@ def make_image_decoder(types, metadata, unsigned, names, present_bits: int,
     inlined in declaration order with no closure dispatch, tuple returns,
     or loop bookkeeping — the same specialization a query engine's codegen
     does for a fixed row layout. Cells: VARCHAR/VARSTRING (1/2-byte len),
-    BLOB family, and the integer types inline; anything else falls back to
-    the cached per-column str decoder. Rows containing SQL NULLs take a
-    generic slow path (NULL-free is the overwhelmingly common case).
+    BLOB family, and the integer types inline; every other type goes
+    through ``codec.cell_bytes`` (via the column's cached str decoder).
+    It has two bodies built from the same arms: an image whose null
+    bitmap reads 0 runs the plain one, any other the one that tests each
+    column's null bit first (SQL NULL → ``None``).
     UTF-8 decode falls back to lossless latin-1 (codec.to_text contract).
     ``collations``: optional per-column MySQL collation ids; text columns
     with a known non-UTF-8 charset decode at source with the real codec
@@ -630,10 +561,54 @@ def make_image_decoder(types, metadata, unsigned, names, present_bits: int,
     if fn is not None:
         return fn
 
-    ncols = len(types)
-    cols = [c for c in range(ncols) if present_bits >> c & 1]
+    cols = [c for c in range(len(types)) if present_bits >> c & 1]
     null_nb = (len(cols) + 7) // 8
     ns: dict = {}
+
+    def _text_emit(nm, codec):
+        if codec is not None:
+            return [f"out[{nm}] = raw.decode({codec!r}, 'replace')"]
+        return [f"try: out[{nm}] = raw.decode('utf-8')",
+                "except UnicodeDecodeError: "
+                f"out[{nm}] = raw.decode('latin-1')"]
+
+    plain, nullable = [], []
+    for j, c in enumerate(cols):
+        t, m, u, nm = types[c], metadata[c], unsigned[c], repr(names[c])
+        if t in (C.TYPE_VARCHAR, C.TYPE_VARSTRING):
+            if m > 255:
+                arm = ["ln = body[pos] | body[pos+1] << 8",
+                       "raw = body[pos+2:pos+2+ln]",
+                       "pos += ln + 2"]
+            else:
+                arm = ["ln = body[pos]",
+                       "raw = body[pos+1:pos+1+ln]",
+                       "pos += ln + 1"]
+            arm += _text_emit(nm, codecs[c])
+        elif t in (C.TYPE_TINYBLOB, C.TYPE_MEDIUMBLOB, C.TYPE_LONGBLOB,
+                   C.TYPE_BLOB, C.TYPE_GEOMETRY) and 1 <= m <= 4:
+            arm = [f"ln = int.from_bytes(body[pos:pos+{m}], 'little')",
+                   f"raw = body[pos+{m}:pos+{m}+ln]",
+                   f"pos += ln + {m}"]
+            arm += _text_emit(nm, codecs[c] if t != C.TYPE_GEOMETRY
+                              else None)
+        elif t in (C.TYPE_TINY, C.TYPE_SHORT, C.TYPE_INT24, C.TYPE_LONG,
+                   C.TYPE_LONGLONG):
+            w = {C.TYPE_TINY: 1, C.TYPE_SHORT: 2, C.TYPE_INT24: 3,
+                 C.TYPE_LONG: 4, C.TYPE_LONGLONG: 8}[t]
+            arm = [f"v = int.from_bytes(body[pos:pos+{w}], 'little')"]
+            if not u:
+                half, full = 1 << (8 * w - 1), 1 << (8 * w)
+                arm.append(f"v -= {full} if v >= {half} else 0")
+            arm += [f"out[{nm}] = '%d' % v", f"pos += {w}"]
+        else:
+            ns[f"_d{j}"] = make_cell_str_decoder(t, m, u, codec=codecs[c])
+            arm = [f"out[{nm}], ln = _d{j}(body, pos)",
+                   "pos += ln"]
+        plain += arm
+        nullable += [f"if nulls >> {j} & 1: out[{nm}] = None",
+                     "else:"] + ["    " + a for a in arm]
+
     L = ["def _img(body, pos):"]
     if null_nb == 1:
         L.append("    nulls = body[pos]")
@@ -641,99 +616,38 @@ def make_image_decoder(types, metadata, unsigned, names, present_bits: int,
         L.append(f"    nulls = int.from_bytes(body[pos:pos+{null_nb}], "
                  "'little')")
     L += [f"    pos += {null_nb}",
-          "    if nulls:",
-          "        return _with_nulls(body, pos, nulls)",
-          "    out = {}"]
-    def _text_emit(nm, c):
-        if codecs[c] is not None:
-            return [f"    out[{nm}] = raw.decode({codecs[c]!r}, 'replace')"]
-        return [f"    try: out[{nm}] = raw.decode('utf-8')",
-                "    except UnicodeDecodeError: "
-                f"out[{nm}] = raw.decode('latin-1')"]
-
-    for j, c in enumerate(cols):
-        t, m, u, nm = types[c], metadata[c], unsigned[c], repr(names[c])
-        if t in (C.TYPE_VARCHAR, C.TYPE_VARSTRING):
-            if m > 255:
-                L += ["    ln = body[pos] | body[pos+1] << 8",
-                      "    raw = body[pos+2:pos+2+ln]",
-                      "    pos += ln + 2"]
-            else:
-                L += ["    ln = body[pos]",
-                      "    raw = body[pos+1:pos+1+ln]",
-                      "    pos += ln + 1"]
-            L += _text_emit(nm, c)
-        elif t in (C.TYPE_TINYBLOB, C.TYPE_MEDIUMBLOB, C.TYPE_LONGBLOB,
-                   C.TYPE_BLOB, C.TYPE_GEOMETRY) and 1 <= m <= 4:
-            L += [f"    ln = int.from_bytes(body[pos:pos+{m}], 'little')",
-                  f"    raw = body[pos+{m}:pos+{m}+ln]",
-                  f"    pos += ln + {m}"]
-            L += (_text_emit(nm, c) if t != C.TYPE_GEOMETRY
-                  else [f"    try: out[{nm}] = raw.decode('utf-8')",
-                        "    except UnicodeDecodeError: "
-                        f"out[{nm}] = raw.decode('latin-1')"])
-        elif t in (C.TYPE_TINY, C.TYPE_SHORT, C.TYPE_INT24, C.TYPE_LONG,
-                   C.TYPE_LONGLONG):
-            w = {C.TYPE_TINY: 1, C.TYPE_SHORT: 2, C.TYPE_INT24: 3,
-                 C.TYPE_LONG: 4, C.TYPE_LONGLONG: 8}[t]
-            L.append(
-                f"    v = int.from_bytes(body[pos:pos+{w}], 'little')")
-            if not u:
-                half, full = 1 << (8 * w - 1), 1 << (8 * w)
-                L.append(f"    v -= {full} if v >= {half} else 0")
-            L += [f"    out[{nm}] = '%d' % v", f"    pos += {w}"]
-        else:
-            ns[f"_d{j}"] = make_cell_str_decoder(t, m, u, codec=codecs[c])
-            L += [f"    v, ln = _d{j}(body, pos)",
-                  f"    out[{nm}] = v",
-                  "    pos += ln"]
+          "    out = {}",
+          "    if not nulls:"]
+    L += ["        " + a for a in plain or ["pass"]]
+    L.append("    else:")
+    L += ["        " + a for a in nullable or ["pass"]]
     L.append("    return out, pos")
-
-    plan = [(names[c], make_cell_str_decoder(types[c], metadata[c],
-                                             unsigned[c], codec=codecs[c]))
-            for c in cols]
-
-    def _with_nulls(body, pos, nulls):
-        out = {}
-        for vidx, (name, dec) in enumerate(plan):
-            if nulls >> vidx & 1:
-                out[name] = None
-            else:
-                v, ln = dec(body, pos)
-                out[name] = v
-                pos += ln
-        return out, pos
-
-    ns["_with_nulls"] = _with_nulls
     exec("\n".join(L), ns)  # noqa: S102 — codegen over repr()-escaped names
     fn = _IMAGE_DECODER_CACHE[key] = ns["_img"]
     return fn
 
 
-def iter_row_maps(fmt: BinlogFormat, typ: int, data, types, metadata,
-                  unsigned, names, collations=None):
-    """Iterate ``(before_map, after_map)`` per row of a ROWS event (see
-    ``read_row_maps`` — this is its iterator facade)."""
-    return iter(read_row_maps(fmt, typ, data, types, metadata, unsigned,
-                              names, collations))
+# dead-letter reason for a rows event none of whose images has a present
+# column yet whose body goes on past the bitmaps: each image is zero
+# bytes wide, so no row can be read from it
+NO_PRESENT_COLUMNS = "rows event with no present columns"
 
 
 def read_row_maps(fmt: BinlogFormat, typ: int, data, types, metadata,
-                  unsigned, names, collations=None) -> list:
-    """All ``(before_map, after_map)`` rows of a ROWS event — the hot
-    decode kernel.
+                  unsigned, names, collations=None):
+    """All ``(before_map, after_map)`` rows of a ROWS event — the scalar
+    decode kernel, or None when the event has no present column but body
+    bytes remain (``NO_PRESENT_COLUMNS``).
 
-    Same wire semantics as ``iter_rows`` but fused with row
-    materialization (P26): each image is decoded straight into the
-    ``{column_name: canonical_str | None}`` map the change schema carries,
-    with absent columns (minimal row image / ``IsEmpty``) omitted — no
-    intermediate per-cell tuple list or second bytes→str pass. Per-column
-    str decoders are specialized+cached (codec.make_cell_str_decoder);
-    image decoders are exec-generated per (schema, present-bitmap)
-    (``make_image_decoder``). Returns a list (events are bounded by the
-    wire's event-size cap, so materializing is cheap) — a plain loop over
-    a list avoids the generator frame switching that showed up in decode
-    profiles."""
+    Each image is decoded straight into the ``{column_name:
+    canonical_str | None}`` map the change schema carries (SQL NULL is
+    ``None``), with absent columns (minimal row image / ``IsEmpty``)
+    omitted; wire semantics as binlog_event_rbr.go:348-465 +
+    row_streamer.go:388-477. Image decoders are exec-generated per
+    (schema, present-bitmap) (``make_image_decoder``). Returns a list
+    (events are bounded by the wire's event-size cap, so materializing is
+    cheap) — a plain loop over a list avoids the generator frame
+    switching that showed up in decode profiles."""
     body = data[fmt.header_length :]
     has_identify = typ in C.UPDATE_ROWS_TYPES or typ in C.DELETE_ROWS_TYPES
     has_data = typ in C.WRITE_ROWS_TYPES or typ in C.UPDATE_ROWS_TYPES
@@ -748,18 +662,21 @@ def read_row_maps(fmt: BinlogFormat, typ: int, data, types, metadata,
     mask = (1 << ncols) - 1
 
     identify_dec = data_dec = None
+    ident_bits = data_bits = 0
     if has_identify:
-        bits = int.from_bytes(body[pos : pos + nb], "little") & mask
+        ident_bits = int.from_bytes(body[pos : pos + nb], "little") & mask
         pos += nb
         identify_dec = make_image_decoder(types, metadata, unsigned, names,
-                                          bits, collations)
+                                          ident_bits, collations)
     if has_data:
-        bits = int.from_bytes(body[pos : pos + nb], "little") & mask
+        data_bits = int.from_bytes(body[pos : pos + nb], "little") & mask
         pos += nb
         data_dec = make_image_decoder(types, metadata, unsigned, names,
-                                      bits, collations)
+                                      data_bits, collations)
 
     end = len(body)
+    if not (ident_bits | data_bits) and pos < end:
+        return None
     out = []
     append = out.append
     if has_identify and has_data:  # UPDATE

@@ -258,6 +258,42 @@ def test_rows_event_before_its_table_map_is_a_dead_letter():
     assert dead["pos"].tolist() == [swapped[3][1]]
 
 
+def test_rows_event_with_no_present_columns_is_a_dead_letter():
+    """Every column bitmap 0 but row bytes after it: each image is zero
+    bytes wide, so neither kernel can advance through the body. Both
+    dead-letter the frame instead of looping (the alarm turns a hang into
+    a failure)."""
+    import signal
+
+    cols = [("id", C.TYPE_LONG, 0, False)]
+    rows = [(None, {"id": str(v)}) for v in (1, 2, 3)]
+    frames, registry = _custom_world(
+        cols, [(C.E_WRITE_ROWS_V2, rows)], checksum_alg=0)
+    k = [et for _, _, et, _ in frames].index(C.E_WRITE_ROWS_V2)
+    f, p, et, fr = frames[k]
+    # header 19 + table id 6 + flags 2 + extra-data 2 + column count 1
+    bitmap_at = C.HEADER_LEN + 6 + 2 + 2 + 1
+    assert fr[bitmap_at] == 1
+    fr = bytearray(fr)
+    fr[bitmap_at] = 0
+    frames[k] = (f, p, et, bytes(fr))
+
+    def timeout(signum, frame):
+        raise TimeoutError("decode did not end")
+
+    old = signal.signal(signal.SIGALRM, timeout)
+    signal.alarm(10)
+    try:
+        ref, got = cross_check(frames, registry)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+    assert (ref["kind"] == "change").sum() == 0
+    dead = ref[ref["kind"] == "deadletter"]
+    assert dead["reason"].tolist() == ["rows event with no present columns"]
+    assert dead["pos"].tolist() == [p]
+
+
 def test_minimal_update_and_delete_images_match():
     cols = [("id", C.TYPE_LONG, 0, False),
             ("body", C.TYPE_BLOB, 2, False)]

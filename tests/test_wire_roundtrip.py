@@ -85,7 +85,8 @@ def test_table_map_roundtrip():
 
 def _rows(buf, typ):
     body = E.strip_checksum(FMT, typ, buf)
-    return list(E.iter_rows(FMT, typ, body, VT_A.types, VT_A.metadata))
+    return E.read_row_maps(FMT, typ, body, VT_A.types, VT_A.metadata,
+                           VT_A.unsigned, VT_A.col_names)
 
 
 def test_write_rows_roundtrip():
@@ -99,7 +100,7 @@ def test_write_rows_roundtrip():
     assert len(rows) == 1
     ident, data = rows[0]
     assert ident is None
-    assert data == [(b"1076895760", False), (b"abcd", False)]
+    assert data == {"id": "1076895760", "message": "abcd"}
 
 
 def test_update_rows_roundtrip_with_null_and_minimal_image():
@@ -113,11 +114,11 @@ def test_update_rows_roundtrip_with_null_and_minimal_image():
     rows = _rows(pk(C.E_UPDATE_ROWS_V2, payload), C.E_UPDATE_ROWS_V2)
     assert len(rows) == 2
     ident0, data0 = rows[0]
-    assert ident0 == [(b"1076895760", False), (None, True)]  # message absent
-    assert data0 == [(b"1076895760", False), (None, False)]  # explicit NULL
+    assert ident0 == {"id": "1076895760"}  # message absent
+    assert data0 == {"id": "1076895760", "message": None}  # explicit NULL
     ident1, data1 = rows[1]
-    assert ident1 == [(b"5", False), (None, True)]
-    assert data1 == [(b"5", False), (b"new", False)]
+    assert ident1 == {"id": "5"}
+    assert data1 == {"id": "5", "message": "new"}
 
 
 def test_delete_rows_roundtrip():
@@ -126,7 +127,7 @@ def test_delete_rows_roundtrip():
         rows=[({"id": "1076895760", "message": "abcd"}, None)],
     )
     rows = _rows(pk(C.E_DELETE_ROWS_V2, payload), C.E_DELETE_ROWS_V2)
-    assert rows == [([(b"1076895760", False), (b"abcd", False)], None)]
+    assert rows == [({"id": "1076895760", "message": "abcd"}, None)]
 
 
 def test_multirow_write_blob_and_unsigned():
@@ -149,11 +150,11 @@ def test_multirow_write_blob_and_unsigned():
     )
     buf = pk(C.E_WRITE_ROWS_V2, payload)
     body = E.strip_checksum(FMT, C.E_WRITE_ROWS_V2, buf)
-    rows = list(E.iter_rows(FMT, C.E_WRITE_ROWS_V2, body, tm.types, tm.metadata,
-                            tm.unsigned))
-    assert rows[0][1][0] == (b"18446744073709551615", False)
-    assert rows[0][1][1] == (big.encode(), False)
-    assert rows[1][1] == [(b"1", False), (b"", False)]
+    rows = E.read_row_maps(FMT, C.E_WRITE_ROWS_V2, body, tm.types,
+                           tm.metadata, tm.unsigned, tm.col_names)
+    assert rows[0][1]["k"] == "18446744073709551615"
+    assert rows[0][1]["body"] == big
+    assert rows[1][1] == {"k": "1", "body": ""}
 
 
 def test_mariadb_gtid_roundtrip():
@@ -270,12 +271,11 @@ def test_non_utf8_blob_round_trips_through_rows_event():
     payload = E.make_rows_event(
         spec, 9, C.E_WRITE_ROWS_V2,
         rows=[(None, {"id": "42", "payload": binary}),
-              (None, {"id": "43", "payload": None})])  # NULL slow path
+              (None, {"id": "43", "payload": None})])  # SQL NULL
     frame = pk(C.E_WRITE_ROWS_V2, payload)
     body = E.strip_checksum(FMT, C.E_WRITE_ROWS_V2, frame)
-    rows = list(E.iter_row_maps(FMT, C.E_WRITE_ROWS_V2, body, spec.types,
-                                spec.metadata, spec.unsigned,
-                                spec.col_names))
+    rows = E.read_row_maps(FMT, C.E_WRITE_ROWS_V2, body, spec.types,
+                           spec.metadata, spec.unsigned, spec.col_names)
     assert len(rows) == 2
     _, after = rows[0]
     assert after["id"] == "42"
