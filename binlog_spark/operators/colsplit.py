@@ -1,10 +1,8 @@
 """Columnar ROWS-event cell splitter: the batch-vectorized decode kernel.
 
-The scalar kernel (`wire/events.py` ``read_row_maps`` + the exec-codegen'd
-image decoders) walks each row image in interpreted Python. This module
-replaces that inner loop for the overwhelmingly common case with a
-*columnar* formulation over whole Arrow batches — the planned SURVEY §7
-"hard part" and the r2 verdict's top directive:
+Every rows event decodes here, in a *columnar* formulation over whole
+Arrow batches — the planned SURVEY §7 "hard part" and the r2 verdict's
+top directive:
 
 1. ROWS frames are grouped by **(schema version, event type, present
    bitmaps)** signature — within a group every row image has the same
@@ -26,13 +24,21 @@ replaces that inner loop for the overwhelmingly common case with a
    ``MapArray``s from (constant-per-group) key vectors and one
    interleaving ``take`` — no per-row Python dict ever exists.
 
-A SQL NULL cell is a zero-width cell: each step reads its column's bit
-from the row image's null bitmap, a NULL row's cursor moves by 0 and its
-value is null in the column's Arrow validity (a ``None`` map value, as the
-scalar kernel emits). Schemas with cell types outside the columnar set
-(ints, VARCHAR/VARSTRING, BLOB family) fall back frame-wise to the scalar
-kernel, as do marker/bookkeeping events (tiny fixed work per frame) and a
-group whose wave overruns a rows-event body.
+Cell types outside ints, VARCHAR/VARSTRING and the BLOB family (temporals,
+decimals, CHAR, JSON, ...) are "cell" steps of the same wave: a Python
+loop over the wave's non-NULL rows through the column's
+``codec.make_cell_str_decoder``, whose consumed width moves each row's
+cursor. A SQL NULL cell is a zero-width cell: each step reads its
+column's bit from the row image's null bitmap, a NULL row's cursor moves
+by 0 and its value is null in the column's Arrow validity (a ``None`` map
+value).
+
+A rows frame that cannot decode is a dead letter of its own, never an
+invented row: an unknown table or width, no TABLE_MAP, a column count
+that differs from the TABLE_MAP's, no present column, and — found by
+re-decoding a failing group frame by frame — a cursor past the body
+("rows event overruns its body") or a cell the decoder refuses. Marker and bookkeeping
+frames that are not vectorized go through ``decode.decode_batch``.
 
 Output is produced as Arrow ``RecordBatch``es for ``mapInArrow`` — the
 decode stage hands Spark ready-made Arrow buffers, skipping the
@@ -41,13 +47,15 @@ pandas→Arrow conversion entirely.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pyarrow as pa
 
 from .. import schema as S
 from ..wire import constants as C
 from ..wire import events as E
-from ..wire.codec import read_lenenc_int, to_text
+from ..wire.codec import make_cell_str_decoder, read_lenenc_int, to_text
 
 _INT_W = {C.TYPE_TINY: 1, C.TYPE_SHORT: 2, C.TYPE_INT24: 3,
           C.TYPE_LONG: 4, C.TYPE_LONGLONG: 8}
@@ -55,6 +63,9 @@ _BLOB_TYPES = (C.TYPE_TINYBLOB, C.TYPE_MEDIUMBLOB, C.TYPE_LONGBLOB,
                C.TYPE_BLOB, C.TYPE_GEOMETRY)
 
 _MAP_T = pa.map_(pa.string(), pa.string())
+# what a corrupt rows frame raises in the wave (a cell decoder reading
+# past the buffer, refusing a cell, or a JSON double cut short)
+_CORRUPT = (IndexError, ValueError, struct.error)
 
 
 def _arrow_out_schema():
@@ -76,8 +87,9 @@ def _out_schema():
 class ImagePlan:
     """Columnar decode plan for one (schema, present-bitmap) row image.
 
-    ``steps``: ``("int", width, signed)`` or ``("var", prefix_width)`` per
-    present column, in wire order; ``names`` the present column names."""
+    ``steps``: ``("int", width, signed)``, ``("var", prefix_width,
+    codec)`` or ``("cell", decoder)`` per present column, in wire order;
+    ``names`` the present column names."""
 
     __slots__ = ("steps", "names", "null_nb")
 
@@ -89,12 +101,11 @@ class ImagePlan:
 
 def make_image_plan(types, metadata, unsigned, names, bits: int,
                     collations=None):
-    """Build the columnar plan, or None if any present cell type is
-    outside the vectorizable set (caller falls back to the scalar
-    kernel). ``collations``: per-column MySQL collation ids — "var"
-    steps for text columns with a known non-UTF-8 charset carry the
-    source codec (decode-at-source, same contract as the scalar
-    kernel)."""
+    """Build the columnar plan: ints and length-prefixed VARCHAR/BLOB
+    cells vectorize, every other type is a "cell" step over its
+    ``codec.make_cell_str_decoder``. ``collations``: per-column MySQL
+    collation ids — text columns with a known non-UTF-8 charset decode
+    at source with that codec."""
     from ..wire.collations import source_codec
 
     cols = [c for c in range(len(types)) if bits >> c & 1]
@@ -110,7 +121,8 @@ def make_image_plan(types, metadata, unsigned, names, bits: int,
         elif t in _BLOB_TYPES and 1 <= m <= 4:
             steps.append(("var", m, codec))
         else:
-            return None
+            steps.append(("cell", make_cell_str_decoder(
+                t, m, unsigned[c], codec=codec)))
         pnames.append(names[c])
     return ImagePlan(steps, pnames, (len(cols) + 7) // 8)
 
@@ -123,14 +135,16 @@ def _read_uint(buf, starts, nbytes: int):
     return v
 
 
-def _wave_cells(buf, cur, plan: ImagePlan):
+def _wave_cells(buf, mv, cur, plan: ImagePlan):
     """Decode one image for every row in a wave.
 
-    ``cur`` points at the image's null bitmap. Returns (per-step values,
-    end offsets): ``(ints, null)`` for "int" steps and ``(cell_starts,
-    cell_lens, null)`` for "var" steps. A NULL cell is zero-width; its
-    bytes are read at offset 0 instead (a NULL cell may end the buffer)
-    and ignored.
+    ``cur`` points at the image's null bitmap; ``buf`` and ``mv`` are the
+    batch buffer as a uint8 array and an unsigned memoryview. Returns
+    (per-step values, end offsets): ``(ints, null)`` for "int" steps,
+    ``(cell_starts, cell_lens, null)`` for "var" steps and ``(texts,
+    null)`` for "cell" steps. A NULL cell is zero-width; its bytes are
+    read at offset 0 instead (a NULL cell may end the buffer) and
+    ignored, and a "cell" step never reads it.
     """
     nb = plan.null_nb
     nulls = np.unpackbits(buf[cur[:, None] + np.arange(nb)], axis=1,
@@ -156,6 +170,16 @@ def _wave_cells(buf, cur, plan: ImagePlan):
                 v = v.astype(np.int64)
             out.append((v, null))
             cur = cur + (np.where(null, 0, w) if any_null else w)
+        elif step[0] == "cell":
+            dec = step[1]
+            at = cur.tolist()
+            texts = [None] * len(at)
+            for k in (np.flatnonzero(~null).tolist() if any_null
+                      else range(len(at))):
+                texts[k], ln = dec(mv, at[k])
+                at[k] += ln
+            out.append((texts, null))
+            cur = np.array(at, np.int64)
         else:
             p = step[1]
             ln = _read_uint(buf, at, p).astype(np.int64)
@@ -257,13 +281,13 @@ class _Group:
         self.body_end = []    # absolute end (checksum excluded)
 
 
-def decode_group(group: _Group, buf, pos_np, next_np, ts_np, file_col):
+def decode_group(group: _Group, buf, mv, pos_np, next_np, ts_np, file_col):
     """Wave-decode one signature group → a DECODE_OUTPUT RecordBatch
     holding every row of its frames, NULL cells included (None if the
-    group is empty).
+    group is empty). "cell" columns become one Arrow array per group.
 
-    Raises ValueError when a wave overruns a frame's body (the caller
-    sends the group to the scalar kernel)."""
+    Raises ValueError when a wave's cursor passes a frame's body, and whatever a "cell" decoder raises on a cell it refuses; the
+    caller then re-decodes the group frame by frame."""
     bidx = np.asarray(group.bidx, np.int64)
     cur = np.asarray(group.row_start, np.int64)
     end = np.asarray(group.body_end, np.int64)
@@ -282,12 +306,11 @@ def decode_group(group: _Group, buf, pos_np, next_np, ts_np, file_col):
         for plan, acc in ((ip, acc_ident), (dp, acc_data)):
             if plan is None:
                 continue
-            vals, acur = _wave_cells(buf, acur, plan)
+            vals, acur = _wave_cells(buf, mv, acur, plan)
             # bounds sanity: a cursor past body_end means the frame was
-            # mis-sized or corrupt — the WHOLE group goes to the scalar
-            # kernel (caller catches) instead of emitting garbage rows
+            # mis-sized or corrupt — raise instead of emitting garbage rows
             if np.any(acur > end[alive]):
-                raise ValueError("wave overran rows-event body")
+                raise ValueError("rows event overruns its body")
             for a, v in zip(acc, vals):
                 a.append(v)
         acc_bidx.append(bidx[alive])
@@ -302,6 +325,9 @@ def decode_group(group: _Group, buf, pos_np, next_np, ts_np, file_col):
     seq_all = np.concatenate(acc_seq)
 
     def _column(step, chunks):
+        if step[0] == "cell":
+            return pa.array([t for texts, _ in chunks for t in texts],
+                            type=pa.string())
         parts = [np.concatenate(c) for c in zip(*chunks)]
         if step[0] == "int":
             return _int_column(*parts)
@@ -337,8 +363,9 @@ def decode_group(group: _Group, buf, pos_np, next_np, ts_np, file_col):
 
 def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
     """One input RecordBatch (file, pos, etype, frame) → iterator of
-    DECODE_OUTPUT RecordBatches: columnar groups first, then one batch of
-    scalar rows (markers, dead letters, fallback frames)."""
+    DECODE_OUTPUT RecordBatches: columnar groups and vectorized markers
+    first, then one batch of the remaining markers and the dead letters
+    (``decode.decode_batch``)."""
     import bisect
 
     import pandas as pd
@@ -361,7 +388,7 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
     off_np = np.frombuffer(bufs[1], np.int32)[
         frame_arr.offset : frame_arr.offset + n + 1].astype(np.int64)
     buf = np.frombuffer(bufs[2], np.uint8)
-    mv = memoryview(bufs[2])
+    mv = memoryview(bufs[2]).cast("B")  # unsigned: bytes >= 0x80 stay positive
     flen = off_np[1:] - off_np[:-1]
 
     # vectorized v4 header fields straight off the shared buffer
@@ -380,8 +407,13 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
 
     rows_mask = valid & np.isin(etype_np, list(C.ROWS_EVENT_TYPES))
 
-    scalar_idx = []   # batch rows for the scalar sub-decode
+    scalar_idx = []   # batch rows for decode.decode_batch
     scalar_rows = []  # pre-built output tuples (deadletters)
+
+    def dead(i, reason):
+        scalar_rows.append(D._aux(
+            file_vals[file_code[i]], int(pos_np[i]), int(next_np[i]),
+            int(ts_np[i]), None, "deadletter", reason=reason))
 
     # file strings once per distinct value (frames are file-clustered) —
     # a per-frame Arrow scalar .as_py() is ~1µs each at 10^4 frames/batch
@@ -492,14 +524,12 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
         vi = (bisect.bisect_right(tmap_keys[key], int(pos_np[i])) - 1
               if vers else -1)
         if vi < 0:
-            scalar_rows.append(D._aux(
-                file, int(pos_np[i]), int(next_np[i]), int(ts_np[i]), None,
-                "deadletter", reason=f"no TABLE_MAP for id {table_id}"))
+            dead(i, f"no TABLE_MAP for id {table_id}")
             continue
         payload = vers[vi][1]
         db, tbl, types, metadata = payload
         if len(types) != ncols:
-            scalar_idx.append(i)  # let the scalar kernel dead-letter it
+            dead(i, "column count mismatch")
             continue
 
         gkey = (id(payload), etype, ident_bits, data_bits)
@@ -507,31 +537,20 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
         if group is None:
             names_uns = D._resolve_names(name_index, mapper, db, tbl, ncols)
             if names_uns is None:
-                group = "scalar"  # unknown table → scalar dead-letter path
-            else:
-                names, unsigned, colls = names_uns
-                ip = (make_image_plan(types, metadata, unsigned, names,
-                                      ident_bits, colls)
-                      if has_ident else None)
-                dp = (make_image_plan(types, metadata, unsigned, names,
-                                      data_bits, colls)
-                      if has_data else None)
-                if (has_ident and ip is None) or (has_data and dp is None):
-                    group = "scalar"  # unsupported cell type → scalar kernel
-                else:
-                    op = ("I" if etype in C.WRITE_ROWS_TYPES else
-                          "U" if etype in C.UPDATE_ROWS_TYPES else "D")
-                    group = _Group(ip, dp, op, db, tbl)
-            plan_cache[gkey] = group
-        if group == "scalar":
-            scalar_idx.append(i)
-            continue
+                dead(i, _unresolved_reason(name_index, mapper, db, tbl))
+                continue
+            names, unsigned, colls = names_uns
+            ip = (make_image_plan(types, metadata, unsigned, names,
+                                  ident_bits, colls) if has_ident else None)
+            dp = (make_image_plan(types, metadata, unsigned, names,
+                                  data_bits, colls) if has_data else None)
+            op = ("I" if etype in C.WRITE_ROWS_TYPES else
+                  "U" if etype in C.UPDATE_ROWS_TYPES else "D")
+            group = plan_cache[gkey] = _Group(ip, dp, op, db, tbl)
         body_end = fs + int(flen[i]) - int(crc_np[i])
         if not (ident_bits | data_bits) and p < body_end:
-            # zero-width images: no wave would advance (as read_row_maps)
-            scalar_rows.append(D._aux(
-                file, int(pos_np[i]), int(next_np[i]), int(ts_np[i]), None,
-                "deadletter", reason=E.NO_PRESENT_COLUMNS))
+            # zero-width images: no wave would advance
+            dead(i, E.NO_PRESENT_COLUMNS)
             continue
         group.bidx.append(i)
         group.row_start.append(p)
@@ -539,10 +558,10 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
 
     # ---- markers, vectorized: GTID (both flavors) and XID rows have a
     # fixed-offset payload — decode them columnar. QUERY classification,
-    # ROWS_QUERY, INTVAR/RAND and invalid frames keep the scalar kernel;
-    # pure-bookkeeping frames (FORMAT_DESCRIPTION, TABLE_MAP, ROTATE,
-    # PREVIOUS_GTIDS, ...) are skipped outright instead of riding the
-    # scalar sub-batch just to be skipped there.
+    # ROWS_QUERY, INTVAR/RAND and invalid frames go through
+    # decode.decode_batch; pure-bookkeeping frames (FORMAT_DESCRIPTION,
+    # TABLE_MAP, ROTATE, PREVIOUS_GTIDS, ...) are skipped outright instead
+    # of riding that sub-batch just to be skipped there.
     gtid_mask = valid & (etype_np == C.E_GTID)
     mgtid_mask = valid & (etype_np == C.E_GTID_MARIADB)
     xid_mask = valid & (etype_np == C.E_XID)
@@ -580,7 +599,7 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
             pa.nulls(k, type=pa.string()),
         ], schema=_out_schema())
 
-    # remaining frames that produce output rows → scalar kernel
+    # remaining frames that produce output rows → decode.decode_batch
     scalar_etypes = [C.E_QUERY, C.E_ROWS_QUERY, C.E_INTVAR, C.E_RAND]
     other = ~rows_mask & ~gtid_mask & ~mgtid_mask & ~xid_mask & (
         ~valid | np.isin(etype_np, scalar_etypes))
@@ -588,21 +607,27 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
 
     # ---- columnar groups (cached across batches; per-batch frame lists
     # reset after each use). A group that trips an unexpected layout
-    # (e.g. corrupt interior bytes driving an offset out of range) falls
-    # back wholesale to the scalar kernel — exactness over speed.
-    live_groups = [g for g in plan_cache.values()
-                   if isinstance(g, _Group) and g.bidx]
-    for g in live_groups:
+    # (e.g. corrupt interior bytes driving an offset out of range) is
+    # re-decoded frame by frame: each frame that still fails is one dead
+    # letter, the others decode in the wave.
+    for g in [g for g in plan_cache.values() if g.bidx]:
         try:
-            rb = decode_group(g, buf, pos_np, next_np, ts_np, file_col)
-        except (IndexError, ValueError):
-            scalar_idx.extend(g.bidx)
-        else:
-            if rb is not None:
-                yield rb
+            rbs = [decode_group(g, buf, mv, pos_np, next_np, ts_np,
+                                file_col)]
+        except _CORRUPT:
+            rbs = []
+            for i, rs, be in zip(g.bidx, g.row_start, g.body_end):
+                one = _Group(g.ident_plan, g.data_plan, g.op, g.db, g.tbl)
+                one.bidx, one.row_start, one.body_end = [i], [rs], [be]
+                try:
+                    rbs.append(decode_group(one, buf, mv, pos_np, next_np,
+                                            ts_np, file_col))
+                except _CORRUPT as e:
+                    dead(i, str(e))
         g.bidx, g.row_start, g.body_end = [], [], []
+        yield from (rb for rb in rbs if rb is not None)
 
-    # ---- scalar sub-batch through the reference kernel
+    # ---- the remaining markers and the dead letters
     if scalar_idx or scalar_rows:
         if scalar_idx:
             scalar_idx.sort()
@@ -614,6 +639,18 @@ def decode_batch_arrow(batch: pa.RecordBatch, ctx, ddl_acc=None):
         out_pdf = D.decode_batch(pdf, ctx, ddl_acc, extra_rows=scalar_rows)
         if len(out_pdf):
             yield _pandas_to_arrow(out_pdf)
+
+
+def _unresolved_reason(name_index, mapper, db, tbl):
+    """Dead-letter reason for a table the schema provider has no column
+    vector for at this width: a known table's width mismatch (the
+    reference's column-count check, `row_streamer.go:236-241`) or an
+    unknown table."""
+    known = (mapper.knows(db, tbl) if hasattr(mapper, "knows") else
+             any(k[0] == db and k[1] == tbl and v is not None
+                 for k, v in name_index.items()))
+    return ("column count mismatch" if known else
+            f"table {db}.{tbl} not in registry")
 
 
 def _pandas_to_arrow(pdf) -> pa.RecordBatch:

@@ -30,6 +30,10 @@ shuffle-free Arrow stages:
    the FORMAT_DESCRIPTION and TABLE_MAP frames alone (the `etype`
    predicate is pushed down to the parquet scan).
 
+Both stages decode through ``colsplit.decode_batch_arrow``: every rows
+event in its columnar wave, the markers it does not vectorize through
+``decode_batch`` here.
+
 Column names and signedness come from a pluggable schema provider — the
 analogue of the reference's ``MysqlTableMapper`` (`row_streamer.go:19-21`).
 ``as_table_mapper`` accepts either the static registry dict or any user
@@ -42,7 +46,6 @@ evolved name vector, with the reference's column-count consistency check
 
 from __future__ import annotations
 
-import bisect
 from typing import Iterator
 
 import pandas as pd
@@ -187,8 +190,8 @@ def build_decode_context(stream_meta: dict, registry: dict):
     the stream format, the (file, table_id) → schema-version index with
     its hoisted position-key vectors, the lazily-populated (db, tbl,
     ncols) → column names/signedness cache over the schema provider, and
-    a free-form cache dict (columnar group plans, hoisted image
-    decoders)."""
+    a free-form cache dict (columnar group plans, the versions the inline
+    overlay found)."""
     fmt = E.BinlogFormat(checksum_algorithm=stream_meta["checksum_alg"])
     mapper = as_table_mapper(registry)
     name_index: dict = {}
@@ -235,18 +238,17 @@ def _resolve_names(name_index, mapper, db, tbl, ncols):
 
 def decode_batch(pdf: pd.DataFrame, ctx, ddl_acc=None,
                  extra_rows=None) -> pd.DataFrame:
-    """Decode one Arrow batch of frames → DECODE_OUTPUT_SCHEMA rows.
-
-    The inner loop is the throughput-critical kernel (the Spark analogue
-    of the reference's single-threaded ``parseEvents`` loop): rows-event
-    images decode through the generated image decoders
-    (``events.read_row_maps``) straight into the before/after maps, and
-    output rows accumulate as tuples in schema column order — no per-row
-    dict construction, no second bytes→str pass. Module-level (not a
-    closure) so it is directly profilable and unit-testable."""
+    """Decode the marker frames of one batch → DECODE_OUTPUT_SCHEMA rows:
+    invalid frames (dead letters, before any type check), GTID, QUERY
+    (BEGIN/COMMIT/ROLLBACK/DDL), XID, ROWS_QUERY, and INTVAR/RAND (dead
+    letters); ``extra_rows`` are pre-built output tuples put first.
+    Rows events decode in ``colsplit.decode_batch_arrow``, which sends
+    here everything it does not vectorize; a valid rows frame is skipped
+    like any unknown event type. Output rows accumulate as tuples in
+    schema column order."""
     import numpy as np
 
-    fmt, tmaps, tmap_keys, name_index, mapper, _caches = ctx
+    fmt = ctx[0]
     files = pdf["file"].tolist()
     positions = pdf["pos"].tolist()
     frames_list = pdf["frame"].tolist()
@@ -284,50 +286,7 @@ def decode_batch(pdf: pd.DataFrame, ctx, ddl_acc=None,
                      C.E_GTID_LIST_MARIADB):
             continue  # position/format bookkeeping: carried per-frame
         body = E.strip_checksum(fmt, etype, frame)
-        if etype in C.ROWS_EVENT_TYPES:
-            table_id = E.parse_table_id(fmt, etype, body)
-            key = (file, table_id)
-            vers = tmaps.get(key)
-            # only a TABLE_MAP at an earlier position resolves the id
-            vi = bisect.bisect_right(tmap_keys[key], pos) - 1 if vers else -1
-            if vi < 0:
-                append(_aux(file, pos, next_pos, ts, None, "deadletter",
-                            reason=f"no TABLE_MAP for id {table_id}"))
-                continue
-            db, tbl, types, metadata = vers[vi][1]
-            names_uns = _resolve_names(name_index, mapper, db, tbl,
-                                       len(types))
-            if names_uns is None:
-                known = (mapper.knows(db, tbl)
-                         if hasattr(mapper, "knows") else
-                         any(k[0] == db and k[1] == tbl and v is not None
-                             for k, v in name_index.items()))
-                append(_aux(
-                    file, pos, next_pos, ts, None, "deadletter",
-                    reason=("column count mismatch" if known else
-                            f"table {db}.{tbl} not in registry")))
-                continue
-            names, unsigned, collations = names_uns
-            image_rows = E.read_row_maps(fmt, etype, body, types,
-                                         metadata, unsigned, names,
-                                         collations)
-            if image_rows is None:
-                append(_aux(file, pos, next_pos, ts, None, "deadletter",
-                            reason=E.NO_PRESENT_COLUMNS))
-                continue
-            if etype in C.WRITE_ROWS_TYPES:
-                op = "I"
-            elif etype in C.UPDATE_ROWS_TYPES:
-                op = "U"
-            else:
-                op = "D"
-            posi, nposi, tsi = int(pos), int(next_pos), int(ts)
-            seq = 0
-            for before, after in image_rows:
-                append((None, None, None, file, posi, nposi, tsi, op, db,
-                        tbl, before, after, seq, "change", None, None))
-                seq += 1
-        elif etype == C.E_GTID:
+        if etype == C.E_GTID:
             gno = E.parse_gtid(body[C.HEADER_LEN:])
             append(_aux(file, pos, next_pos, ts, gno, "gtid"))
         elif etype == C.E_GTID_MARIADB:
@@ -386,9 +345,8 @@ def decode_frames(spark: SparkSession, frames: DataFrame, stream_meta: dict,
 
     Runs the columnar cell splitter over ``mapInArrow``
     (operators/colsplit.py — per-column numpy offset vectors,
-    Arrow-native map assembly, no per-row Python, NULL cells included); the
-    scalar ``decode_batch`` is its fallback and its row-for-row oracle in
-    tests/test_colsplit.py.
+    Arrow-native map assembly, NULL cells and every cell type included);
+    ``tests/decode_oracle.py`` is its cell-by-cell oracle.
     """
     from . import colsplit
 

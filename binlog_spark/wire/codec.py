@@ -114,67 +114,6 @@ def metadata_write(typ: int, value: int) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# cell length
-# ---------------------------------------------------------------------------
-
-
-def cell_length(data, pos: int, typ: int, metadata: int) -> int:
-    """Byte width of one cell at `pos` (parity: binlog_event_rbr.go:195-310)."""
-    if typ == C.TYPE_NULL:
-        return 0
-    if typ in (C.TYPE_TINY, C.TYPE_YEAR):
-        return 1
-    if typ == C.TYPE_SHORT:
-        return 2
-    if typ == C.TYPE_INT24:
-        return 3
-    if typ in (C.TYPE_LONG, C.TYPE_FLOAT, C.TYPE_TIMESTAMP):
-        return 4
-    if typ in (C.TYPE_LONGLONG, C.TYPE_DOUBLE):
-        return 8
-    if typ in (C.TYPE_DATE, C.TYPE_TIME, C.TYPE_NEWDATE):
-        return 3
-    if typ == C.TYPE_DATETIME:
-        return 8
-    if typ in (C.TYPE_VARCHAR, C.TYPE_VARSTRING):
-        if metadata > 255:
-            return (data[pos] | data[pos + 1] << 8) + 2
-        return data[pos] + 1
-    if typ == C.TYPE_BIT:
-        nbits = ((metadata >> 8) * 8) + (metadata & 0xFF)
-        return (nbits + 7) // 8
-    if typ == C.TYPE_TIMESTAMP2:
-        return 4 + (metadata + 1) // 2
-    if typ == C.TYPE_DATETIME2:
-        return 5 + (metadata + 1) // 2
-    if typ == C.TYPE_TIME2:
-        return 3 + (metadata + 1) // 2
-    if typ == C.TYPE_NEWDECIMAL:
-        precision = metadata >> 8
-        scale = metadata & 0xFF
-        intg = precision - scale
-        intg0, intg0x = divmod(intg, 9)
-        frac0, frac0x = divmod(scale, 9)
-        return intg0 * 4 + DIG2BYTES[intg0x] + frac0 * 4 + DIG2BYTES[frac0x]
-    if typ in (C.TYPE_ENUM, C.TYPE_SET):
-        return metadata & 0xFF
-    if typ in (C.TYPE_TINYBLOB, C.TYPE_MEDIUMBLOB, C.TYPE_LONGBLOB, C.TYPE_BLOB,
-               C.TYPE_GEOMETRY, C.TYPE_JSON):
-        if not 1 <= metadata <= 4:
-            raise ValueError(f"unsupported blob/geometry metadata {metadata}")
-        return metadata + int.from_bytes(data[pos : pos + metadata], "little")
-    if typ == C.TYPE_STRING:
-        t = metadata >> 8
-        if t in (C.TYPE_ENUM, C.TYPE_SET):
-            return metadata & 0xFF
-        max_len = (((metadata >> 4) & 0x300) ^ 0x300) + (metadata & 0xFF)
-        if max_len > 255:
-            return (data[pos] | data[pos + 1] << 8) + 2
-        return data[pos] + 1
-    raise ValueError(f"unsupported type {typ}")
-
-
-# ---------------------------------------------------------------------------
 # canonical render helpers
 # ---------------------------------------------------------------------------
 

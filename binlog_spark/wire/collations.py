@@ -146,7 +146,7 @@ def codec_for_collation(cid: int) -> str | None:
 
 
 def source_codec(cid: int | None) -> str | None:
-    """Collation id → codec the DECODE kernels should apply at source,
+    """Collation id → codec the decode kernel should apply at source,
     or None for the byte-transparent default arm. UTF-8/ASCII collations
     return None on purpose: the default arm already decodes valid UTF-8
     and keeps invalid bytes losslessly (latin-1 mapping) instead of

@@ -7,8 +7,9 @@ binlog_event_make.go:11-411` — Packetize header layout per
 `binlog_event_common.go:13-31`; CRC32 slot present but zeroed).
 
 The parser side (`parse_header`, `parse_format_description`, `parse_query`,
-`parse_rotate`, `parse_gtid`, `parse_table_map`, `read_row_maps`) is the
-event-level decode used inside the Arrow UDF stage (operators/decode.py).
+`parse_rotate`, `parse_gtid`, `parse_table_map`) is the event-level decode
+used inside the Arrow UDF stage (operators/decode.py); rows-event images
+decode in the columnar splitter (operators/colsplit.py).
 """
 
 from __future__ import annotations
@@ -528,168 +529,7 @@ def parse_table_map(fmt: BinlogFormat, data) -> ParsedTableMap:
                           bytes(body[pos : pos + nb]))
 
 
-_IMAGE_DECODER_CACHE: dict = {}
-
-
-def make_image_decoder(types, metadata, unsigned, names, present_bits: int,
-                       collations=None):
-    """Build (and cache) a fused row-image decoder for one
-    (schema, present-bitmap) signature: ``(body, pos) -> (map, new_pos)``.
-
-    The generated function is straight-line Python — per-column parsing
-    inlined in declaration order with no closure dispatch, tuple returns,
-    or loop bookkeeping — the same specialization a query engine's codegen
-    does for a fixed row layout. Cells: VARCHAR/VARSTRING (1/2-byte len),
-    BLOB family, and the integer types inline; every other type goes
-    through ``codec.cell_bytes`` (via the column's cached str decoder).
-    It has two bodies built from the same arms: an image whose null
-    bitmap reads 0 runs the plain one, any other the one that tests each
-    column's null bit first (SQL NULL → ``None``).
-    UTF-8 decode falls back to lossless latin-1 (codec.to_text contract).
-    ``collations``: optional per-column MySQL collation ids; text columns
-    with a known non-UTF-8 charset decode at source with the real codec
-    (collations.source_codec) instead of the byte-transparent arm.
-    """
-    from .collations import source_codec
-    from .codec import make_cell_str_decoder
-
-    codecs = ([source_codec(c) for c in collations] if collations
-              else [None] * len(types))
-    key = (tuple(types), tuple(metadata), tuple(unsigned), tuple(names),
-           present_bits, tuple(codecs))
-    fn = _IMAGE_DECODER_CACHE.get(key)
-    if fn is not None:
-        return fn
-
-    cols = [c for c in range(len(types)) if present_bits >> c & 1]
-    null_nb = (len(cols) + 7) // 8
-    ns: dict = {}
-
-    def _text_emit(nm, codec):
-        if codec is not None:
-            return [f"out[{nm}] = raw.decode({codec!r}, 'replace')"]
-        return [f"try: out[{nm}] = raw.decode('utf-8')",
-                "except UnicodeDecodeError: "
-                f"out[{nm}] = raw.decode('latin-1')"]
-
-    plain, nullable = [], []
-    for j, c in enumerate(cols):
-        t, m, u, nm = types[c], metadata[c], unsigned[c], repr(names[c])
-        if t in (C.TYPE_VARCHAR, C.TYPE_VARSTRING):
-            if m > 255:
-                arm = ["ln = body[pos] | body[pos+1] << 8",
-                       "raw = body[pos+2:pos+2+ln]",
-                       "pos += ln + 2"]
-            else:
-                arm = ["ln = body[pos]",
-                       "raw = body[pos+1:pos+1+ln]",
-                       "pos += ln + 1"]
-            arm += _text_emit(nm, codecs[c])
-        elif t in (C.TYPE_TINYBLOB, C.TYPE_MEDIUMBLOB, C.TYPE_LONGBLOB,
-                   C.TYPE_BLOB, C.TYPE_GEOMETRY) and 1 <= m <= 4:
-            arm = [f"ln = int.from_bytes(body[pos:pos+{m}], 'little')",
-                   f"raw = body[pos+{m}:pos+{m}+ln]",
-                   f"pos += ln + {m}"]
-            arm += _text_emit(nm, codecs[c] if t != C.TYPE_GEOMETRY
-                              else None)
-        elif t in (C.TYPE_TINY, C.TYPE_SHORT, C.TYPE_INT24, C.TYPE_LONG,
-                   C.TYPE_LONGLONG):
-            w = {C.TYPE_TINY: 1, C.TYPE_SHORT: 2, C.TYPE_INT24: 3,
-                 C.TYPE_LONG: 4, C.TYPE_LONGLONG: 8}[t]
-            arm = [f"v = int.from_bytes(body[pos:pos+{w}], 'little')"]
-            if not u:
-                half, full = 1 << (8 * w - 1), 1 << (8 * w)
-                arm.append(f"v -= {full} if v >= {half} else 0")
-            arm += [f"out[{nm}] = '%d' % v", f"pos += {w}"]
-        else:
-            ns[f"_d{j}"] = make_cell_str_decoder(t, m, u, codec=codecs[c])
-            arm = [f"out[{nm}], ln = _d{j}(body, pos)",
-                   "pos += ln"]
-        plain += arm
-        nullable += [f"if nulls >> {j} & 1: out[{nm}] = None",
-                     "else:"] + ["    " + a for a in arm]
-
-    L = ["def _img(body, pos):"]
-    if null_nb == 1:
-        L.append("    nulls = body[pos]")
-    else:
-        L.append(f"    nulls = int.from_bytes(body[pos:pos+{null_nb}], "
-                 "'little')")
-    L += [f"    pos += {null_nb}",
-          "    out = {}",
-          "    if not nulls:"]
-    L += ["        " + a for a in plain or ["pass"]]
-    L.append("    else:")
-    L += ["        " + a for a in nullable or ["pass"]]
-    L.append("    return out, pos")
-    exec("\n".join(L), ns)  # noqa: S102 — codegen over repr()-escaped names
-    fn = _IMAGE_DECODER_CACHE[key] = ns["_img"]
-    return fn
-
-
 # dead-letter reason for a rows event none of whose images has a present
 # column yet whose body goes on past the bitmaps: each image is zero
 # bytes wide, so no row can be read from it
 NO_PRESENT_COLUMNS = "rows event with no present columns"
-
-
-def read_row_maps(fmt: BinlogFormat, typ: int, data, types, metadata,
-                  unsigned, names, collations=None):
-    """All ``(before_map, after_map)`` rows of a ROWS event — the scalar
-    decode kernel, or None when the event has no present column but body
-    bytes remain (``NO_PRESENT_COLUMNS``).
-
-    Each image is decoded straight into the ``{column_name:
-    canonical_str | None}`` map the change schema carries (SQL NULL is
-    ``None``), with absent columns (minimal row image / ``IsEmpty``)
-    omitted; wire semantics as binlog_event_rbr.go:348-465 +
-    row_streamer.go:388-477. Image decoders are exec-generated per
-    (schema, present-bitmap) (``make_image_decoder``). Returns a list
-    (events are bounded by the wire's event-size cap, so materializing is
-    cheap) — a plain loop over a list avoids the generator frame
-    switching that showed up in decode profiles."""
-    body = data[fmt.header_length :]
-    has_identify = typ in C.UPDATE_ROWS_TYPES or typ in C.DELETE_ROWS_TYPES
-    has_data = typ in C.WRITE_ROWS_TYPES or typ in C.UPDATE_ROWS_TYPES
-
-    pos = 6 if fmt.header_size(typ) != 6 else 4
-    pos += 2  # flags
-    if typ in C.ROWS_V2_TYPES:
-        extra_len = struct.unpack_from("<H", body, pos)[0]
-        pos += extra_len
-    ncols, pos = read_lenenc_int(body, pos)
-    nb = (ncols + 7) // 8
-    mask = (1 << ncols) - 1
-
-    identify_dec = data_dec = None
-    ident_bits = data_bits = 0
-    if has_identify:
-        ident_bits = int.from_bytes(body[pos : pos + nb], "little") & mask
-        pos += nb
-        identify_dec = make_image_decoder(types, metadata, unsigned, names,
-                                          ident_bits, collations)
-    if has_data:
-        data_bits = int.from_bytes(body[pos : pos + nb], "little") & mask
-        pos += nb
-        data_dec = make_image_decoder(types, metadata, unsigned, names,
-                                      data_bits, collations)
-
-    end = len(body)
-    if not (ident_bits | data_bits) and pos < end:
-        return None
-    out = []
-    append = out.append
-    if has_identify and has_data:  # UPDATE
-        while pos < end:
-            ident, pos = identify_dec(body, pos)
-            dat, pos = data_dec(body, pos)
-            append((ident, dat))
-    elif has_data:  # WRITE
-        while pos < end:
-            dat, pos = data_dec(body, pos)
-            append((None, dat))
-    else:  # DELETE
-        while pos < end:
-            ident, pos = identify_dec(body, pos)
-            append((ident, None))
-    return out

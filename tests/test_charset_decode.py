@@ -83,10 +83,11 @@ def test_charset_at_source_both_kernels_cp1251():
     bytes that are valid UTF-8 (0xC3 0xA9 = cp1251 'Г©' but UTF-8 'é' —
     U+00E9-only text is attributed to the latin-1 arm by
     recover_wire_bytes, yielding cp1251 of 0xE9 = 'щ' instead).
-    Scalar and columnar kernels must agree and both must yield the
-    cp1251 interpretation of the exact wire bytes."""
+    The columnar kernel and the decode oracle must agree and both must
+    yield the cp1251 interpretation of the exact wire bytes."""
     import pandas as pd
 
+    from tests.decode_oracle import decode_oracle
     from tests.test_colsplit import (_custom_world, make_meta,
                                      to_batch, norm)
     from binlog_spark.operators import colsplit as CS
@@ -118,13 +119,13 @@ def test_charset_at_source_both_kernels_cp1251():
     registry = {("d1", "t1"): [[("id", False, None), ("txt", False, cid)]]}
     meta = make_meta(patched)
 
-    # scalar kernel
+    # oracle
     pdf = pd.DataFrame(
         {"file": [f for f, _, _, _ in patched],
          "pos": [p_ for _, p_, _, _ in patched],
          "etype": [et for _, _, et, _ in patched],
          "frame": [fr for _, _, _, fr in patched]})
-    ref = D.decode_batch(pdf, D.build_decode_context(meta, registry))
+    ref = decode_oracle(pdf, D.build_decode_context(meta, registry))
     # columnar kernel
     outs = list(CS.decode_batch_arrow(
         to_batch(patched), D.build_decode_context(meta, registry)))
@@ -141,7 +142,11 @@ def test_charset_at_source_both_kernels_cp1251():
     # and WITHOUT a declared collation the byte-transparent contract is
     # unchanged (utf-8 arm for valid pairs, latin-1 for case 3)
     plain = {("d1", "t1"): [[("id", False), ("txt", False)]]}
-    ref2 = D.decode_batch(pdf, D.build_decode_context(meta, plain))
+    ref2 = decode_oracle(pdf, D.build_decode_context(meta, plain))
+    got2 = pd.concat([rb.to_pandas() for rb in CS.decode_batch_arrow(
+        to_batch(patched), D.build_decode_context(meta, plain))],
+        ignore_index=True)
+    assert norm(ref2) == norm(got2)
     by_id2 = {dict(m)["id"]: dict(m)["txt"]
               for m in ref2[ref2["kind"] == "change"]["after"]}
     assert by_id2["1"] == "\u0430" and by_id2["2"] == "\u00e9"

@@ -1,6 +1,8 @@
-"""Columnar cell splitter vs the scalar reference kernel: row-for-row
-equality on worlds exercising schema evolution, NULL cells, minimal
-row images, non-UTF8 bytes, and exotic-type fallback."""
+"""Columnar cell splitter vs the cell-by-cell decode oracle
+(tests/decode_oracle.py): row-for-row equality on worlds exercising
+schema evolution, NULL cells, minimal row images, non-UTF8 bytes, exotic
+cell types, wide tables, and corrupt rows frames that must become dead
+letters."""
 
 import numpy as np
 import pandas as pd
@@ -18,6 +20,7 @@ from binlog_spark.operators import colsplit as CS  # noqa: E402
 from binlog_spark.operators import decode as D  # noqa: E402
 from binlog_spark.wire import constants as C  # noqa: E402
 from binlog_spark.wire import events as E  # noqa: E402
+from tests.decode_oracle import decode_oracle  # noqa: E402
 
 
 def make_meta(frames):
@@ -79,7 +82,7 @@ def cross_check(frames, registry):
             "frame": [fr for _, _, _, fr in frames],
         }
     )
-    ref = D.decode_batch(pdf, D.build_decode_context(meta, registry))
+    ref = decode_oracle(pdf, D.build_decode_context(meta, registry))
     outs = list(
         CS.decode_batch_arrow(to_batch(frames),
                               D.build_decode_context(meta, registry)))
@@ -120,8 +123,8 @@ def test_small_batches_match_scalar_kernel():
             "frame": [fr for _, _, _, fr in res.frames],
         }
     )
-    ref = D.decode_batch(pdf,
-                         D.build_decode_context(meta, genlog.table_registry()))
+    ref = decode_oracle(pdf,
+                        D.build_decode_context(meta, genlog.table_registry()))
     assert norm(ref) == norm(got)
 
 
@@ -159,8 +162,8 @@ def _custom_world(columns, rows_events, table="t1", db="d1",
 
 
 def wave_rows(frames, registry, monkeypatch):
-    """Rows each columnar group yields when ``frames`` decode as one batch
-    (a group that falls back to the scalar kernel yields none)."""
+    """Rows each ``decode_group`` call yields when ``frames`` decode as
+    one batch (a call that raises yields none)."""
     counts = []
     decode_group = CS.decode_group
 
@@ -234,6 +237,17 @@ def test_wide_table_update_with_nulls_decodes_in_the_wave(monkeypatch):
     assert wave_rows(frames, registry, monkeypatch) == [4]
 
 
+def _relaid(frames):
+    """``frames`` at consecutive positions from 4, next_pos patched."""
+    out, pos = [], 4
+    for f, _, et, fr in frames:
+        fr = bytearray(fr)
+        struct.pack_into("<I", fr, 13, pos + len(fr))
+        out.append((f, pos, et, bytes(fr)))
+        pos += len(fr)
+    return out
+
+
 def test_rows_event_before_its_table_map_is_a_dead_letter():
     """Only a TABLE_MAP already read resolves a rows event's table id
     (`row_streamer.go:220-243`): a WRITE_ROWS ahead of its TABLE_MAP is
@@ -242,13 +256,7 @@ def test_rows_event_before_its_table_map_is_a_dead_letter():
     frames, registry = _custom_world(
         cols, [(C.E_WRITE_ROWS_V2, [(None, {"id": "1"})])])
     # FD, GTID, BEGIN, WRITE_ROWS, TABLE_MAP, XID — re-laid at new positions
-    order = [0, 1, 2, 4, 3, 5]
-    swapped, pos = [], 4
-    for f, _, et, fr in (frames[i] for i in order):
-        fr = bytearray(fr)
-        struct.pack_into("<I", fr, 13, pos + len(fr))
-        swapped.append((f, pos, et, bytes(fr)))
-        pos += len(fr)
+    swapped = _relaid([frames[i] for i in [0, 1, 2, 4, 3, 5]])
     assert [et for _, _, et, _ in swapped][3:5] == [
         C.E_WRITE_ROWS_V2, C.E_TABLE_MAP]
     ref, got = cross_check(swapped, registry)
@@ -323,7 +331,7 @@ def test_non_utf8_blob_falls_back_to_latin1_losslessly():
     assert vals["2"] == "plain"
 
 
-def test_exotic_types_fall_back_to_scalar_kernel():
+def test_exotic_types_decode_in_the_wave(monkeypatch):
     cols = [("id", C.TYPE_LONG, 0, False),
             ("price", C.TYPE_NEWDECIMAL, (12 << 8) | 4, False),
             ("seen", C.TYPE_DATETIME2, 0, False)]
@@ -331,14 +339,10 @@ def test_exotic_types_fall_back_to_scalar_kernel():
         cols, [(C.E_WRITE_ROWS_V2,
                 [(None, {"id": "1", "price": "-1234.5678",
                          "seen": "2024-02-29 23:59:59"})])])
-    meta = make_meta(frames)
-    ctx = D.build_decode_context(meta, registry)
-    assert CS.make_image_plan(
-        [c[1] for c in cols], [c[2] for c in cols],
-        [c[3] for c in cols], [c[0] for c in cols], 0b111) is None
     ref, got = cross_check(frames, registry)
-    ch = ref[ref["kind"] == "change"]
+    ch = got[got["kind"] == "change"]
     assert dict(ch["after"].iloc[0])["price"] == "-1234.5678"
+    assert wave_rows(frames, registry, monkeypatch) == [1]
 
 
 def test_inline_discovery_checksumless_stream_sizes_bodies_right():
@@ -361,24 +365,36 @@ def test_inline_discovery_checksumless_stream_sizes_bodies_right():
     ch = got[got["kind"] == "change"]
     assert sorted(dict(m)["id"] for m in ch["after"]) == ["11", "22", "33"]
     assert sorted(ch["seq_in_event"].tolist()) == [0, 1, 2]
-    # and the full stream matches the scalar kernel run with correct meta
+    # and the full stream matches the oracle run with correct meta
     pdf = pd.DataFrame(
         {"file": [f for f, _, _, _ in frames],
          "pos": [p for _, p, _, _ in frames],
          "etype": [et for _, _, et, _ in frames],
          "frame": [fr for _, _, _, fr in frames]})
-    ref = D.decode_batch(pdf, D.build_decode_context(make_meta(frames),
-                                                     registry))
+    ref = decode_oracle(pdf, D.build_decode_context(make_meta(frames),
+                                                    registry))
     assert norm(ref) == norm(got)
 
 
-def test_wave_overrun_diverts_group_to_scalar_kernel():
+def _patched(frames, old: bytes, at_old, value: int):
+    """``frames`` with the byte ``at_old`` places after the first ``old``
+    of the one rows frame holding it set to ``value``."""
+    out = []
+    for f, p, et, fr in frames:
+        if et in C.ROWS_EVENT_TYPES and old in fr:
+            buf = bytearray(fr)
+            buf[fr.index(old) + at_old] = value
+            fr = bytes(buf)
+        out.append((f, p, et, fr))
+    return out
+
+
+def test_wave_overrun_dead_letters_the_frame(monkeypatch):
     """Pin the wave-kernel bounds check (r4 VERDICT directive 6): a
     corrupt interior length byte that drives the wave cursor past the
-    rows-event body must divert the WHOLE plan group to the scalar
-    kernel (exactness contract: byte-identical output to a pure scalar
-    run) instead of emitting invented rows from out-of-range offsets —
-    and the intact frames of the same group must still decode fully."""
+    rows-event body makes that frame a dead letter instead of a row
+    with a truncated cell, and the intact frames of the same group still
+    decode in the wave."""
     cols = [("id", C.TYPE_LONG, 0, False),
             ("name", C.TYPE_VARCHAR, 80, False)]
     good = [(None, {"id": "1", "name": "aaa"}),
@@ -388,35 +404,79 @@ def test_wave_overrun_diverts_group_to_scalar_kernel():
         cols, [(C.E_WRITE_ROWS_V2, good), (C.E_WRITE_ROWS_V2, bad)])
     # inflate the last row's VARCHAR length prefix (the byte before the
     # unique payload) far past the remaining body
-    patched = []
-    for f, p, et, fr in frames:
-        if et == C.E_WRITE_ROWS_V2 and b"zz9" in fr:
-            buf = bytearray(fr)
-            buf[fr.index(b"zz9") - 1] = 250
-            fr = bytes(buf)
-        patched.append((f, p, et, fr))
-    meta = make_meta(patched)
-    ctx = D.build_decode_context(meta, registry)
-    outs = list(CS.decode_batch_arrow(to_batch(patched), ctx))
-    got = pd.concat([rb.to_pandas() for rb in outs], ignore_index=True)
-    # exactness: identical to the scalar kernel on the same stream
-    pdf = pd.DataFrame(
-        {"file": [f for f, _, _, _ in patched],
-         "pos": [p for _, p, _, _ in patched],
-         "etype": [et for _, _, et, _ in patched],
-         "frame": [fr for _, _, _, fr in patched]})
-    ref = D.decode_batch(pdf, D.build_decode_context(meta, registry))
-    assert norm(ref) == norm(got)
-    # the intact event's rows survive untruncated...
+    patched = _patched(frames, b"zz9", -1, 250)
+    bad_pos = [p for (_, p, _, fr), (_, _, _, orig) in zip(patched, frames)
+               if fr != orig]
+    ref, got = cross_check(patched, registry)
+    dead = got[got["kind"] == "deadletter"]
+    assert dead["reason"].tolist() == ["rows event overruns its body"]
+    assert dead["pos"].tolist() == bad_pos
     ch = got[got["kind"] == "change"]
-    names = sorted(dict(m).get("name") for m in ch["after"]
-                   if dict(m).get("id") in ("1", "2"))
-    assert names == ["aaa", "bbb"]
-    # ...and nothing invented: no change row carries bytes the corrupt
-    # frame does not actually hold (a 250-byte string cannot exist)
-    for m in ch["after"]:
-        name = dict(m).get("name")
-        assert name is None or len(name) <= 80
+    assert bad_pos[0] not in ch["pos"].tolist()
+    assert sorted(dict(m)["name"] for m in ch["after"]) == ["aaa", "bbb"]
+    assert wave_rows(patched, registry, monkeypatch) == [2]
+
+
+def test_rows_event_wider_than_its_table_map_is_a_dead_letter():
+    """A 3-column WRITE_ROWS under a 2-column TABLE_MAP of the same id:
+    the column counts disagree, so the frame is a dead letter, even
+    though the schema provider knows the 2-column width."""
+    cols = [("id", C.TYPE_LONG, 0, False),
+            ("name", C.TYPE_VARCHAR, 80, False),
+            ("n", C.TYPE_LONG, 0, False)]
+    frames, registry = _custom_world(
+        cols, [(C.E_WRITE_ROWS_V2, [(None, {"id": "1", "name": "a",
+                                            "n": "2"})])])
+    narrow = E.TableMapSpec(database="d1", name="t1", columns=cols[:2])
+    k = [et for _, _, et, _ in frames].index(C.E_TABLE_MAP)
+    f, p, et, _ = frames[k]
+    frames[k] = (f, p, et, E.packetize(
+        E.BinlogFormat(), et, 0, E.make_table_map(narrow, 77),
+        timestamp=1700000000, server_id=1, log_position=0))
+    frames = _relaid(frames)
+    registry[("d1", "t1")].insert(0, [(n, u) for n, _, _, u in cols[:2]])
+    ref, got = cross_check(frames, registry)
+    assert (got["kind"] == "change").sum() == 0
+    dead = got[got["kind"] == "deadletter"]
+    assert dead["reason"].tolist() == ["column count mismatch"]
+    assert dead["pos"].tolist() == [
+        p for _, p, et, _ in frames if et == C.E_WRITE_ROWS_V2]
+
+
+def test_refused_json_cell_dead_letters_its_frame(monkeypatch):
+    """A JSON document with an unknown type byte: ``cell_bytes`` refuses
+    it, so its frame is a dead letter carrying the decoder's message,
+    and the intact frame of the same group decodes in the wave."""
+    cols = [("id", C.TYPE_LONG, 0, False),
+            ("doc", C.TYPE_JSON, 4, False)]
+    frames, registry = _custom_world(
+        cols, [(C.E_WRITE_ROWS_V2, [(None, {"id": "1", "doc": '"ok"'})]),
+               (C.E_WRITE_ROWS_V2, [(None, {"id": "2", "doc": '"zq"'})])])
+    # the JSONB string value is type byte 0x0c, length 2, then the text
+    patched = _patched(frames, b"\x0c\x02zq", 0, 0x0E)
+    bad_pos = [p for (_, p, _, fr), (_, _, _, orig) in zip(patched, frames)
+               if fr != orig]
+    ref, got = cross_check(patched, registry)
+    dead = got[got["kind"] == "deadletter"]
+    assert dead["reason"].tolist() == ["jsonb: unknown type byte 0xe"]
+    assert dead["pos"].tolist() == bad_pos
+    ch = got[got["kind"] == "change"]
+    assert [dict(m) for m in ch["after"]] == [{"id": "1", "doc": '"ok"'}]
+    assert wave_rows(patched, registry, monkeypatch) == [1]
+
+
+def test_table_of_130_columns_decodes_in_the_wave(monkeypatch):
+    """A column count of 128 or more must read as unsigned off the batch
+    buffer (a signed byte made it negative)."""
+    cols = [(f"c{i}", C.TYPE_LONG, 0, False) for i in range(130)]
+    rows = [(None, {f"c{i}": (None if (i + r) % 9 == 0 else str(i - r))
+                    for i in range(130)}) for r in range(3)]
+    frames, registry = _custom_world(cols, [(C.E_WRITE_ROWS_V2, rows)])
+    ref, got = cross_check(frames, registry)
+    ch = got[got["kind"] == "change"]
+    assert len(ch) == 3
+    assert dict(ch["after"].iloc[0])["c0"] is None
+    assert wave_rows(frames, registry, monkeypatch) == [3]
 
 
 def test_wide_table_int_matrix():

@@ -1,15 +1,13 @@
-"""Property-based cross-check: columnar splitter == scalar kernel.
+"""Property-based cross-check: columnar splitter == decode oracle.
 
 Hypothesis drives randomized schemas (mixed fixed-width / length-prefixed
 / packed-temporal / decimal columns), randomized row images (independent
 per-column omission exercises both the presence bitmaps and per-row NULL
 bitmaps), and all three ROWS event types through the wire encoder, then
 asserts the batch-vectorized Arrow decoder (`operators/colsplit.py`) and
-the scalar pandas kernel (`operators/decode.py`) produce identical
-change rows, and that the scalar kernel's generated image decoders
-(`wire/events.py` ``read_row_maps``) match a cell-by-cell walk over
-``codec.cell_bytes``. The golden corpus pins known-tricky cases; this
-pins the combinatorial space between them.
+the cell-by-cell walk over ``codec.cell_bytes`` (`tests/decode_oracle.py`)
+produce identical change rows. The golden corpus pins known-tricky cases;
+this pins the combinatorial space between them.
 """
 
 import os
@@ -21,9 +19,6 @@ from hypothesis import strategies as st
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from binlog_spark.wire import constants as C  # noqa: E402
-from binlog_spark.wire import events as E  # noqa: E402
-from binlog_spark.wire.codec import (  # noqa: E402
-    cell_bytes, read_lenenc_int, to_text)
 from tests.test_colsplit import _custom_world, cross_check  # noqa: E402
 
 # (name-prefix, type, metadata, unsigned, value-strategy)
@@ -108,11 +103,6 @@ _COLUMN_TEMPLATES = [
 ]
 
 
-# the templates the columnar kernel decodes in the wave
-_COLUMNAR = [t for t in _COLUMN_TEMPLATES if t[1] in (
-    C.TYPE_TINY, C.TYPE_SHORT, C.TYPE_INT24, C.TYPE_LONG, C.TYPE_LONGLONG,
-    C.TYPE_VARCHAR, C.TYPE_BLOB)]
-
 
 @st.composite
 def _world(draw, templates, max_cols):
@@ -123,7 +113,8 @@ def _world(draw, templates, max_cols):
     cols, val_strats = [], []
     for j, i in enumerate(idxs):
         prefix, typ, meta, unsigned, vs = templates[i]
-        cols.append((f"{prefix}{j}", typ, meta, unsigned))
+        # the "_" keeps names distinct ("tm2" 9 vs "tm" 29)
+        cols.append((f"{prefix}_{j}", typ, meta, unsigned))
         val_strats.append(vs)
 
     def image():
@@ -158,74 +149,20 @@ def test_columnar_matches_scalar_on_random_worlds(world):
 
 @settings(max_examples=100, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
-@given(_world(_COLUMNAR, 70))
+@given(_world(_COLUMN_TEMPLATES, 70))
 def test_columnar_matches_scalar_on_wide_columnar_worlds(world):
-    """Up to 70 columns of wave-decoded types: multi-byte null bitmaps."""
+    """Up to 70 columns of every template: multi-byte null bitmaps."""
     cols, events = world
     frames, registry = _custom_world(cols, events)
     cross_check(frames, registry)
 
 
-def _walk_rows(body, etype, cols):
-    """``(before, after)`` maps of a ROWS event body, read image by image:
-    each image's null bitmap, then every present non-NULL cell through
-    ``cell_bytes`` + ``to_text``."""
-    pos = C.HEADER_LEN + 6 + 2  # table id, rows flags
-    pos += int.from_bytes(body[pos:pos + 2], "little")  # v2 extra data
-    ncols, pos = read_lenenc_int(body, pos)
-    nb = (ncols + 7) // 8
-    images = []
-    for has in (etype != C.E_WRITE_ROWS_V2, etype != C.E_DELETE_ROWS_V2):
-        if has:
-            bits = int.from_bytes(body[pos:pos + nb], "little")
-            images.append([c for c in range(ncols) if bits >> c & 1])
-            pos += nb
-        else:
-            images.append(None)
-    rows = []
-    while pos < len(body):
-        row = []
-        for present in images:
-            if present is None:
-                row.append(None)
-                continue
-            null_nb = (len(present) + 7) // 8
-            nulls = int.from_bytes(body[pos:pos + null_nb], "little")
-            pos += null_nb
-            image = {}
-            for j, c in enumerate(present):
-                name, typ, meta, unsigned = cols[c]
-                if nulls >> j & 1:
-                    image[name] = None
-                    continue
-                raw, ln = cell_bytes(body, pos, typ, meta, unsigned)
-                image[name] = to_text(raw)
-                pos += ln
-            row.append(image)
-        rows.append(tuple(row))
-    return rows
-
-
 @settings(max_examples=100, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(_world(_COLUMN_TEMPLATES, 20))
-def test_image_decoders_match_cell_by_cell_walk(world):
-    """The generated image decoders against an oracle that shares none of
-    their code: up to 20 columns of every template, so multi-byte null
-    bitmaps and NULL cells in every column type."""
+def test_columnar_matches_oracle_on_20_column_worlds(world):
+    """Up to 20 columns of every template: multi-byte null bitmaps and
+    NULL cells in every column type."""
     cols, events = world
-    frames, _ = _custom_world(cols, events)
-    fmt = E.BinlogFormat()
-    names, types, metas, unsigned = (list(x) for x in zip(*cols))
-    n = 0
-    for _, _, etype, frame in frames:
-        if etype not in C.ROWS_EVENT_TYPES:
-            continue
-        body = E.strip_checksum(fmt, etype, frame)
-        want = _walk_rows(body, etype, cols)
-        assert E.read_row_maps(fmt, etype, body, types, metas, unsigned,
-                               names) == want
-        n += len(want)
-    # an event whose images are all empty has no row bytes at all
-    assert n == sum(len(rows) for _, rows in events
-                    if any(image for row in rows for image in row))
+    frames, registry = _custom_world(cols, events)
+    cross_check(frames, registry)

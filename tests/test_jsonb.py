@@ -170,13 +170,11 @@ def test_encode_decode_round_trip(value):
 
 
 def test_cell_level_decode_through_codec():
-    """TYPE_JSON cells route through cell_bytes/cell_length like a blob
-    with the payload decoded to JSON text."""
+    """TYPE_JSON cells route through cell_bytes like a blob with the
+    payload decoded to JSON text."""
     payload = jsonb.encode_value({"tags": ["a", "b"], "n": 3})
     cell = len(payload).to_bytes(4, "little") + payload
     data = b"\xAA\xBB" + cell + b"\xCC"  # offset + trailing noise
-    n = codec.cell_length(data, 2, C.TYPE_JSON, 4)
-    assert n == len(cell)
     raw, consumed = codec.cell_bytes(data, 2, C.TYPE_JSON, 4, False)
     assert consumed == len(cell)
     assert json.loads(raw.decode()) == {"tags": ["a", "b"], "n": 3}
@@ -187,8 +185,8 @@ def test_cell_level_decode_through_codec():
 
 def test_json_column_through_wire_pipeline(spark, tmp_path):
     """One INSERT with a JSON column through the full distributed decode
-    (TABLE_MAP metadata byte, scalar-kernel fallback in the columnar
-    splitter, canonical text in the change map)."""
+    (TABLE_MAP metadata byte, a "cell" step in the columnar splitter's
+    wave, canonical text in the change map)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -10,6 +10,7 @@ import struct
 
 from binlog_spark.wire import constants as C
 from binlog_spark.wire import events as E
+from tests.decode_oracle import walk_rows
 
 FMT = E.BinlogFormat()
 
@@ -85,8 +86,8 @@ def test_table_map_roundtrip():
 
 def _rows(buf, typ):
     body = E.strip_checksum(FMT, typ, buf)
-    return E.read_row_maps(FMT, typ, body, VT_A.types, VT_A.metadata,
-                           VT_A.unsigned, VT_A.col_names)
+    return walk_rows(FMT, typ, body, VT_A.types, VT_A.metadata,
+                     VT_A.unsigned, VT_A.col_names)
 
 
 def test_write_rows_roundtrip():
@@ -150,8 +151,8 @@ def test_multirow_write_blob_and_unsigned():
     )
     buf = pk(C.E_WRITE_ROWS_V2, payload)
     body = E.strip_checksum(FMT, C.E_WRITE_ROWS_V2, buf)
-    rows = E.read_row_maps(FMT, C.E_WRITE_ROWS_V2, body, tm.types,
-                           tm.metadata, tm.unsigned, tm.col_names)
+    rows = walk_rows(FMT, C.E_WRITE_ROWS_V2, body, tm.types,
+                     tm.metadata, tm.unsigned, tm.col_names)
     assert rows[0][1]["k"] == "18446744073709551615"
     assert rows[0][1]["body"] == big
     assert rows[1][1] == {"k": "1", "body": ""}
@@ -274,8 +275,8 @@ def test_non_utf8_blob_round_trips_through_rows_event():
               (None, {"id": "43", "payload": None})])  # SQL NULL
     frame = pk(C.E_WRITE_ROWS_V2, payload)
     body = E.strip_checksum(FMT, C.E_WRITE_ROWS_V2, frame)
-    rows = E.read_row_maps(FMT, C.E_WRITE_ROWS_V2, body, spec.types,
-                           spec.metadata, spec.unsigned, spec.col_names)
+    rows = walk_rows(FMT, C.E_WRITE_ROWS_V2, body, spec.types,
+                     spec.metadata, spec.unsigned, spec.col_names)
     assert len(rows) == 2
     _, after = rows[0]
     assert after["id"] == "42"
